@@ -14,20 +14,33 @@ graph/pruning.py:11-210, single-node networkx, sequential edge removal):
   the component) weighing less than ``min_edge_weight``.
 - G9 ``full_pruning_pipeline``: G5 -> G6 -> G7 -> G8 in order.
 
-Spark-first re-expression: edges and node attributes are DataFrames; each
-loop iteration is joins + a per-component window ``row_number() = 1`` pick
-of the weakest qualifying edge, an anti-join removal, and a re-run of
-connected components.  The reference removes ONE edge globally then restarts;
-here one edge is removed **per affected component per iteration** — parallel
-safe, provably reaches the same fixpoint condition (no conflicted /
+Spark-first re-expression.  The reference removes ONE edge globally then
+restarts; here one edge is removed **per affected component per round** —
+parallel safe, provably reaches the same fixpoint condition (no conflicted /
 oversized components), exact removed-edge set may differ (accepted per
-SURVEY.md §7 "Hard parts").  Components shrink monotonically, loops
-checkpoint through :func:`connected_components`, and every removal count is
-written to lineage (never silent).
+SURVEY.md §7 "Hard parts").  Every G6/G7/G8 decision depends only on the
+component an edge sits in, so components can be pruned independently.
 
-G8's bridge finding is the one genuinely graph-algorithmic step: it runs
-networkx per component inside ``applyInPandas`` — components are bounded by
-G7's ``max_cluster_size``, so groups are tiny and embarrassingly parallel.
+:func:`full_pruning` runs ONE corpus-wide connected components over the
+G5-filtered edges and splits the components by size:
+
+- components of at most ``max_cluster_size`` nodes (bounded; on physician
+  data, all of them) go through one ``groupBy("component_id")
+  .applyInPandas`` pass that replays G6's rounds in memory and then finds
+  G8's weak bridges with networkx — one Spark stage, however many rounds
+  or edges a component needs.  G7 has nothing to do there: G6 only splits
+  components, so none outgrows the cap.
+- larger components (unbounded, so not safe to pull into one Python
+  worker) keep the distributed loops on their own edges: each
+  ``prune_id_conflicts`` / ``prune_oversized_clusters`` round is joins + a
+  per-component window ``row_number() = 1`` pick of the weakest qualifying
+  edge, an anti-join removal, and a connected-components re-run over ONLY
+  the components that lost an edge.  A ``limit(1)`` probe skips them when
+  no component is that large.
+
+Components shrink monotonically, the distributed loops checkpoint through
+:func:`connected_components`, and every removal count is written to
+lineage (never silent).
 """
 
 from __future__ import annotations
@@ -43,6 +56,8 @@ from ..plans.lineage import NULL_LINEAGE, LineageLog
 from .components import connected_components
 
 _EDGE_COLS = ["id_1", "id_2", "weight"]
+# G6's round cap, shared by the distributed and the in-memory replay
+_ID_CONFLICT_ITERATIONS = 50
 
 
 def prune_low_confidence_edges(edges: DataFrame, threshold: float) -> DataFrame:
@@ -102,7 +117,7 @@ def prune_id_conflicts(
     node_ids: DataFrame,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     lineage: LineageLog = NULL_LINEAGE,
-    max_iterations: int = 50,
+    max_iterations: int = _ID_CONFLICT_ITERATIONS,
 ) -> DataFrame:
     """G6: resolve authoritative-id conflicts (NPI analog: content digest).
 
@@ -180,7 +195,7 @@ def prune_oversized_clusters(
     cur = edges.select(*_EDGE_COLS)
     # full CC once; afterwards only the components that lost an edge are
     # re-clustered (see _localized_recluster)
-    assign = connected_components(cur.select("id_1", "id_2"), cfg=cfg)
+    assign = connected_components(cur.select("id_1", "id_2"), cfg=cfg, lineage=lineage)
     removed_total = 0
     for it in range(max_iterations):
         oversized = (
@@ -216,6 +231,23 @@ def prune_oversized_clusters(
 _BRIDGE_SCHEMA = "id_1 string, id_2 string"
 
 
+def _weak_bridge_pairs(edges: pd.DataFrame, threshold: float) -> list[tuple]:
+    """G8 for the edge rows of ONE connected component: its bridges weighing
+    less than ``threshold``, each normalized to ``(id_1, id_2)`` with
+    ``id_1 < id_2``."""
+    import networkx as nx
+
+    # reference skips clusters of <=2 NODES (pruning.py:147); for a
+    # connected component <=1 edge <=> <=2 nodes, so the edge-count
+    # guard is exactly equivalent
+    if len(edges) < 2:
+        return []
+    g = nx.Graph()
+    for u, v, w in zip(edges["id_1"], edges["id_2"], edges["weight"]):
+        g.add_edge(u, v, weight=w)
+    return [(min(u, v), max(u, v)) for u, v in nx.bridges(g) if g[u][v]["weight"] < threshold]
+
+
 def prune_weak_bridges(
     edges: DataFrame,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
@@ -238,7 +270,7 @@ def prune_weak_bridges(
     assign = (
         assignments
         if reused
-        else connected_components(edges.select("id_1", "id_2"), cfg=cfg)
+        else connected_components(edges.select("id_1", "id_2"), cfg=cfg, lineage=lineage)
     )
     lineage.log("prune.weak_bridges", reused_assignments=reused)
     e = edges.join(assign.withColumnRenamed("id", "id_1"), "id_1").select(
@@ -246,30 +278,76 @@ def prune_weak_bridges(
     )
 
     def weak_bridges(pdf: pd.DataFrame) -> pd.DataFrame:
-        import networkx as nx
+        return pd.DataFrame(_weak_bridge_pairs(pdf, t), columns=["id_1", "id_2"])
 
-        # reference skips clusters of <=2 NODES (pruning.py:147); for a
-        # connected component <=1 edge <=> <=2 nodes, so the edge-count
-        # guard is exactly equivalent
-        if len(pdf) < 2:
-            return pd.DataFrame(columns=["id_1", "id_2"])
-        g = nx.Graph()
-        for r in pdf.itertuples():
-            g.add_edge(r.id_1, r.id_2, weight=r.weight)
-        out = [
-            {"id_1": u, "id_2": v}
-            for u, v in nx.bridges(g)
-            if g[u][v].get("weight", 0.5) < t
-        ]
-        return pd.DataFrame(out, columns=["id_1", "id_2"])
-
-    # bridge tuples come back in graph orientation; normalize to id_1<id_2
     found = e.groupBy("component_id").applyInPandas(weak_bridges, schema=_BRIDGE_SCHEMA)
-    found = found.select(
-        F.least("id_1", "id_2").alias("id_1"), F.greatest("id_1", "id_2").alias("id_2")
-    )
-    out = edges.join(found, ["id_1", "id_2"], "left_anti")
-    return out
+    return edges.join(found, ["id_1", "id_2"], "left_anti")
+
+
+def _replay_id_conflicts(pdf: pd.DataFrame, max_iterations: int) -> pd.DataFrame:
+    """G6 on ONE component's edge rows (``id_1, id_2, weight, aid_1,
+    aid_2``), replaying :func:`prune_id_conflicts` round for round: each
+    round, every conflicted sub-component loses its weakest qualifying edge
+    (weight, then id_1, then id_2); a sub-component stops when it holds no
+    conflict or no qualifying edge.  Returns the surviving rows."""
+    import networkx as nx
+
+    aid = {}
+    for ids, aids in ((pdf["id_1"], pdf["aid_1"]), (pdf["id_2"], pdf["aid_2"])):
+        for n, a in zip(ids, aids):
+            aid[n] = None if pd.isna(a) else a
+    if len(set(aid.values()) - {None}) < 2:
+        return pdf
+    has1, has2 = pdf["aid_1"].notna(), pdf["aid_2"].notna()
+    qualifying = (has1 & has2 & (pdf["aid_1"] != pdf["aid_2"])) | (has1 != has2)
+    weakest_first = pdf[qualifying].sort_values(["weight", "id_1", "id_2"])
+    candidates = list(zip(weakest_first["id_1"], weakest_first["id_2"]))
+    pairs = list(zip(pdf["id_1"], pdf["id_2"]))
+    removed: set[tuple] = set()
+    for _ in range(max_iterations):
+        g = nx.Graph()
+        g.add_nodes_from(aid)
+        g.add_edges_from(p for p in pairs if p not in removed)
+        comp, conflicted = {}, set()
+        for i, members in enumerate(nx.connected_components(g)):
+            comp.update(dict.fromkeys(members, i))
+            if len({aid[n] for n in members} - {None}) > 1:
+                conflicted.add(i)
+        if not conflicted:
+            break
+        cut: dict[int, tuple] = {}
+        for u, v in candidates:
+            c = comp[u]
+            if c in conflicted and c not in cut and (u, v) not in removed:
+                cut[c] = (u, v)
+        if not cut:
+            break
+        removed.update(cut.values())
+    return pdf[[p not in removed for p in pairs]]
+
+
+def _bounded_component_kernel(threshold: float, resolve_conflicts: bool,
+                              max_iterations: int):
+    """``applyInPandas`` body of :func:`full_pruning` for one component of at
+    most ``max_cluster_size`` nodes: G6 (when enabled), then G8 on each
+    sub-component G6 left.  G7 never fires here — G6 only splits."""
+    import networkx as nx
+
+    def prune(pdf: pd.DataFrame) -> pd.DataFrame:
+        kept = _replay_id_conflicts(pdf, max_iterations) if resolve_conflicts else pdf
+        parts = [kept]
+        if len(kept) < len(pdf):
+            # G6 split the component; G8 judges each piece on its own rows,
+            # grouped by id_1's component as prune_weak_bridges groups them
+            g = nx.Graph()
+            g.add_edges_from(zip(kept["id_1"], kept["id_2"]))
+            comp = {n: i for i, c in enumerate(nx.connected_components(g)) for n in c}
+            parts = [p for _, p in kept.groupby(kept["id_1"].map(comp))]
+        weak = {pair for p in parts for pair in _weak_bridge_pairs(p, threshold)}
+        keep = [(u, v) not in weak for u, v in zip(kept["id_1"], kept["id_2"])]
+        return kept.loc[keep, _EDGE_COLS]
+
+    return prune
 
 
 def full_pruning(
@@ -279,13 +357,44 @@ def full_pruning(
     lineage: LineageLog = NULL_LINEAGE,
 ) -> DataFrame:
     """G9 (pruning.py:172-210): G5 at 0.75·min_edge_weight -> G6 -> G7 -> G8
-    at min_edge_weight.  Returns the pruned edge set."""
+    at min_edge_weight.  Returns the pruned edge set (``node_ids`` holds one
+    ``(id, auth_id)`` row per node).
+
+    One connected-components run over the G5 edges splits the work:
+    components of at most ``max_cluster_size`` nodes are pruned in memory by
+    one grouped pandas pass; larger ones run the distributed G6 -> G7 -> G8
+    loops on their own edges.  Components are pruned independently, so the
+    result equals running the distributed loops over every edge.
+    """
     n0 = edges.count()
-    e = prune_low_confidence_edges(edges, cfg.min_edge_weight * 0.75)
-    if cfg.prune_id_conflicts:
-        e = prune_id_conflicts(e, node_ids, cfg, lineage)
-    e, assign = prune_oversized_clusters(e, cfg, lineage, return_assignments=True)
-    e = prune_weak_bridges(e, cfg, lineage, assignments=assign)
-    n1 = e.count()
-    lineage.log("prune.done", edges_before=n0, edges_after=n1, removed=n0 - n1)
-    return e
+    e = prune_low_confidence_edges(edges, cfg.min_edge_weight * 0.75).select(*_EDGE_COLS)
+    assign = connected_components(e.select("id_1", "id_2"), cfg=cfg, lineage=lineage)
+    sizes = assign.groupBy("component_id").agg(F.count("*").alias("_n"))
+    aid = node_ids.select("id", "auth_id")
+    tagged = _checkpoint(
+        e.join(assign.withColumnRenamed("id", "id_1"), "id_1", "left")
+        # a node whose only edges are self-loops has no component; its
+        # self-loops form a group of their own (and are never cut)
+        .withColumn("component_id", F.coalesce("component_id", "id_1"))
+        .join(sizes, "component_id", "left")
+        .join(aid.toDF("id_1", "aid_1"), "id_1", "left")
+        .join(aid.toDF("id_2", "aid_2"), "id_2", "left")
+    )
+    bounded = F.coalesce("_n", F.lit(0)) <= cfg.max_cluster_size
+    kernel = _bounded_component_kernel(
+        cfg.min_edge_weight, cfg.prune_id_conflicts, _ID_CONFLICT_ITERATIONS)
+    out = tagged.where(bounded).groupBy("component_id").applyInPandas(kernel, schema=e.schema)
+    lineage.log("prune.weak_bridges", reused_assignments=True)
+
+    has_large = tagged.where(~bounded).limit(1).count() > 0
+    if has_large:
+        big = tagged.where(~bounded).select(*_EDGE_COLS)
+        if cfg.prune_id_conflicts:
+            big = prune_id_conflicts(big, node_ids, cfg, lineage, _ID_CONFLICT_ITERATIONS)
+        big, big_assign = prune_oversized_clusters(big, cfg, lineage, return_assignments=True)
+        out = out.unionByName(prune_weak_bridges(big, cfg, lineage, assignments=big_assign))
+    out = _checkpoint(out)
+    n1 = out.count()
+    lineage.log("prune.done", edges_before=n0, edges_after=n1, removed=n0 - n1,
+                large_components=has_large)
+    return out

@@ -186,9 +186,8 @@ def resolve_physicians(
         "classified": classified,
         "edges": pruned,
         "assignments": assignments,
-        "entities": entities.join(e_conf,
-                                  entities["component_id"] == e_conf["component_id"],
-                                  "left").drop(e_conf["component_id"]),
+        "entities": entities.join(e_conf, "component_id", "left").select(
+            *entities.columns, "entity_confidence"),
         "mapping": mapping,
         "record_confidence": r_conf,
         "report_data_quality": R.data_quality_report(records),

@@ -8,6 +8,8 @@ clusters split; survivorship picks mode/argmax exactly.
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -202,3 +204,108 @@ def test_prune_id_conflicts_localized_recluster(spark):
         # conflicted component has 4 nodes; the 200 clean components must
         # not flow through the re-cluster
         assert ev["star_edges"] <= 4, ev
+
+
+def _seeded_graph(seed):
+    """~35 edges: components of 2-4 nodes and of 7-8 nodes (above a cap of
+    5), random auth ids (two per component plus id-less nodes), tied
+    weights, some below G5's cut; plus three fixed bounded components:
+    an id-less bridging node (pm), a weight tie that the id_1-then-id_2
+    order breaks differently from id_2-then-id_1 (ta-td vs tb-tc), and a
+    G6 split leaving a one-edge piece with a weak edge that G8 must skip
+    (sa-sb)."""
+    rng = random.Random(seed)
+    rows = [
+        ("pa", "pm", 0.45), ("pm", "pz", 0.45),
+        ("ta", "td", 0.45), ("tc", "td", 0.9), ("tb", "tc", 0.45),
+        ("sa", "sb", 0.35), ("sb", "sc", 0.45), ("sc", "sd", 0.9), ("sd", "se", 0.9),
+    ]
+    ids = [("pa", "111"), ("pm", None), ("pz", "222"),
+           ("ta", "111"), ("tb", "222"), ("tc", None), ("td", None),
+           ("sa", "111"), ("sb", "111"), ("sc", "222"), ("sd", "222"), ("se", "222")]
+    for c, size in enumerate([2, 3, 4, 7, 8]):
+        nodes = [f"c{c}n{i}" for i in range(size)]
+        ids += [(n, rng.choice([None, f"{c}a", f"{c}b"])) for n in nodes]
+        pairs = {tuple(sorted((nodes[i], rng.choice(nodes[:i])))) for i in range(1, size)}
+        while len(pairs) < size - 1 + size // 3:
+            pairs.add(tuple(sorted(rng.sample(nodes, 2))))
+        rows += [(u, v, rng.choice([0.2, 0.35, 0.45, 0.45, 0.6, 0.9]))
+                 for u, v in sorted(pairs)]
+    return rows, ids
+
+
+def _conflicted_components(edge_rows, id_rows):
+    """Components (over ``edge_rows``) holding >1 distinct auth id."""
+    parent = {n: n for n, _ in id_rows}
+
+    def find(n):
+        while parent[n] != n:
+            n = parent[n]
+        return n
+
+    for u, v, _w in edge_rows:
+        parent[find(u)] = find(v)
+    per_root = {}
+    for n, a in id_rows:
+        if a is not None:
+            per_root.setdefault(find(n), set()).add(a)
+    return sum(len(s) > 1 for s in per_root.values())
+
+
+@pytest.mark.parametrize("seed,rounds", [(1, 50), (2, 1)])
+def test_full_pruning_equals_distributed_composition(spark, monkeypatch, seed, rounds):
+    """The in-memory pass over bounded components plus the distributed loops
+    over larger ones return exactly the edges of G5 -> G6 -> G7 -> G8 run
+    distributed over every edge.  ``rounds=1`` caps G6 so some conflicts
+    cannot be resolved (with one auth id per node, every conflicted
+    component has a qualifying edge; only the round cap leaves one)."""
+    from healthcare_entity_resolution_spark.plans.lineage import LineageLog
+
+    rows, id_rows = _seeded_graph(seed)
+    e = _edges(spark, rows)
+    ids = spark.createDataFrame(id_rows, "id string, auth_id string")
+    cfg = ResolutionConfig(max_cluster_size=5)
+
+    ref = P.prune_low_confidence_edges(e, cfg.min_edge_weight * 0.75)
+    ref = P.prune_id_conflicts(ref, ids, cfg, max_iterations=rounds)
+    ref, assign = P.prune_oversized_clusters(ref, cfg, return_assignments=True)
+    ref = P.prune_weak_bridges(ref, cfg, assignments=assign)
+    expected = sorted(tuple(r) for r in ref.collect())
+
+    monkeypatch.setattr(P, "_ID_CONFLICT_ITERATIONS", rounds)
+    lin = LineageLog()
+    got = sorted(tuple(r) for r in P.full_pruning(e, ids, cfg, lin).collect())
+    assert got == expected
+    done = [ev for ev in lin.events if ev["stage"] == "prune.done"][0]
+    assert done["large_components"] is True
+    assert (_conflicted_components(got, id_rows) > 0) == (rounds == 1)
+
+
+def test_full_pruning_bounded_components_run_one_cc(spark):
+    """All components within the cap: one connected-components run, no
+    re-clustering loop, G8 on the global component map."""
+    from healthcare_entity_resolution_spark.plans.lineage import LineageLog
+
+    rows = [
+        ("a", "b", 0.9), ("b", "c", 0.45), ("c", "d", 0.92),   # id conflict
+        ("p", "q", 0.5), ("q", "r", 0.5), ("p", "r", 0.5),      # triangle ...
+        ("r", "s", 0.35),                                       # weak bridge
+        ("s", "t", 0.5), ("t", "u", 0.5), ("s", "u", 0.5),
+        ("x", "y", 0.1),                                        # G5 drops
+    ]
+    ids = spark.createDataFrame(
+        [("a", "111"), ("b", "111"), ("c", "222"), ("d", "222")],
+        "id string, auth_id string",
+    )
+    lin = LineageLog()
+    kept = {(r.id_1, r.id_2) for r in P.full_pruning(_edges(spark, rows), ids, lineage=lin).collect()}
+    assert kept == {(u, v) for u, v, _ in rows} - {("b", "c"), ("r", "s"), ("x", "y")}
+
+    stages = [ev["stage"] for ev in lin.events]
+    assert stages.count("cc.converged") == 1
+    assert "prune.recluster" not in stages
+    bridges = [ev for ev in lin.events if ev["stage"] == "prune.weak_bridges"]
+    assert [ev["reused_assignments"] for ev in bridges] == [True]
+    done = [ev for ev in lin.events if ev["stage"] == "prune.done"]
+    assert len(done) == 1 and done[0]["removed"] == 3
+    assert done[0]["large_components"] is False
