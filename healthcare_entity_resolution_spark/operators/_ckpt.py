@@ -1,5 +1,5 @@
-"""Checkpoint helper shared by the iterative operators (CC, pruning,
-PageRank).
+"""Checkpoint helper shared by the operators that truncate lineage
+(connected components, pruning, blocking, dedup, decontamination, curation).
 
 Reliable (HDFS/disk) checkpoints truncate lineage AND survive executor loss
 — that is the north_rule resume story on a cluster.  When the hosting
@@ -21,12 +21,13 @@ def _strip_stats(df: DataFrame) -> DataFrame:
     plan's ``Statistics`` (sizeInBytes as an unbounded BigInt) into the new
     LogicalRDD.  An iterative job that joins the checkpointed frame back to
     itself k times per iteration multiplies those BigInts, so sizeInBytes
-    grows as stat^(k^iter) — with k=2 (e.g. PageRank uses ranks on both the
-    contribution side and the prev side) the BigInt *bit length doubles every
-    iteration* and Catalyst's stats estimation becomes exponential
-    (BigInteger.multiplyByInt OOM around iteration ~20).  Rebuilding the
-    LogicalRDD from the already-computed InternalRow RDD resets the stat to
-    the session default and costs nothing (no recompute, no job)."""
+    grows as stat^(k^iter) — with k=2 (e.g. connected components' large-star
+    step reads the checkpointed edge frame on both sides of its neighbor-min
+    join) the BigInt *bit length doubles every iteration* and Catalyst's
+    stats estimation becomes exponential (BigInteger.multiplyByInt OOM
+    around iteration ~20).  Rebuilding the LogicalRDD from the
+    already-computed InternalRow RDD resets the stat to the session default
+    and costs nothing (no recompute, no job)."""
     spark = df.sparkSession
     try:
         jdf = spark._jsparkSession.internalCreateDataFrame(
@@ -37,15 +38,7 @@ def _strip_stats(df: DataFrame) -> DataFrame:
         return df
 
 
-def checkpoint(df: DataFrame, prefer_local: bool = False) -> DataFrame:
-    """``prefer_local=True`` always takes the executor-local path: same plan
-    truncation, no checkpoint-file write and no reliable-checkpoint
-    recompute — the right choice for *inner* iterations of a loop that
-    takes a durable checkpoint periodically (e.g. PageRank, which persists
-    a reliable checkpoint every few iterations for the resume story and
-    local-checkpoints the rest)."""
-    if prefer_local:
-        return _strip_stats(df.localCheckpoint(eager=True))
+def checkpoint(df: DataFrame) -> DataFrame:
     sc = df.sparkSession.sparkContext
     try:
         has_dir = not sc._jsc.sc().getCheckpointDir().isEmpty()

@@ -129,7 +129,7 @@ def prune_id_conflicts(
     # one full CC up front; every later iteration re-clusters ONLY the
     # components an edge was removed from (untouched components keep their
     # assignment — O(affected) not O(corpus) per iteration)
-    assign = connected_components(cur.select("id_1", "id_2"), cfg=cfg)
+    assign = connected_components(cur.select("id_1", "id_2"), cfg=cfg, lineage=lineage)
     removed_total = 0
     for it in range(max_iterations):
         node = assign.join(node_ids, "id", "left")

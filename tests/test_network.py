@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from healthcare_entity_resolution_spark.config import ResolutionConfig
 from healthcare_entity_resolution_spark.operators import network as N
+from healthcare_entity_resolution_spark.plans.lineage import LineageLog
 
 
 @pytest.fixture(scope="module")
@@ -43,37 +44,120 @@ def test_build_referral_graph(spark):
     )
 
 
-def _reference_pagerank(edges, alpha=0.85, tol=1e-6, max_iter=100):
-    """Plain-Python power iteration (networkx.pagerank semantics; nx itself
-    needs scipy, absent in this container)."""
+def _reference_pagerank(edges, alpha=0.85, tol=1e-6, max_iter=100, fixed_iter=None):
+    """Plain-Python power iteration with networkx.pagerank semantics,
+    without the networkx/scipy dependency.  A node whose out-weights sum
+    to 0 is dangling.  ``fixed_iter`` runs exactly that many iterations with
+    no convergence check.  Returns ``(ranks, iterations)``."""
     nodes = sorted({e[0] for e in edges} | {e[1] for e in edges})
     n = len(nodes)
     out_w = {}
     for s, d, w in edges:
         out_w[s] = out_w.get(s, 0.0) + w
     rank = {v: 1.0 / n for v in nodes}
-    for _ in range(max_iter):
-        dangling = sum(rank[v] for v in nodes if v not in out_w)
+    n_iter = fixed_iter if fixed_iter is not None else max_iter
+    for it in range(n_iter):
+        dangling = sum(rank[v] for v in nodes if not out_w.get(v))
         new = {v: (1 - alpha) / n + alpha * dangling / n for v in nodes}
         for s, d, w in edges:
-            new[d] += alpha * rank[s] * w / out_w[s]
+            if out_w[s]:
+                new[d] += alpha * rank[s] * w / out_w[s]
         delta = sum(abs(new[v] - rank[v]) for v in nodes)
         rank = new
-        if delta < tol * n:
-            break
-    return rank
+        if fixed_iter is None and delta < tol * n:
+            return rank, it + 1
+    return rank, n_iter
 
 
-def test_pagerank_matches_reference(spark, referral_edges):
-    ranks = {
-        r["id"]: r["pagerank"]
-        for r in N.pagerank(referral_edges, ResolutionConfig()).collect()
-    }
-    edges = [(r.src, r.dst, float(r.referral_count)) for r in referral_edges.collect()]
-    expected = _reference_pagerank(edges)
+_PAGERANK_CASES = {
+    # A -> B -> C -> D, D a dangling sink
+    "dangling_chain": ("string", [("A", "B", 2), ("B", "C", 1), ("C", "D", 4)]),
+    # repeated (src, dst) rows: their weights sum
+    "repeated_rows": ("string", [("A", "B", 1), ("A", "B", 3), ("A", "C", 1),
+                                 ("B", "C", 2), ("C", "A", 1), ("C", "A", 1)]),
+    "bigint_ids": ("bigint", [(10, 20, 3), (20, 30, 1), (30, 10, 2), (40, 30, 5),
+                              (20, 10, 1)]),
+    # A's out-weights sum to 0: A is dangling, not a division by zero
+    "zero_out_weight": ("string", [("A", "B", 0), ("B", "C", 2), ("C", "A", 1)]),
+}
+
+
+def _pagerank_case(spark, referral_edges, case):
+    """``(edges, fixed_iter)``: the module graph (converged or 7 fixed
+    iterations) or one of ``_PAGERANK_CASES``."""
+    if case in ("referral", "fixed_iter_7"):
+        edges = referral_edges.select("src", "dst", "referral_count")
+        return edges, (7 if case == "fixed_iter_7" else None)
+    id_type, rows = _PAGERANK_CASES[case]
+    edges = spark.createDataFrame(
+        rows, f"src {id_type}, dst {id_type}, referral_count long")
+    return edges, None
+
+
+@pytest.mark.parametrize("case", ["referral", *_PAGERANK_CASES, "fixed_iter_7"])
+def test_pagerank_matches_reference(spark, referral_edges, case):
+    edges, fixed_iter = _pagerank_case(spark, referral_edges, case)
+    lin = LineageLog()
+    out = N.pagerank(edges, ResolutionConfig(), lin, fixed_iter=fixed_iter)
+    assert out.schema["id"].dataType == edges.schema["src"].dataType
+    assert out.schema["pagerank"].dataType.simpleString() == "double"
+    ranks = {r["id"]: r["pagerank"] for r in out.collect()}
+
+    rows = [(r.src, r.dst, float(r.referral_count)) for r in edges.collect()]
+    expected, iterations = _reference_pagerank(rows, fixed_iter=fixed_iter)
     assert set(ranks) == set(expected)
     for k in expected:
-        assert ranks[k] == pytest.approx(expected[k], abs=1e-4)
+        assert ranks[k] == pytest.approx(expected[k], abs=1e-12)
+    assert sum(ranks.values()) == pytest.approx(1.0, abs=1e-9)
+
+    stages = {ev["stage"]: ev for ev in lin.events}
+    if fixed_iter is None:
+        assert stages["pagerank.converged"]["iterations"] == iterations
+    else:
+        assert stages["pagerank.fixed_iterations"]["iterations"] == fixed_iter
+        assert "pagerank.converged" not in stages
+
+
+def test_pagerank_zero_out_weight_is_dangling(spark):
+    """A node whose out-edge weights sum to 0 ranks exactly as if it had no
+    out-edges at all (networkx semantics); no DIVIDE_BY_ZERO under ANSI."""
+    schema = "src string, dst string, referral_count long"
+    zero = spark.createDataFrame([("A", "B", 0), ("B", "C", 2), ("C", "A", 1)], schema)
+    none = spark.createDataFrame([("B", "C", 2), ("C", "A", 1)], schema)
+    got = {r["id"]: r["pagerank"] for r in N.pagerank(zero).collect()}
+    ref = {r["id"]: r["pagerank"] for r in N.pagerank(none).collect()}
+    assert got == pytest.approx(ref, abs=1e-15)
+
+
+def test_pagerank_empty_edges(spark):
+    edges = spark.createDataFrame([], "src bigint, dst bigint, referral_count long")
+    out = N.pagerank(edges)
+    assert out.columns == ["id", "pagerank"]
+    assert out.schema["id"].dataType.simpleString() == "bigint"
+    assert out.collect() == []
+
+
+def test_pagerank_max_iterations_hit(spark, referral_edges):
+    lin = LineageLog()
+    N.pagerank(referral_edges, ResolutionConfig(pagerank_max_iter=3), lin)
+    assert [(e["stage"], e["iterations"]) for e in lin.events] == [
+        ("pagerank.max_iterations_hit", 3)]
+
+
+def test_pagerank_runs_at_most_two_jobs(spark, referral_edges):
+    """The edge list is collected once; the iterations run in the driver,
+    so the job count does not grow with the iteration count."""
+    sc = spark.sparkContext
+    lin = LineageLog()
+    sc.setJobGroup("test-pagerank-jobs", "pagerank job shape")
+    try:
+        N.pagerank(referral_edges, ResolutionConfig(), lin)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    (ev,) = [e for e in lin.events if e["stage"] == "pagerank.converged"]
+    assert ev["iterations"] >= 10
+    jobs = sc.statusTracker().getJobIdsForGroup("test-pagerank-jobs")
+    assert 1 <= len(jobs) <= 2, jobs
 
 
 def test_referral_metrics(spark, referral_edges):

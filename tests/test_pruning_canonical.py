@@ -197,8 +197,13 @@ def test_prune_id_conflicts_localized_recluster(spark):
     assert ("a", "b") in kept and ("c", "d") in kept
     assert len(kept) == 202
 
-    assert any(ev["stage"] == "prune.recluster" for ev in lin.events)
-    sub_cc = [ev for ev in lin.events if ev["stage"] == "cc.converged"]
+    stages = [ev["stage"] for ev in lin.events]
+    assert "prune.recluster" in stages
+    # the up-front full CC logs too; only runs after the first re-cluster
+    # event are the localized ones
+    assert stages.index("cc.converged") < stages.index("prune.recluster")
+    after = lin.events[stages.index("prune.recluster"):]
+    sub_cc = [ev for ev in after if ev["stage"] == "cc.converged"]
     assert sub_cc, "localized re-cluster must have run"
     for ev in sub_cc:
         # conflicted component has 4 nodes; the 200 clean components must
