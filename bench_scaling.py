@@ -80,16 +80,8 @@ def child(cpus: int) -> None:
     best = None
     for _ in range(1):
         t0 = time.perf_counter()
-        scored = S.score_code_pairs(files, pairs)
-        classified = C.classify(
-            scored.withColumn(
-                "auth",
-                F.when(F.col("sha_equal"), F.lit(1.0)).otherwise(
-                    F.lit(None).cast("double")
-                ),
-            ),
-            authoritative_col="auth",
-        )
+        classified = C.classify(S.score_code_pairs(files, pairs),
+                                authoritative_col="sha_match")
         n = classified.where(F.col("decision") == "match").count()
         dt = time.perf_counter() - t0
         best = dt if best is None or dt < best else best

@@ -3,8 +3,8 @@
 Thresholds and weights carry the reference defaults
 (/root/reference/src/physician_resolution/config.py:15-18 and
 matching/similarity.py:266-291) so labeled-pair decisions reproduce at the
-same blocking keys.  Scale knobs (salting, block caps, checkpointing) are
-new — the reference is single-node and has none.
+same blocking keys.  Scale knobs (hot-block salting, MinHash/LSH banding,
+iteration caps) are new — the reference is single-node and has none.
 """
 
 from __future__ import annotations
@@ -29,15 +29,12 @@ class ResolutionConfig:
     weight_specialty: float = 0.20
     authoritative_match_score: float = 0.95  # NPI / content-sha match
 
-    # --- scale knobs (new; north_rule: salted repartition, hot-block cap) ---
+    # --- scale knobs (new; north_rule: hot-block salting, LSH banding) ---
     max_block_size: int = 200          # blocks larger than this get salted
-    max_pairs_per_block: int = 50_000  # lineage-logged cap, never silent
-    shuffle_partitions: int = 32
     minhash_permutations: int = 64
     lsh_bands: int = 16                # 16 bands x 4 rows
     minhash_shingle_k: int = 5         # char-shingle width for MinHash tokens
     shingle_size: int = 3
-    checkpoint_every: int = 1          # CC: checkpoint each iteration
     cc_max_iterations: int = 50
     pagerank_alpha: float = 0.85
     pagerank_max_iter: int = 100

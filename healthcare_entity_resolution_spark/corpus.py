@@ -149,21 +149,3 @@ def generate_files_corpus(
             )
             labels.append(dict(file_id=fid, true_entity_id=true_id))
     return pd.DataFrame(files), pd.DataFrame(labels)
-
-
-def generate_referral_events(
-    n_entities: int = 50, n_events: int = 400, seed: int = 42
-) -> pd.DataFrame:
-    """Entity-to-entity referral events (analog of the reference's
-    referrals.csv, generate.py:284-332): 8% corrupted ids, seeded dates."""
-    rng = random.Random(seed)
-    rows = []
-    for i in range(n_events):
-        a = f"ENT_{rng.randrange(n_entities):05d}"
-        b = f"ENT_{rng.randrange(n_entities):05d}"
-        if rng.random() < 0.08:
-            a = None if rng.random() < 0.5 else a[:4]
-        day = rng.randrange(365)
-        rows.append(dict(referring_id=a, receiving_id=b,
-                         event_date=pd.Timestamp("2026-01-01") + pd.Timedelta(days=day)))
-    return pd.DataFrame(rows)

@@ -43,15 +43,6 @@ def exact_block_keys(df: DataFrame, id_col: str, key_expr, strategy: str) -> Dat
     )
 
 
-def soundex_block_keys(df: DataFrame, id_col: str, name_col: str, extra_col: str | None,
-                       strategy: str = "soundex") -> DataFrame:
-    """B3: phonetic blocking via the built-in JVM F.soundex (no Python)."""
-    key = F.soundex(F.upper(F.col(name_col)))
-    if extra_col is not None:
-        key = F.concat_ws("|", key, F.coalesce(F.upper(F.col(extra_col)), F.lit("XX")))
-    return exact_block_keys(df, id_col, key, strategy)
-
-
 def minhash_band_keys(
     df: DataFrame,
     id_col: str,

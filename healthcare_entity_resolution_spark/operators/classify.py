@@ -17,8 +17,8 @@ MATCH, NON_MATCH, UNCERTAIN = "match", "non_match", "uncertain"
 def classify(scored: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG,
              authoritative_col: str = "npi_match") -> DataFrame:
     """C1: decision + confidence.  ``authoritative_col`` is the tri-state
-    trump column (npi_match in the physician domain; for the code domain pass
-    a 1.0/NULL column derived from sha_equal)."""
+    trump column (``npi_match`` in the physician domain, ``sha_match`` in
+    the code domain -- both emitted by operators/scoring.py)."""
     mt, nt = cfg.match_threshold, cfg.non_match_threshold
     mid = (mt + nt) / 2.0
     s = F.col("overall_score")
@@ -58,11 +58,6 @@ def determine_match_type(classified: DataFrame,
         .otherwise("weak")
     )
     return classified.withColumn("match_type", mt)
-
-
-def decision_tallies(classified: DataFrame) -> DataFrame:
-    """C3's match/non-match/uncertain counters (A3) as a groupBy."""
-    return classified.groupBy("decision").agg(F.count("*").alias("n"))
 
 
 def confirmed_matches(classified: DataFrame,

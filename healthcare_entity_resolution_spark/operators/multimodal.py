@@ -183,11 +183,3 @@ def frame_sample_plan(
         F.col(id_col).alias("media_id"),
         F.explode(ts).alias("frame_ts_ms"),
     )
-
-
-def size_bucketed(df: DataFrame, bin_col: str, bucket_kb: int = 256) -> DataFrame:
-    """Repartition-by-size-bucket helper so heavy decode batches stay
-    balanced (one giant video per batch, many thumbnails per batch)."""
-    return df.withColumn(
-        "_size_bucket", (F.length(F.col(bin_col)) / (bucket_kb * 1024)).cast("int")
-    ).repartition(F.col("_size_bucket"))

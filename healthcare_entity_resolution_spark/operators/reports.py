@@ -22,20 +22,6 @@ def data_quality_report(records: DataFrame) -> DataFrame:
     return records.groupBy("source").agg(F.count("*").alias("n_records"), *cov)
 
 
-def duplicate_npi_report(records: DataFrame) -> DataFrame:
-    """A15 (data_quality.py:88-107): NPIs carrying >1 distinct standardized
-    name — upstream data-quality smell, not an engine bug."""
-    return (
-        records.where(F.col("npi").isNotNull())
-        .groupBy("npi")
-        .agg(
-            F.countDistinct("name_standardized").alias("n_names"),
-            F.sort_array(F.collect_set("name_standardized")).alias("names"),
-        )
-        .where(F.col("n_names") > 1)
-    )
-
-
 def match_quality_report(classified: DataFrame) -> DataFrame:
     """A13 (match_quality.py:52-63): score stats per decision bucket."""
     return classified.groupBy("decision").agg(
@@ -44,16 +30,6 @@ def match_quality_report(classified: DataFrame) -> DataFrame:
         F.round(F.max("overall_score"), 6).alias("max_score"),
         F.round(F.avg("overall_score"), 6).alias("avg_score"),
         F.round(F.expr("percentile_approx(overall_score, 0.5)"), 6).alias("median_score"),
-    )
-
-
-def low_confidence_matches(classified: DataFrame, n: int = 20) -> DataFrame:
-    """A17 (match_quality.py:113-136): weakest accepted matches for review."""
-    return (
-        classified.where(F.col("decision") == "match")
-        .orderBy(F.col("confidence").asc(), "id_1", "id_2")
-        .limit(n)
-        .select("id_1", "id_2", "overall_score", "confidence")
     )
 
 

@@ -56,7 +56,12 @@ def score_code_pairs(
     """Kernel scores for code-file pairs + classification-ready columns.
 
     Output: id_1, id_2, sha_equal, jw_path, jw_repo, jaccard, cosine,
-    content_sim (tiered cosine), overall_score, batch_ms.
+    batch_ms, content_tier (tiered cosine), sha_match, overall_score.
+
+    ``sha_match`` is the tri-state trump column ``classify`` reads
+    (``authoritative_col="sha_match"``), the code-domain analog of
+    ``npi_match``: 1.0 for identical content, NULL otherwise -- differing
+    content is NOT a conflict, so it is never 0.0.
     """
     shingle_k = cfg.shingle_size
     decorated = _decorate_pairs(
@@ -143,6 +148,7 @@ def score_code_pairs(
     )
     return (
         scored.withColumn("content_tier", content_tier)
+        .withColumn("sha_match", F.when(F.col("sha_equal"), F.lit(1.0)))
         .withColumn("overall_score", overall)
     )
 

@@ -1,14 +1,21 @@
 """End-to-end resolution pipelines (SURVEY.md §3.1 lifecycle).
 
-``resolve_files`` is the flagship: blocking -> scoring -> classification ->
-connected components -> canonical entities over a
+``resolve_files`` is the flagship: exact-dedup -> blocking -> scoring ->
+classification -> connected components -> canonical entities over a
 ``files(repo, path, commit, lang, content)`` corpus.
 
+The code-file stages are defined once, in ``_resolve_code_files``: files ->
+representatives -> pairs -> classified -> assignments (CC plus the fan-out
+from representatives to files) -> entities.  The two entry points differ
+only in how a stage is materialized: ``resolve_files`` persists and counts
+each stage in memory, ``resumable_resolve_files`` commits each one through
+``SnapshotStore.stage`` so a rerun resumes from the first missing snapshot.
+Both log the same timed per-stage events.  The micro-batch path
+(streaming/incremental.py) shares the scoring stage, ``classify_code_pairs``.
+
 Stage boundaries that shuffle: blocking self-join, CC iterations,
-survivorship groupBy.  ``files`` and ``pairs`` are persisted across their
-two consumers and unpersisted when the stage ends.  Component ids are the
-minimum member file_id (sha256 hex) — deterministic across runs and cluster
-sizes by construction.
+survivorship groupBy.  Component ids are the minimum member file_id
+(sha256 hex) — deterministic across runs and cluster sizes by construction.
 """
 
 from __future__ import annotations
@@ -25,19 +32,32 @@ from .operators import components as G
 from .operators import normalize as N
 from .operators import scoring as S
 from .plans.lineage import NULL_LINEAGE, LineageLog
+from .plans.snapshots import SnapshotStore
+
+# the code-file stages a resumable run commits, in run order
+CODE_FILE_STAGES = ("files", "pairs", "classified", "assignments")
 
 
-def resolve_files(
-    spark: SparkSession,
-    raw_files: DataFrame,
-    cfg: ResolutionConfig = DEFAULT_CONFIG,
-    lineage: LineageLog = NULL_LINEAGE,
-) -> dict[str, DataFrame]:
-    """Full code-corpus entity resolution.  Returns the stage DataFrames:
-    files, pairs, scored, classified, matches, assignments, entities."""
+def classify_code_pairs(files: DataFrame, pairs: DataFrame,
+                        cfg: ResolutionConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Score and classify code-file pairs; identical content (the
+    ``sha_match`` trump, the NPI analog) is a match at 0.95."""
+    return C.classify(S.score_code_pairs(files, pairs, cfg), cfg,
+                      authoritative_col="sha_match")
+
+
+def _in_memory(name: str, build) -> tuple[DataFrame, int]:
+    """``resolve_files``' materialization: persist and count."""
+    df = build().persist()
+    return df, df.count()
+
+
+def _resolve_code_files(raw_files: DataFrame, cfg: ResolutionConfig,
+                        lineage: LineageLog, materialize) -> dict[str, DataFrame]:
+    """The code-file stage sequence.  ``materialize(name, build)`` runs or
+    restores one stage and returns ``(frame, rows)``."""
     t0 = time.perf_counter()
-    files = N.normalize_files(raw_files).persist()
-    n_files = files.count()
+    files, n_files = materialize("files", lambda: N.normalize_files(raw_files))
     lineage.log("normalize", rows=n_files, sec=time.perf_counter() - t0)
 
     # --- exact-dedup pre-pass -------------------------------------------
@@ -48,31 +68,25 @@ def resolve_files(
     # appears millions of times); resolving representatives only turns those
     # C(n,2) explosions into a hash-groupBy, and the sha join at the end
     # fans the decision back out.  groupBy(content_sha) — not a window — so
-    # the map-side partial aggregation does the heavy lifting.
+    # the map-side partial aggregation does the heavy lifting.  Derived from
+    # ``files`` in memory in both modes: it is one aggregate, not a stage
+    # worth a snapshot.
+    t1 = time.perf_counter()
     reps = files.groupBy("content_sha").agg(F.min("file_id").alias("file_id"))
     rep_files = files.join(reps, ["content_sha", "file_id"]).persist()
     n_reps = rep_files.count()
     lineage.log("exact_dedup", rows=n_files, representatives=n_reps,
-                exact_duplicates=n_files - n_reps)
-
-    t1 = time.perf_counter()
-    keys = B.code_file_block_keys(rep_files, cfg)
-    # candidate_pairs returns an eagerly checkpointed frame (materialized,
-    # lineage truncated) — no extra persist layer needed
-    pairs = B.candidate_pairs(keys, cfg, lineage)
-    n_pairs = pairs.count()
-    lineage.log("blocking", pairs=n_pairs, sec=time.perf_counter() - t1)
+                exact_duplicates=n_files - n_reps, sec=time.perf_counter() - t1)
 
     t2 = time.perf_counter()
-    scored = S.score_code_pairs(rep_files, pairs, cfg)
-    # authoritative trump column: content sha equality (NPI analog; equal ->
-    # same entity at 0.95; inequality is NOT a conflict, unlike NPI)
-    scored = scored.withColumn(
-        "auth", F.when(F.col("sha_equal"), F.lit(1.0)).otherwise(F.lit(None).cast("double"))
-    )
-    classified = C.classify(scored, cfg, authoritative_col="auth").persist()
-    n_scored = classified.count()
-    score_sec = time.perf_counter() - t2
+    pairs, n_pairs = materialize("pairs", lambda: B.candidate_pairs(
+        B.code_file_block_keys(rep_files, cfg), cfg, lineage))
+    lineage.log("blocking", pairs=n_pairs, sec=time.perf_counter() - t2)
+
+    t3 = time.perf_counter()
+    classified, n_scored = materialize(
+        "classified", lambda: classify_code_pairs(rep_files, pairs, cfg))
+    score_sec = time.perf_counter() - t3
     lineage.log("scoring", pairs=n_scored, sec=score_sec,
                 pairs_per_sec=(n_scored / score_sec if score_sec > 0 else None))
     # per-partition score-batch latency -> lineage (north_rule)
@@ -83,26 +97,29 @@ def resolve_files(
         "score_batches",
     )
 
-    t3 = time.perf_counter()
     matches = C.confirmed_matches(classified, cfg)
-    rep_assign = G.connected_components(
-        matches,
-        vertices=rep_files.select(F.col("file_id").alias("id")),
-        cfg=cfg,
-        lineage=lineage,
-    )
-    # fan the representative decision back out: every file joins its
-    # content-sha representative's component (broadcast-sized at test scale;
-    # a plain shuffled equi-join on content_sha at cluster scale)
-    assignments = (
-        files.select("file_id", "content_sha")
-        .join(reps.withColumnRenamed("file_id", "rep_id"), "content_sha")
-        .join(rep_assign.withColumnRenamed("id", "rep_id"), "rep_id")
-        .select(F.col("file_id").alias("id"), "component_id")
-        .persist()
-    )
-    n_nodes = assignments.count()
-    lineage.log("clustering", nodes=n_nodes, sec=time.perf_counter() - t3)
+
+    def build_assignments():
+        rep_assign = G.connected_components(
+            matches,
+            vertices=rep_files.select(F.col("file_id").alias("id")),
+            cfg=cfg,
+            lineage=lineage,
+        )
+        # fan the representative decision back out: every file joins its
+        # content-sha representative's component (broadcast-sized at test
+        # scale; a plain shuffled equi-join on content_sha at cluster scale)
+        return (
+            files.select("file_id", "content_sha")
+            .join(rep_files.select("content_sha", F.col("file_id").alias("rep_id")),
+                  "content_sha")
+            .join(rep_assign.withColumnRenamed("id", "rep_id"), "rep_id")
+            .select(F.col("file_id").alias("id"), "component_id")
+        )
+
+    t4 = time.perf_counter()
+    assignments, n_nodes = materialize("assignments", build_assignments)
+    lineage.log("clustering", nodes=n_nodes, sec=time.perf_counter() - t4)
 
     entities = (
         assignments.join(files, assignments["id"] == files["file_id"])
@@ -129,6 +146,40 @@ def resolve_files(
         "assignments": assignments,
         "entities": entities,
     }
+
+
+def resolve_files(
+    spark: SparkSession,
+    raw_files: DataFrame,
+    cfg: ResolutionConfig = DEFAULT_CONFIG,
+    lineage: LineageLog = NULL_LINEAGE,
+) -> dict[str, DataFrame]:
+    """Full code-corpus entity resolution, every stage persisted in memory.
+    Returns the stage DataFrames: files, pairs, classified, matches,
+    assignments, entities."""
+    return _resolve_code_files(raw_files, cfg, lineage, _in_memory)
+
+
+def resumable_resolve_files(
+    spark: SparkSession,
+    raw_files: DataFrame,
+    run_dir: str,
+    cfg: ResolutionConfig = DEFAULT_CONFIG,
+    lineage: LineageLog = NULL_LINEAGE,
+) -> dict:
+    """``resolve_files`` with every stage in ``CODE_FILE_STAGES`` committed
+    as a snapshot under ``run_dir``: a rerun after an interruption loads the
+    committed stages (one ``resume.<stage>`` event each) and recomputes from
+    the first missing one.  Also returns the ``store``."""
+    store = SnapshotStore(spark, run_dir)
+
+    def snapshot(name, build):
+        df, resumed = store.stage(name, build)
+        lineage.log(f"resume.{name}", resumed=resumed)
+        return df, df.count()
+
+    return {**_resolve_code_files(raw_files, cfg, lineage, snapshot),
+            "store": store}
 
 
 def resolve_physicians(

@@ -42,4 +42,16 @@ class LineageLog:
         self.log("metric", metric=name, value=value)
 
 
-NULL_LINEAGE = LineageLog(run_dir=None)
+class _NullLineage(LineageLog):
+    """The sink for callers that pass no log: keeps and writes nothing, so a
+    long-lived process that never asked for lineage does not accumulate
+    events."""
+
+    def log(self, stage: str, **kv) -> None:
+        pass
+
+    def write_table(self, df: DataFrame, name: str) -> None:
+        pass
+
+
+NULL_LINEAGE = _NullLineage()

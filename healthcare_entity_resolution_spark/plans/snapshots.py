@@ -4,7 +4,10 @@ The reference runs in one process with everything in RAM — a crash loses
 all work.  Here every pipeline stage can commit its output DataFrame as an
 atomic parquet snapshot under a run directory; a re-run with the same
 ``run_dir`` skips every stage whose snapshot already exists and resumes
-from the first missing one.
+from the first missing one (``SnapshotStore.stage``).  This module is
+storage only and imports no operator: the resumable code-file pipeline is
+``pipeline.resumable_resolve_files``, and the micro-batch stream
+(streaming/incremental.py) uses the append-mode half below.
 
 This is the Iceberg-snapshot pattern expressed over plain parquet (the only
 table format in this container): write to ``_tmp_<name>``, then atomically
@@ -251,65 +254,3 @@ def anti_join_completed(work: DataFrame, store: SnapshotStore,
         return work
     done = store.load(snapshot).select(*key_cols).distinct()
     return work.join(done, key_cols, "left_anti")
-
-
-def resumable_resolve_files(spark, raw_files, run_dir, cfg=None, lineage=None):
-    """The flagship pipeline with per-stage snapshot commits: a rerun after
-    an interruption resumes from the last committed stage."""
-    from ..config import DEFAULT_CONFIG
-    from ..operators import blocking as B
-    from ..operators import classify as C
-    from ..operators import components as G
-    from ..operators import normalize as N
-    from ..operators import scoring as S
-    from ..plans.lineage import NULL_LINEAGE
-    from pyspark.sql import functions as F
-
-    cfg = cfg or DEFAULT_CONFIG
-    lineage = lineage or NULL_LINEAGE
-    store = SnapshotStore(spark, run_dir)
-
-    files, r1 = store.stage("files", lambda: N.normalize_files(raw_files))
-    lineage.log("resume.files", resumed=r1)
-
-    def build_pairs():
-        reps = files.groupBy("content_sha").agg(F.min("file_id").alias("file_id"))
-        rep_files = files.join(reps, ["content_sha", "file_id"])
-        return B.candidate_pairs(B.code_file_block_keys(rep_files, cfg), cfg, lineage)
-
-    pairs, r2 = store.stage("pairs", build_pairs)
-    lineage.log("resume.pairs", resumed=r2)
-
-    def build_classified():
-        reps = files.groupBy("content_sha").agg(F.min("file_id").alias("file_id"))
-        rep_files = files.join(reps, ["content_sha", "file_id"])
-        scored = S.score_code_pairs(rep_files, pairs, cfg)
-        scored = scored.withColumn(
-            "auth",
-            F.when(F.col("sha_equal"), F.lit(1.0)).otherwise(F.lit(None).cast("double")),
-        )
-        return C.classify(scored, cfg, authoritative_col="auth")
-
-    classified, r3 = store.stage("classified", build_classified)
-    lineage.log("resume.classified", resumed=r3)
-
-    def build_assignments():
-        reps = files.groupBy("content_sha").agg(F.min("file_id").alias("rep_id"))
-        rep_assign = G.connected_components(
-            C.confirmed_matches(classified, cfg),
-            vertices=reps.select(F.col("rep_id").alias("id")),
-            cfg=cfg, lineage=lineage,
-        )
-        return (
-            files.select("file_id", "content_sha")
-            .join(reps, "content_sha")
-            .join(rep_assign.withColumnRenamed("id", "rep_id"), "rep_id")
-            .select(F.col("file_id").alias("id"), "component_id")
-        )
-
-    assignments, r4 = store.stage("assignments", build_assignments)
-    lineage.log("resume.assignments", resumed=r4)
-    return {
-        "files": files, "pairs": pairs, "classified": classified,
-        "assignments": assignments, "store": store,
-    }

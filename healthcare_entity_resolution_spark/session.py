@@ -14,6 +14,14 @@ from pyspark.sql import SparkSession
 _CHECKPOINT_DIR = os.path.join(tempfile.gettempdir(), "her_spark_checkpoints")
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, at most 24g.  A heap larger than the
+    host can back is not an upper bound but a target: the JVM grows into it
+    and is OOM-killed (a full test run on a 15 GB host with a 24g heap)."""
+    half_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    return f"{max(1, min(24, half_gib))}g"
+
+
 def get_spark(
     app_name: str = "healthcare_entity_resolution_spark",
     cores: int | None = None,
@@ -41,7 +49,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("HER_ARROW_BATCH", "16384"))
-        .config("spark.driver.memory", os.environ.get("HER_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("HER_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -10,11 +10,13 @@ resolves each micro-batch against the accumulated corpus via
 3. block only NEW-vs-ALL: new files' blocking keys joined against the full
    keyed corpus — an incremental candidate generation that never re-pairs
    old-vs-old;
-4. score + classify the new pairs;
+4. score + classify the new pairs through the batch pipeline's scoring
+   stage (``pipeline.classify_code_pairs``);
 5. merge new match edges into the edge snapshot and update assignments
    INCREMENTALLY: committed components are contracted to single nodes and
    connected components runs over the contracted batch graph only —
-   per-batch clustering cost is O(batch edges), not O(corpus);
+   per-batch clustering cost is O(batch edges), not O(corpus).  The first
+   batch takes the same path against an empty committed table;
 6. commit updated snapshots atomically (SnapshotStore) — files / keys /
    edges as O(batch) APPEND deltas keyed by the foreachBatch epoch (a
    replayed epoch is a delta-level no-op), the merged assignments table as
@@ -38,7 +40,7 @@ from ..operators import blocking as B
 from ..operators import classify as C
 from ..operators import components as G
 from ..operators import normalize as N
-from ..operators import scoring as S
+from ..pipeline import classify_code_pairs
 from ..plans.lineage import NULL_LINEAGE, LineageLog
 from ..plans.snapshots import SnapshotStore
 
@@ -73,7 +75,7 @@ def micro_batch_resolve(
         )
         all_files = old_files.unionByName(new_files)
     else:
-        old_files, all_files = None, new_files
+        all_files = new_files
     all_files = all_files.persist()
     new_files = new_files.persist()
     n_new = new_files.count()
@@ -140,12 +142,8 @@ def micro_batch_resolve(
         )
         .dropDuplicates(["id_1", "id_2"])
     )
-    scored = S.score_code_pairs(all_files, cand, cfg).withColumn(
-        "auth",
-        F.when(F.col("sha_equal"), F.lit(1.0)).otherwise(F.lit(None).cast("double")),
-    )
     new_matches = C.confirmed_matches(
-        C.classify(scored, cfg, authoritative_col="auth"), cfg
+        classify_code_pairs(all_files, cand, cfg), cfg
     ).select("id_1", "id_2").persist()
     n_pairs = new_matches.count()
 
@@ -153,7 +151,6 @@ def micro_batch_resolve(
     # can never already exist in the snapshot — appends are disjoint by
     # construction, no cross-delta dedup needed
     store.append(new_matches, "edges", delta)
-    edges = store.load("edges")
 
     # incremental CC: contract committed components to single nodes and run
     # CC over the CONTRACTED batch graph only — O(batch) edges, not
@@ -165,59 +162,56 @@ def micro_batch_resolve(
     # filter the corpus by the BROADCAST batch first (a scan, no exchange),
     # then join small-small.  A naive new_matches LEFT JOIN old_assign
     # cannot broadcast (left-outer builds right), so it would exchange the
-    # corpus on id every batch.
-    if store.exists("assignments"):
-        old_assign = store.load("assignments")
-        batch_ids = (
-            new_matches.select(F.col("id_1").alias("id"))
-            .unionByName(new_matches.select(F.col("id_2").alias("id")))
-            .distinct()
+    # corpus on id every batch.  A first batch contracts against an empty
+    # committed table; limit(0) makes it an empty LocalRelation, so the
+    # optimizer prunes every join on it instead of running their stages.
+    old_assign = (
+        store.load("assignments") if store.exists("assignments")
+        else spark.createDataFrame([], "id string, component_id string").limit(0)
+    )
+    batch_ids = (
+        new_matches.select(F.col("id_1").alias("id"))
+        .unionByName(new_matches.select(F.col("id_2").alias("id")))
+        .distinct()
+    )
+    # batch-bounded slice of the committed assignments: one corpus scan
+    touched = old_assign.join(F.broadcast(batch_ids), "id", "left_semi").persist()
+    m1 = touched.select(F.col("id").alias("id_1"), F.col("component_id").alias("_c1"))
+    m2 = touched.select(F.col("id").alias("id_2"), F.col("component_id").alias("_c2"))
+    contracted = (
+        new_matches.join(m1, "id_1", "left").join(m2, "id_2", "left")
+        .select(
+            F.coalesce("_c1", F.col("id_1")).alias("id_1"),
+            F.coalesce("_c2", F.col("id_2")).alias("id_2"),
         )
-        # batch-bounded slice of the committed assignments: one corpus scan
-        touched = old_assign.join(F.broadcast(batch_ids), "id", "left_semi").persist()
-        m1 = touched.select(F.col("id").alias("id_1"), F.col("component_id").alias("_c1"))
-        m2 = touched.select(F.col("id").alias("id_2"), F.col("component_id").alias("_c2"))
-        contracted = (
-            new_matches.join(m1, "id_1", "left").join(m2, "id_2", "left")
-            .select(
-                F.coalesce("_c1", F.col("id_1")).alias("id_1"),
-                F.coalesce("_c2", F.col("id_2")).alias("id_2"),
-            )
-        )
-        merge_map = G.connected_components(contracted, cfg=cfg, lineage=lineage)
-        # remap is bounded by the contracted batch graph — broadcast-safe
-        remap = merge_map.select(
-            F.col("id").alias("component_id"), F.col("component_id").alias("_new_c")
-        )
-        carried = old_assign.join(F.broadcast(remap), "component_id", "left").select(
-            "id", F.coalesce("_new_c", F.col("component_id")).alias("component_id")
-        )
-        new_ids = new_files.select(F.col("file_id").alias("id"))
-        # replay guard: a crash between the assignments and files commits
-        # replays the batch with assignments already updated — without this
-        # exclusion those ids would appear twice.  `already` is the corpus
-        # rows matching the batch's ids (scan + broadcast semi), so the
-        # anti-join itself is small-small.
-        already = old_assign.join(F.broadcast(new_ids), "id", "left_semi")
-        fresh = (
-            new_ids.join(already.select("id"), "id", "left_anti")
-            .join(merge_map.withColumnRenamed("component_id", "_new_c"), "id", "left")
-            .select("id", F.coalesce("_new_c", F.col("id")).alias("component_id"))
-        )
-        assignments = carried.unionByName(fresh)
-        to_unpersist = [touched]
-    else:
-        assignments = G.connected_components(
-            edges, vertices=all_files.select(F.col("file_id").alias("id")),
-            cfg=cfg, lineage=lineage,
-        )
-        to_unpersist = []
+    )
+    merge_map = G.connected_components(contracted, cfg=cfg, lineage=lineage)
+    # remap is bounded by the contracted batch graph — broadcast-safe
+    remap = merge_map.select(
+        F.col("id").alias("component_id"), F.col("component_id").alias("_new_c")
+    )
+    carried = old_assign.join(F.broadcast(remap), "component_id", "left").select(
+        "id", F.coalesce("_new_c", F.col("component_id")).alias("component_id")
+    )
+    new_ids = new_files.select(F.col("file_id").alias("id"))
+    # replay guard: a crash between the assignments and files commits
+    # replays the batch with assignments already updated — without this
+    # exclusion those ids would appear twice.  `already` is the corpus
+    # rows matching the batch's ids (scan + broadcast semi), so the
+    # anti-join itself is small-small.
+    already = old_assign.join(F.broadcast(new_ids), "id", "left_semi")
+    fresh = (
+        new_ids.join(already.select("id"), "id", "left_anti")
+        .join(merge_map.withColumnRenamed("component_id", "_new_c"), "id", "left")
+        .select("id", F.coalesce("_new_c", F.col("id")).alias("component_id"))
+    )
+    assignments = carried.unionByName(fresh)
     store.commit(assignments, "assignments")  # merged table: whole rewrite
     store.append(new_files, "files", delta)   # commits LAST (replay anchor)
     n_entities = store.load("assignments").select("component_id").distinct().count()
     lineage.log("stream.batch", new_files=n_new, new_match_pairs=n_pairs,
                 entities=n_entities)
-    for df in (new_matches, new_files, all_files, *to_unpersist):
+    for df in (new_matches, new_files, all_files, touched):
         df.unpersist(blocking=False)
     return {"new_files": n_new, "new_pairs": n_pairs, "total_entities": n_entities}
 

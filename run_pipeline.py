@@ -7,9 +7,13 @@
 
 ``--input`` is a parquet/Iceberg path with columns
 (repo, path, commit, lang, content) — the engine's input contract
-(BASELINE input_hint).  ``--output`` is the run directory that receives
-stage snapshots (resumable with ``--resume``), lineage events, and final
-entity/assignment tables.
+(BASELINE input_hint) — or a documents-shaped (doc_id, text[, lang,
+source]) table.  ``--output`` is the run directory that receives the stage
+snapshots of ``pipeline.resumable_resolve_files`` (resumable with
+``--resume``; a run without it clears them first), ``lineage_events.jsonl``
+(per-stage rows and ``sec``, the same events ``resolve_files`` logs, plus
+one ``resume.<stage>`` event per snapshot), the ``score_batches`` lineage
+table and ``report.html``.  Prints a one-line JSON summary.
 """
 
 from __future__ import annotations
@@ -29,10 +33,12 @@ def main() -> None:
                     help="local[N] cores (ignored under a real cluster master)")
     args = ap.parse_args()
 
-    from healthcare_entity_resolution_spark.plans.lineage import LineageLog
-    from healthcare_entity_resolution_spark.plans.snapshots import (
+    from healthcare_entity_resolution_spark.pipeline import (
+        CODE_FILE_STAGES,
+        documents_as_files,
         resumable_resolve_files,
     )
+    from healthcare_entity_resolution_spark.plans.lineage import LineageLog
     from healthcare_entity_resolution_spark.session import get_spark
 
     spark = get_spark(app_name="her_pipeline", cores=args.cores)
@@ -43,10 +49,6 @@ def main() -> None:
         if {"doc_id", "text"} <= set(raw.columns):
             # documents-shaped input (the testdata tables): adapt in place
             from pyspark.sql import functions as F
-
-            from healthcare_entity_resolution_spark.pipeline import (
-                documents_as_files,
-            )
 
             for col, default in (("lang", "unknown"), ("source", "docs")):
                 if col not in raw.columns:
@@ -64,7 +66,7 @@ def main() -> None:
         # fresh run: clear prior snapshots so every stage recomputes
         import shutil
 
-        for name in ("files", "pairs", "classified", "assignments"):
+        for name in CODE_FILE_STAGES:
             shutil.rmtree(os.path.join(args.output, name), ignore_errors=True)
 
     out = resumable_resolve_files(spark, raw, args.output, lineage=lineage)

@@ -9,10 +9,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from healthcare_entity_resolution_spark.corpus import generate_files_corpus
+from healthcare_entity_resolution_spark.pipeline import (
+    resolve_files,
+    resumable_resolve_files,
+)
 from healthcare_entity_resolution_spark.plans.snapshots import (
     SnapshotStore,
     anti_join_completed,
-    resumable_resolve_files,
 )
 
 
@@ -64,6 +67,8 @@ def test_resumable_pipeline_matches_and_resumes(spark, run_dir):
     )
     out1 = resumable_resolve_files(spark, files, run_dir)
     a1 = sorted(map(tuple, out1["assignments"].collect()))
+    # one stage sequence: the snapshotted run answers like the in-memory one
+    assert a1 == sorted(map(tuple, resolve_files(spark, files)["assignments"].collect()))
 
     # second run with the same run_dir: every stage must resume, results equal
     from healthcare_entity_resolution_spark.plans.lineage import LineageLog
@@ -75,6 +80,7 @@ def test_resumable_pipeline_matches_and_resumes(spark, run_dir):
     resume_flags = {e["stage"]: e["resumed"] for e in lin.events
                     if e["stage"].startswith("resume.")}
     assert all(resume_flags.values()), resume_flags
+    assert not [e for e in lin.events if e["stage"] == "cc.converged"]
 
     # partial resume: drop the final snapshot only -> earlier stages resume,
     # final stage recomputes to the same answer

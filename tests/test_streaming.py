@@ -54,6 +54,17 @@ def test_micro_batches_converge_to_batch_answer(spark, corpus, tmp_path):
     shutil.rmtree(run_dir, ignore_errors=True)
 
 
+def test_null_lineage_keeps_no_events(spark, corpus, tmp_path):
+    """Runs that pass no log write to the shared null sink, which must keep
+    nothing (a long-lived process would otherwise grow without bound)."""
+    from healthcare_entity_resolution_spark.plans.lineage import NULL_LINEAGE
+
+    resolve_files(spark, corpus)
+    store = SnapshotStore(spark, str(tmp_path / "null_sink_state"))
+    assert micro_batch_resolve(spark, corpus, store)["new_files"] > 0
+    assert NULL_LINEAGE.events == []
+
+
 def test_keys_commit_idempotent_under_crash_replay(spark, corpus, tmp_path):
     """Crash window: keys committed but files not yet — replaying the batch
     must not duplicate (_id, _bk) rows in the keys snapshot (the files-side
