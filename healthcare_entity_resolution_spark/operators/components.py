@@ -19,10 +19,18 @@ minimum member id (deterministic).
 
 Works over any orderable id type; the pipeline feeds LongType ids for
 shuffle efficiency at scale.
+
+:func:`driver_connected_components` is the same semantics as an in-driver
+numpy kernel over an Arrow edge list, for graphs whose size a caller has
+already bounded (the micro-batch's contracted graph): it costs no Spark job.
+Unbounded graphs stay on the distributed version.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -111,6 +119,68 @@ def connected_components(
         .select(id_col, F.coalesce("component_id", F.col(id_col)).alias("component_id"))
     )
     return out
+
+
+def driver_connected_components(
+    edges: pa.Table, lineage: LineageLog = NULL_LINEAGE
+) -> pa.Table:
+    """:func:`connected_components` (no ``vertices``) as a numpy kernel in
+    the driver: Arrow ``(id_1, id_2)`` edges in, an Arrow table
+    ``(id, component_id)`` over their endpoints out, component id = minimum
+    member id.  Self-loops and rows with a NULL endpoint add nothing, as in
+    the distributed version.
+
+    Ids are sorted (pyarrow ``sort_indices``: byte order for strings, as
+    Spark compares them; numeric order for integers) and replaced by their
+    rank, so the minimum code is the minimum id.  The labels are a min-label
+    union-find: each round hooks every edge's two roots to the smaller one
+    (``np.minimum.at``) and pointer-jumps every vertex to its root, until
+    both ends of every edge share a root.  ``cc.converged`` logs the rounds
+    and ``star_edges`` = non-root vertices, the edge count the distributed
+    run converges to.
+
+    Memory is O(E) and the caller bounds E: the micro-batch's contracted
+    graph has at most as many edges as the batch's new match edges, and at
+    most two vertices per edge plus the new files.  Envelope (Spark
+    ``toArrow()`` collect + this kernel, one core of a shared 4-core x86
+    host): 1M edges over 714k 64-character string ids collect as a 136 MB
+    Arrow table in ~1.0 s; the kernel takes ~1.2 s (5 rounds), peaks at
+    434 MB of Arrow memory (collect included) plus 73 MB of numpy arrays,
+    and returns a 97 MB table; the driver's Python process peaked at
+    685 MB RSS.
+    """
+    keep = pc.fill_null(pc.not_equal(edges["id_1"], edges["id_2"]), False)
+    e = edges.filter(keep)
+    m = e.num_rows
+    ends = pa.chunked_array(
+        e["id_1"].chunks + e["id_2"].chunks, type=edges.schema.field("id_1").type
+    ).combine_chunks().dictionary_encode()
+    order = pc.sort_indices(ends.dictionary).to_numpy()
+    n = len(order)
+    rank = np.empty(n, dtype=np.int64)
+    rank[order] = np.arange(n)
+    codes = rank[ends.indices.to_numpy()]
+    s, d = codes[:m], codes[m:]
+
+    lab = np.arange(n)
+    rounds = 0
+    while True:
+        rounds += 1
+        ls, ld = lab[s], lab[d]
+        if np.array_equal(ls, ld):
+            break
+        low = np.minimum(ls, ld)
+        np.minimum.at(lab, ls, low)
+        np.minimum.at(lab, ld, low)
+        while True:
+            nxt = lab[lab]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
+    lineage.log("cc.converged", iterations=rounds,
+                star_edges=int(np.count_nonzero(lab != np.arange(n))))
+    ids = ends.dictionary.take(order)
+    return pa.table({"id": ids, "component_id": ids.take(lab)})
 
 
 def cluster_sizes(assignments: DataFrame) -> DataFrame:

@@ -13,10 +13,13 @@ resolves each micro-batch against the accumulated corpus via
 4. score + classify the new pairs through the batch pipeline's scoring
    stage (``pipeline.classify_code_pairs``);
 5. merge new match edges into the edge snapshot and update assignments
-   INCREMENTALLY: committed components are contracted to single nodes and
-   connected components runs over the contracted batch graph only —
-   per-batch clustering cost is O(batch edges), not O(corpus).  The first
-   batch takes the same path against an empty committed table;
+   INCREMENTALLY, in the driver: the batch's match edges and the slice of
+   the committed assignments they touch are collected as Arrow (both
+   bounded by the batch), committed components are contracted to single
+   nodes, and ``components.driver_connected_components`` labels the
+   contracted batch graph — per-batch clustering cost is O(batch edges),
+   not O(corpus), and costs no Spark job.  The first batch takes the same
+   path against an empty committed table;
 6. commit updated snapshots atomically (SnapshotStore) — files / keys /
    edges as O(batch) APPEND deltas keyed by the foreachBatch epoch (a
    replayed epoch is a delta-level no-op), the merged assignments table as
@@ -32,6 +35,8 @@ source offsets.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,6 +48,15 @@ from ..operators import normalize as N
 from ..pipeline import classify_code_pairs
 from ..plans.lineage import NULL_LINEAGE, LineageLog
 from ..plans.snapshots import SnapshotStore
+
+ASSIGN_SCHEMA = "id string, component_id string"
+
+
+def _lookup(ids: pa.ChunkedArray, assign: pa.Table) -> pa.Array:
+    """Each id's ``component_id`` in ``assign``, or the id itself when it
+    has none."""
+    pos = pc.index_in(ids, value_set=assign["id"])
+    return pc.coalesce(assign["component_id"].take(pos), ids)
 
 
 def micro_batch_resolve(
@@ -65,8 +79,25 @@ def micro_batch_resolve(
     already-committed deltas are skipped wholesale; direct (batch-mode)
     callers may omit it — the id is then derived from the files snapshot,
     which commits LAST, so a half-committed batch replays under the same
-    derived id and the per-row anti-join guards below still apply."""
+    derived id and the per-row anti-join guards below still apply.
+
+    A file repeated within the batch is ingested once (the row with the
+    smallest ``content_sha`` is kept).  Clustering runs in the driver over
+    two Arrow collects bounded by the batch (module docstring, step 5); the
+    remap of merged components and the fresh files' assignments go back as
+    local relations, so the assignments rewrite is one corpus scan, one
+    broadcast join and one write."""
     new_files = N.normalize_files(new_raw)
+    # one row per file_id: a batch that repeats a file would otherwise be
+    # ingested and assigned twice.  The kept row is the minimum over
+    # (content_sha, every other column), so the choice is deterministic.
+    rest = [c for c in new_files.columns if c not in ("file_id", "content_sha")]
+    new_files = (
+        new_files.groupBy("file_id")
+        .agg(F.min(F.struct("content_sha", *rest)).alias("_row"))
+        .select("file_id", "_row.*")
+        .select(*new_files.columns)
+    )
     if store.exists("files"):
         old_files = store.load("files")
         # idempotence: drop rows already ingested (exactly-once on replays)
@@ -78,7 +109,9 @@ def micro_batch_resolve(
         all_files = new_files
     all_files = all_files.persist()
     new_files = new_files.persist()
-    n_new = new_files.count()
+    # the batch's file ids, collected once (this action fills the cache)
+    new_ids = new_files.select(F.col("file_id").alias("id")).toArrow().column("id")
+    n_new = len(new_ids)
     if n_new == 0 and store.exists("files"):
         # whole-batch replay of an already-ingested batch: nothing to do
         n_entities = (
@@ -145,65 +178,54 @@ def micro_batch_resolve(
     new_matches = C.confirmed_matches(
         classify_code_pairs(all_files, cand, cfg), cfg
     ).select("id_1", "id_2").persist()
-    n_pairs = new_matches.count()
+    edges = new_matches.toArrow()  # fills the cache the append reads
+    n_pairs = edges.num_rows
 
     # new-vs-all pairing with a genuinely-new side means a new match edge
     # can never already exist in the snapshot — appends are disjoint by
     # construction, no cross-delta dedup needed
     store.append(new_matches, "edges", delta)
 
-    # incremental CC: contract committed components to single nodes and run
-    # CC over the CONTRACTED batch graph only — O(batch) edges, not
+    # incremental CC in the driver: contract committed components to single
+    # nodes and label the CONTRACTED batch graph only — O(batch) edges, not
     # O(corpus).  Valid because edge addition can only MERGE components,
     # old component ids are min member ids, and min over merged components
     # is the min of their contracted ids; untouched components (absent from
     # the contracted graph) keep their assignment verbatim.
-    # Join discipline for everything touching the corpus-sized old_assign:
-    # filter the corpus by the BROADCAST batch first (a scan, no exchange),
-    # then join small-small.  A naive new_matches LEFT JOIN old_assign
-    # cannot broadcast (left-outer builds right), so it would exchange the
-    # corpus on id every batch.  A first batch contracts against an empty
-    # committed table; limit(0) makes it an empty LocalRelation, so the
-    # optimizer prunes every join on it instead of running their stages.
+    # The committed assignments are read twice, each time as one corpus
+    # scan against a BROADCAST local relation (never an exchange of the
+    # corpus): once for the slice of ids the batch touches, once for the
+    # rewrite.  A first batch contracts against an empty committed table;
+    # limit(0) makes it an empty LocalRelation the optimizer prunes.
     old_assign = (
         store.load("assignments") if store.exists("assignments")
-        else spark.createDataFrame([], "id string, component_id string").limit(0)
+        else spark.createDataFrame([], ASSIGN_SCHEMA).limit(0)
     )
-    batch_ids = (
-        new_matches.select(F.col("id_1").alias("id"))
-        .unionByName(new_matches.select(F.col("id_2").alias("id")))
-        .distinct()
-    )
-    # batch-bounded slice of the committed assignments: one corpus scan
-    touched = old_assign.join(F.broadcast(batch_ids), "id", "left_semi").persist()
-    m1 = touched.select(F.col("id").alias("id_1"), F.col("component_id").alias("_c1"))
-    m2 = touched.select(F.col("id").alias("id_2"), F.col("component_id").alias("_c2"))
-    contracted = (
-        new_matches.join(m1, "id_1", "left").join(m2, "id_2", "left")
-        .select(
-            F.coalesce("_c1", F.col("id_1")).alias("id_1"),
-            F.coalesce("_c2", F.col("id_2")).alias("id_2"),
-        )
-    )
-    merge_map = G.connected_components(contracted, cfg=cfg, lineage=lineage)
-    # remap is bounded by the contracted batch graph — broadcast-safe
-    remap = merge_map.select(
-        F.col("id").alias("component_id"), F.col("component_id").alias("_new_c")
-    )
+    probe = pc.unique(pa.chunked_array(
+        edges.column("id_1").chunks + edges.column("id_2").chunks + new_ids.chunks,
+        type=new_ids.type,
+    ))
+    prior = old_assign.join(
+        F.broadcast(spark.createDataFrame(pa.table({"id": probe}), "id string")),
+        "id", "left_semi",
+    ).toArrow()
+    labels = G.driver_connected_components(pa.table({
+        "id_1": _lookup(edges.column("id_1"), prior),
+        "id_2": _lookup(edges.column("id_2"), prior),
+    }), lineage)
+    moved = labels.filter(pc.not_equal(labels["id"], labels["component_id"]))
+    remap = spark.createDataFrame(moved.rename_columns(["component_id", "_new_c"]),
+                                  "component_id string, _new_c string")
     carried = old_assign.join(F.broadcast(remap), "component_id", "left").select(
         "id", F.coalesce("_new_c", F.col("component_id")).alias("component_id")
     )
-    new_ids = new_files.select(F.col("file_id").alias("id"))
     # replay guard: a crash between the assignments and files commits
-    # replays the batch with assignments already updated — without this
-    # exclusion those ids would appear twice.  `already` is the corpus
-    # rows matching the batch's ids (scan + broadcast semi), so the
-    # anti-join itself is small-small.
-    already = old_assign.join(F.broadcast(new_ids), "id", "left_semi")
-    fresh = (
-        new_ids.join(already.select("id"), "id", "left_anti")
-        .join(merge_map.withColumnRenamed("component_id", "_new_c"), "id", "left")
-        .select("id", F.coalesce("_new_c", F.col("id")).alias("component_id"))
+    # replays the batch with assignments already updated — ids already in
+    # the committed table are carried, never added twice
+    fresh_ids = new_ids.filter(pc.invert(pc.is_in(new_ids, value_set=prior["id"])))
+    fresh = spark.createDataFrame(
+        pa.table({"id": fresh_ids, "component_id": _lookup(fresh_ids, labels)}),
+        ASSIGN_SCHEMA,
     )
     assignments = carried.unionByName(fresh)
     store.commit(assignments, "assignments")  # merged table: whole rewrite
@@ -211,7 +233,7 @@ def micro_batch_resolve(
     n_entities = store.load("assignments").select("component_id").distinct().count()
     lineage.log("stream.batch", new_files=n_new, new_match_pairs=n_pairs,
                 entities=n_entities)
-    for df in (new_matches, new_files, all_files, touched):
+    for df in (new_matches, new_files, all_files):
         df.unpersist(blocking=False)
     return {"new_files": n_new, "new_pairs": n_pairs, "total_entities": n_entities}
 

@@ -3,13 +3,23 @@
 import random
 
 import networkx as nx
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from healthcare_entity_resolution_spark.operators.components import (
     assign_cluster_labels,
     connected_components,
+    driver_connected_components,
 )
+from healthcare_entity_resolution_spark.plans.lineage import LineageLog
+
+
+def _random_edges(seed, n, m):
+    rng = random.Random(seed)
+    nodes = [f"n{i:03d}" for i in range(n)]
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(m)]
+    return nodes, [(a, b) for a, b in edges if a != b]
 
 
 def _spark_cc(spark, edges, vertices=None):
@@ -29,10 +39,7 @@ def _spark_cc(spark, edges, vertices=None):
 
 @pytest.mark.parametrize("seed,n,m", [(1, 30, 20), (2, 50, 60), (3, 80, 40), (4, 25, 200)])
 def test_cc_matches_networkx_random_graphs(spark, seed, n, m):
-    rng = random.Random(seed)
-    nodes = [f"n{i:03d}" for i in range(n)]
-    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(m)]
-    edges = [(a, b) for a, b in edges if a != b]
+    nodes, edges = _random_edges(seed, n, m)
     g = nx.Graph()
     g.add_nodes_from(nodes)
     g.add_edges_from(edges)
@@ -57,6 +64,42 @@ def test_cc_chain_long_diameter(spark):
 def test_cc_isolated_vertices_are_singletons(spark):
     got, _ = _spark_cc(spark, [("a", "b")], vertices=["a", "b", "c", "d"])
     assert got == {frozenset({"a", "b"}), frozenset({"c"}), frozenset({"d"})}
+
+
+PINNED_GRAPHS = {
+    **{f"random-{s}-{n}-{m}": _random_edges(s, n, m)[1]
+       for s, n, m in [(1, 30, 20), (2, 50, 60), (3, 80, 40), (4, 25, 200)]},
+    "chain-40": list(zip([f"p{i:02d}" for i in range(40)],
+                         [f"p{i:02d}" for i in range(1, 40)])),
+    # string order is not numeric order: "10" < "9", "100" < "11"
+    "lexicographic": [("9", "10"), ("10", "100"), ("11", "2"), ("2", "100"),
+                      ("7", "8"), ("80", "8"), ("5", "5")],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("name", sorted(PINNED_GRAPHS))
+def test_driver_cc_equals_distributed(spark, name):
+    """The in-driver kernel and the distributed large-star/small-star run
+    give the same (id, component_id) rows and converge to the same number
+    of star edges (non-root vertices)."""
+    edges = PINNED_GRAPHS[name]
+    edf = spark.createDataFrame(edges, "id_1 string, id_2 string")
+    dist_log, local_log = LineageLog(), LineageLog()
+    dist = sorted(map(tuple, connected_components(edf, lineage=dist_log).collect()))
+    local = driver_connected_components(
+        pa.table({"id_1": pa.array([a for a, _ in edges], pa.string()),
+                  "id_2": pa.array([b for _, b in edges], pa.string())}),
+        local_log,
+    )
+    assert sorted(zip(local["id"].to_pylist(),
+                      local["component_id"].to_pylist())) == dist
+
+    def star_edges(log):
+        return [e["star_edges"] for e in log.events if e["stage"] == "cc.converged"]
+
+    assert star_edges(local_log) == star_edges(dist_log)
+    assert len(star_edges(dist_log)) == 1
 
 
 def test_cluster_labels_by_size_desc(spark):

@@ -188,6 +188,65 @@ def test_incremental_cc_tracks_batch_size(spark, corpus, tmp_path):
     _sh.rmtree(run_dir, ignore_errors=True)
 
 
+def test_repeated_rows_in_a_batch_assign_each_file_once(spark, tmp_path):
+    """A batch that repeats a file row ingests and assigns that file once:
+    new_files is the distinct count and the result equals the
+    de-duplicated batch's.  Of two rows with one file_id but different
+    content, the one with the smaller content_sha is kept."""
+    import hashlib
+
+    import pandas as pd
+
+    pdf, _ = generate_files_corpus(n_entities=10, seed=3)
+    rows = pdf[COLS].reset_index(drop=True)
+    other = rows.iloc[[3]].assign(content="def changed():\n    return 1\n")
+    batch = pd.concat([rows, rows.iloc[[0, 1, 2]], other])
+
+    def sha(text):
+        return hashlib.sha256(text.encode()).hexdigest()
+
+    if sha(other["content"].iloc[0]) < sha(rows["content"].iloc[3]):
+        rows.iloc[3] = other.iloc[0]  # the row the batch should keep
+    n_distinct = len(rows)
+
+    store = SnapshotStore(spark, str(tmp_path / "repeated_state"))
+    stats = micro_batch_resolve(spark, spark.createDataFrame(batch), store)
+    assert stats["new_files"] == n_distinct
+    assert store.load("files").count() == n_distinct
+    ids = [r["id"] for r in store.load("assignments").collect()]
+    assert len(ids) == len(set(ids)) == n_distinct
+
+    ref = SnapshotStore(spark, str(tmp_path / "deduplicated_state"))
+    ref_stats = micro_batch_resolve(spark, spark.createDataFrame(rows), ref)
+    assert stats == ref_stats
+    assert _norm_assign(store.load("assignments")) == _norm_assign(
+        ref.load("assignments"))
+    cols = ["file_id", "content_sha"]
+    assert sorted(map(tuple, store.load("files").select(cols).collect())) == \
+        sorted(map(tuple, ref.load("files").select(cols).collect()))
+
+
+def test_micro_batch_job_count(spark, corpus, tmp_path):
+    """A warm micro-batch contracts and labels its component graph in the
+    driver, so the batch runs no connected-components jobs.  On this corpus
+    and split the second batch ran 77 Spark jobs when the contracted graph
+    went through the distributed large-star/small-star loop and 32 with
+    the in-driver kernel; the bound is 0.6x the former."""
+    store = SnapshotStore(spark, str(tmp_path / "jobs_state"))
+    wave = F.abs(F.xxhash64("repo", "path", "commit")) % 4
+    micro_batch_resolve(spark, corpus.where(wave != 0), store)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("test-micro-batch-jobs", "micro-batch job shape")
+    try:
+        stats = micro_batch_resolve(spark, corpus.where(wave == 0), store)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats["new_files"] > 0 and stats["new_pairs"] > 0
+    jobs = sc.statusTracker().getJobIdsForGroup("test-micro-batch-jobs")
+    assert 1 <= len(jobs) <= int(0.6 * 77), len(jobs)
+
+
 def test_stateful_first_seen_dedup(spark, tmp_path):
     """applyInPandasWithState first-seen dedup: state persists across
     micro-batches (maxFilesPerTrigger=1 forces two batches); re-arrivals
