@@ -71,18 +71,16 @@ def connected_components(
     vertices: DataFrame | None = None,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     lineage: LineageLog = NULL_LINEAGE,
-    src: str = "id_1",
-    dst: str = "id_2",
-    id_col: str = "id",
 ) -> DataFrame:
-    """Returns assignments ``(id, component_id)``; component_id = min member.
+    """Edges ``(id_1, id_2)`` in; returns assignments ``(id, component_id)``,
+    component_id = min member.
 
-    ``vertices`` (optional, single column ``id_col``) adds isolated nodes as
+    ``vertices`` (optional, single column ``id``) adds isolated nodes as
     singleton components — matching the reference graph, whose nodes are all
     records, edges only confirmed matches (graph/builder.py:28-68).
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
-        F.col(src) != F.col(dst)
+    e = edges.select(F.col("id_1").alias("u"), F.col("id_2").alias("v")).where(
+        F.col("u") != F.col("v")
     ).distinct()
 
     prev_sig: tuple | None = None
@@ -110,15 +108,12 @@ def connected_components(
     else:
         lineage.log("cc.max_iterations_hit", iterations=cfg.cc_max_iterations)
 
-    assign = cur.select(F.col("u").alias(id_col), F.col("v").alias("component_id"))
+    assign = cur.select(F.col("u").alias("id"), F.col("v").alias("component_id"))
     # roots (and edge-endpoints that appear only as targets) map to themselves
-    endpoints = e.select(F.col("u").alias(id_col)).union(e.select(F.col("v").alias(id_col))).distinct()
-    base = vertices.select(F.col(id_col)).distinct() if vertices is not None else endpoints
-    out = (
-        base.join(assign, id_col, "left")
-        .select(id_col, F.coalesce("component_id", F.col(id_col)).alias("component_id"))
-    )
-    return out
+    endpoints = e.select(F.col("u").alias("id")).union(e.select(F.col("v").alias("id"))).distinct()
+    base = vertices.select("id").distinct() if vertices is not None else endpoints
+    return base.join(assign, "id", "left").select(
+        "id", F.coalesce("component_id", "id").alias("component_id"))
 
 
 def driver_connected_components(

@@ -21,29 +21,38 @@ oversized components), exact removed-edge set may differ (accepted per
 SURVEY.md §7 "Hard parts").  Every G6/G7/G8 decision depends only on the
 component an edge sits in, so components can be pruned independently.
 
+G8 has one implementation, the per-component ``applyInPandas`` kernel
+(:func:`_component_kernel`): optionally G6 replayed in memory, then G8's
+weak bridges with networkx on each piece, and a label for every surviving
+edge — the minimum member id of its piece after pruning, the id
+:func:`connected_components` would give it.  :func:`prune_weak_bridges` is
+one connected-components run plus that kernel.
+
 :func:`full_pruning` runs ONE corpus-wide connected components over the
 G5-filtered edges and splits the components by size:
 
 - components of at most ``max_cluster_size`` nodes (bounded; on physician
-  data, all of them) go through one ``groupBy("component_id")
-  .applyInPandas`` pass that replays G6's rounds in memory and then finds
-  G8's weak bridges with networkx — one Spark stage, however many rounds
-  or edges a component needs.  G7 has nothing to do there: G6 only splits
-  components, so none outgrows the cap.
+  data, all of them) go through the kernel with G6 on — one Spark stage,
+  however many rounds or edges a component needs.  G7 has nothing to do
+  there: G6 only splits components, so none outgrows the cap.
 - larger components (unbounded, so not safe to pull into one Python
   worker) keep the distributed loops on their own edges: each
   ``prune_id_conflicts`` / ``prune_oversized_clusters`` round is joins + a
   per-component window ``row_number() = 1`` pick of the weakest qualifying
   edge, an anti-join removal, and a connected-components re-run over ONLY
-  the components that lost an edge.  A ``limit(1)`` probe skips them when
-  no component is that large.
+  the components that lost an edge.  G7 leaves every component within the
+  cap, so G8 then runs the same kernel (G6 off) over G7's components.  A
+  ``limit(1)`` probe skips this path when no component is that large.
 
-Components shrink monotonically, the distributed loops checkpoint through
-:func:`connected_components`, and every removal count is written to
-lineage (never silent).
+The kernel's labels give the final clustering (G4) without a second
+connected-components run.  Components shrink monotonically, the
+distributed loops checkpoint through :func:`connected_components`, and
+every removal count is written to lineage (never silent).
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -228,60 +237,27 @@ def prune_oversized_clusters(
     return (cur, assign) if return_assignments else cur
 
 
-_BRIDGE_SCHEMA = "id_1 string, id_2 string"
-
-
-def _weak_bridge_pairs(edges: pd.DataFrame, threshold: float) -> list[tuple]:
-    """G8 for the edge rows of ONE connected component: its bridges weighing
-    less than ``threshold``, each normalized to ``(id_1, id_2)`` with
-    ``id_1 < id_2``."""
-    import networkx as nx
-
-    # reference skips clusters of <=2 NODES (pruning.py:147); for a
-    # connected component <=1 edge <=> <=2 nodes, so the edge-count
-    # guard is exactly equivalent
-    if len(edges) < 2:
-        return []
-    g = nx.Graph()
-    for u, v, w in zip(edges["id_1"], edges["id_2"], edges["weight"]):
-        g.add_edge(u, v, weight=w)
-    return [(min(u, v), max(u, v)) for u, v in nx.bridges(g) if g[u][v]["weight"] < threshold]
-
-
 def prune_weak_bridges(
     edges: DataFrame,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     lineage: LineageLog = NULL_LINEAGE,
     threshold: float | None = None,
-    assignments: DataFrame | None = None,
 ) -> DataFrame:
     """G8: drop bridge edges with weight < threshold (pruning.py:139-169).
 
-    Bridges are found per component with networkx inside ``applyInPandas`` —
-    components are bounded (≤ max_cluster_size after G7) so each group is a
-    tiny in-memory graph; the stage parallelizes across components.
-
-    ``assignments`` (id -> component_id for exactly these edges, e.g. G7's
-    final map) skips the corpus-wide connected-components run — one full CC
-    saved per full_pruning pipeline.
+    One connected-components run groups the edges by component; each group
+    goes through :func:`_component_kernel` (networkx bridges inside
+    ``applyInPandas``).  Components must be bounded (≤ max_cluster_size
+    after G7), so each group is a tiny in-memory graph; the stage
+    parallelizes across components.  Returns the surviving
+    ``(id_1, id_2, weight)`` rows.
     """
     t = cfg.min_edge_weight if threshold is None else threshold
-    reused = assignments is not None
-    assign = (
-        assignments
-        if reused
-        else connected_components(edges.select("id_1", "id_2"), cfg=cfg, lineage=lineage)
-    )
-    lineage.log("prune.weak_bridges", reused_assignments=reused)
-    e = edges.join(assign.withColumnRenamed("id", "id_1"), "id_1").select(
-        "component_id", "id_1", "id_2", "weight"
-    )
-
-    def weak_bridges(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(_weak_bridge_pairs(pdf, t), columns=["id_1", "id_2"])
-
-    found = e.groupBy("component_id").applyInPandas(weak_bridges, schema=_BRIDGE_SCHEMA)
-    return edges.join(found, ["id_1", "id_2"], "left_anti")
+    e = edges.select(*_EDGE_COLS)
+    assign = connected_components(e.select("id_1", "id_2"), cfg=cfg, lineage=lineage)
+    lineage.log("prune.weak_bridges", reused_assignments=False)
+    return _prune_components(_by_component(e, assign),
+                             _component_kernel(t)).select(*_EDGE_COLS)
 
 
 def _replay_id_conflicts(pdf: pd.DataFrame, max_iterations: int) -> pd.DataFrame:
@@ -326,28 +302,54 @@ def _replay_id_conflicts(pdf: pd.DataFrame, max_iterations: int) -> pd.DataFrame
     return pdf[[p not in removed for p in pairs]]
 
 
-def _bounded_component_kernel(threshold: float, resolve_conflicts: bool,
-                              max_iterations: int):
-    """``applyInPandas`` body of :func:`full_pruning` for one component of at
-    most ``max_cluster_size`` nodes: G6 (when enabled), then G8 on each
-    sub-component G6 left.  G7 never fires here — G6 only splits."""
+def _component_kernel(threshold: float, id_conflict_rounds: int = 0):
+    """``applyInPandas`` body for one component of at most
+    ``max_cluster_size`` nodes: G6 in up to ``id_conflict_rounds`` rounds
+    (0 = no G6, as in the distributed loop; the rows then need no
+    ``aid_1, aid_2``), then G8 on each piece G6 left: its bridges weighing
+    less than ``threshold``, matched to rows as ``(id_1, id_2)`` with
+    ``id_1 < id_2``.  G7 never fires here (G6 only splits).  Returns the
+    surviving edges, each labelled with the ``component_id`` of its piece
+    after pruning: its minimum member id, as :func:`connected_components`
+    labels it."""
     import networkx as nx
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        kept = _replay_id_conflicts(pdf, max_iterations) if resolve_conflicts else pdf
-        parts = [kept]
-        if len(kept) < len(pdf):
-            # G6 split the component; G8 judges each piece on its own rows,
-            # grouped by id_1's component as prune_weak_bridges groups them
-            g = nx.Graph()
-            g.add_edges_from(zip(kept["id_1"], kept["id_2"]))
-            comp = {n: i for i, c in enumerate(nx.connected_components(g)) for n in c}
-            parts = [p for _, p in kept.groupby(kept["id_1"].map(comp))]
-        weak = {pair for p in parts for pair in _weak_bridge_pairs(p, threshold)}
-        keep = [(u, v) not in weak for u, v in zip(kept["id_1"], kept["id_2"])]
-        return kept.loc[keep, _EDGE_COLS]
+        kept = _replay_id_conflicts(pdf, id_conflict_rounds) if id_conflict_rounds else pdf
+        pairs = list(zip(kept["id_1"], kept["id_2"]))
+        g = nx.Graph()
+        for (u, v), w in zip(pairs, kept["weight"]):
+            g.add_edge(u, v, weight=w)
+        piece = {n: i for i, c in enumerate(nx.connected_components(g)) for n in c}
+        rows = Counter(piece[u] for u, _ in pairs)
+        # bridges are per piece; the reference skips clusters of <=2 NODES
+        # (pruning.py:147), and for a connected piece <=1 edge <=> <=2
+        # nodes, so the row-count guard is exactly equivalent
+        weak = {(min(u, v), max(u, v)) for u, v in nx.bridges(g)
+                if g[u][v]["weight"] < threshold and rows[piece[u]] > 1}
+        out = [(u, v, w) for (u, v), w in zip(pairs, kept["weight"]) if (u, v) not in weak]
+        survivors = nx.Graph()
+        survivors.add_edges_from((u, v) for u, v, _ in out)
+        label = {n: min(c) for c in nx.connected_components(survivors) for n in c}
+        return pd.DataFrame([(*row, label[row[0]]) for row in out],
+                            columns=[*_EDGE_COLS, "component_id"])
 
     return prune
+
+
+def _by_component(edges: DataFrame, assign: DataFrame) -> DataFrame:
+    """Tag each edge with its id_1's ``component_id``.  A node whose only
+    edges are self-loops has no component; its self-loops form a group of
+    their own (and are never cut)."""
+    return edges.join(assign.withColumnRenamed("id", "id_1"), "id_1", "left").withColumn(
+        "component_id", F.coalesce("component_id", "id_1"))
+
+
+def _prune_components(tagged: DataFrame, kernel) -> DataFrame:
+    """Run ``kernel`` over each ``component_id`` group of ``tagged``.  The
+    output schema is derived from the input, so ids keep their type."""
+    schema = tagged.select(*_EDGE_COLS, "component_id").schema
+    return tagged.groupBy("component_id").applyInPandas(kernel, schema=schema)
 
 
 def full_pruning(
@@ -355,16 +357,20 @@ def full_pruning(
     node_ids: DataFrame,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     lineage: LineageLog = NULL_LINEAGE,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """G9 (pruning.py:172-210): G5 at 0.75·min_edge_weight -> G6 -> G7 -> G8
-    at min_edge_weight.  Returns the pruned edge set (``node_ids`` holds one
-    ``(id, auth_id)`` row per node).
+    at min_edge_weight, then G4.  ``node_ids`` holds one ``(id, auth_id)``
+    row per node.  Returns ``(edges, assignments)``: the pruned edge set
+    and ``(id, component_id)`` for every ``node_ids`` id, equal to
+    ``connected_components(edges, vertices=node_ids.select("id"))``.
 
     One connected-components run over the G5 edges splits the work:
     components of at most ``max_cluster_size`` nodes are pruned in memory by
-    one grouped pandas pass; larger ones run the distributed G6 -> G7 -> G8
-    loops on their own edges.  Components are pruned independently, so the
-    result equals running the distributed loops over every edge.
+    one grouped pandas pass; larger ones run the distributed G6 -> G7 loops
+    on their own edges, and then the same pass (G8 only) over G7's
+    components.  Components are pruned independently, so the result equals
+    running the distributed loops over every edge, and the pass labels the
+    pieces that survive, so no second connected-components run is needed.
     """
     n0 = edges.count()
     e = prune_low_confidence_edges(edges, cfg.min_edge_weight * 0.75).select(*_EDGE_COLS)
@@ -372,18 +378,14 @@ def full_pruning(
     sizes = assign.groupBy("component_id").agg(F.count("*").alias("_n"))
     aid = node_ids.select("id", "auth_id")
     tagged = _checkpoint(
-        e.join(assign.withColumnRenamed("id", "id_1"), "id_1", "left")
-        # a node whose only edges are self-loops has no component; its
-        # self-loops form a group of their own (and are never cut)
-        .withColumn("component_id", F.coalesce("component_id", "id_1"))
+        _by_component(e, assign)
         .join(sizes, "component_id", "left")
         .join(aid.toDF("id_1", "aid_1"), "id_1", "left")
         .join(aid.toDF("id_2", "aid_2"), "id_2", "left")
     )
     bounded = F.coalesce("_n", F.lit(0)) <= cfg.max_cluster_size
-    kernel = _bounded_component_kernel(
-        cfg.min_edge_weight, cfg.prune_id_conflicts, _ID_CONFLICT_ITERATIONS)
-    out = tagged.where(bounded).groupBy("component_id").applyInPandas(kernel, schema=e.schema)
+    out = _prune_components(tagged.where(bounded), _component_kernel(
+        cfg.min_edge_weight, _ID_CONFLICT_ITERATIONS if cfg.prune_id_conflicts else 0))
     lineage.log("prune.weak_bridges", reused_assignments=True)
 
     has_large = tagged.where(~bounded).limit(1).count() > 0
@@ -392,9 +394,14 @@ def full_pruning(
         if cfg.prune_id_conflicts:
             big = prune_id_conflicts(big, node_ids, cfg, lineage, _ID_CONFLICT_ITERATIONS)
         big, big_assign = prune_oversized_clusters(big, cfg, lineage, return_assignments=True)
-        out = out.unionByName(prune_weak_bridges(big, cfg, lineage, assignments=big_assign))
+        out = out.unionByName(_prune_components(
+            _by_component(big, big_assign), _component_kernel(cfg.min_edge_weight)))
     out = _checkpoint(out)
     n1 = out.count()
     lineage.log("prune.done", edges_before=n0, edges_after=n1, removed=n0 - n1,
                 large_components=has_large)
-    return out
+    ends = out.select(F.col("id_1").alias("id"), "component_id").union(
+        out.select(F.col("id_2").alias("id"), "component_id")).distinct()
+    assignments = node_ids.select("id").distinct().join(ends, "id", "left").select(
+        "id", F.coalesce("component_id", "id").alias("component_id"))
+    return out.select(*_EDGE_COLS), assignments

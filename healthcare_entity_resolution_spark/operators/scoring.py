@@ -195,21 +195,6 @@ def _canon_specialty(s: str | None) -> str | None:
     return _REF_SPECIALTY_CANON.get(u, u)
 
 
-def _name_sim_full(n1: str | None, n2: str | None) -> float:
-    """F2 (similarity.py:14-45): 0.4·JW + 0.4·token_sort + 0.2·partial."""
-    if not n1 or not n2:
-        return 0.0
-    a, b = n1.upper().strip(), n2.upper().strip()
-    if a == b:
-        return 1.0
-    return min(
-        0.4 * strsim.jaro_winkler_similarity(a, b)
-        + 0.4 * strsim.token_sort_ratio(a, b)
-        + 0.2 * strsim.partial_ratio(a, b),
-        1.0,
-    )
-
-
 def _first_sim(f1: str | None, f2: str | None) -> float:
     """F3 (similarity.py:48-67): missing->0.5 neutral, initial-prefix->0.8."""
     if not f1 or not f2:

@@ -191,8 +191,9 @@ def resolve_physicians(
 ) -> dict[str, DataFrame]:
     """Reference-parity flagship (§3.1, pipeline.py:23-152): normalized
     records -> blocking -> scoring -> classify -> graph+weights -> full
-    pruning (G5-G9) -> CC -> canonical entities + confidences -> referral
-    network + PageRank -> reports.
+    pruning (G5-G9, which also returns the clustering, so no separate CC
+    run) -> canonical entities + confidences -> referral network +
+    PageRank -> reports.
 
     ``records`` is the union of normalized sources (operators/normalize.py);
     ``referrals`` (optional) has (referring_npi, receiving_npi,
@@ -220,12 +221,8 @@ def resolve_physicians(
     edges = GR.build_edges(records, matches, cfg)
     node_ids = records.select(F.col("source_id").alias("id"),
                               F.col("npi").alias("auth_id"))
-    pruned = P.full_pruning(edges, node_ids, cfg, lineage)
-    assignments = G.connected_components(
-        pruned.select("id_1", "id_2"),
-        vertices=records.select(F.col("source_id").alias("id")),
-        cfg=cfg, lineage=lineage,
-    ).persist()
+    pruned, assignments = P.full_pruning(edges, node_ids, cfg, lineage)
+    assignments = assignments.persist()
 
     entities = K.canonical_entities(records, assignments, cfg)
     mapping = K.source_canonical_mapping(entities)

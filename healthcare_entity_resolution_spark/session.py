@@ -62,9 +62,3 @@ def get_spark(
     os.makedirs(_CHECKPOINT_DIR, exist_ok=True)
     spark.sparkContext.setCheckpointDir(_CHECKPOINT_DIR)
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

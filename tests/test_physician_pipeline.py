@@ -146,3 +146,14 @@ def test_export_resolution_tables(spark, resolved, tmp_path):
             "exported_at"} == set(cp.columns)
     m = store.load("source_canonical_mapping")
     assert m.where(F.col("confidence").isNull()).count() == 0
+
+
+def test_one_connected_components_run(spark, records):
+    """Pruning returns the clustering: with every component within the cap,
+    the whole flow runs connected components once (the G5 split)."""
+    from healthcare_entity_resolution_spark.plans.lineage import LineageLog
+
+    lin = LineageLog()
+    out = resolve_physicians(spark, records, lineage=lin)
+    assert out["assignments"].count() == 6
+    assert [ev["stage"] for ev in lin.events].count("cc.converged") == 1

@@ -106,7 +106,7 @@ def test_full_pruning_pipeline(spark):
     from healthcare_entity_resolution_spark.plans.lineage import LineageLog
 
     lin = LineageLog()
-    out = P.full_pruning(e, ids, lineage=lin)
+    out, _ = P.full_pruning(e, ids, lineage=lin)
     kept = sorted((r.id_1, r.id_2) for r in out.collect())
     assert kept == [("a", "b"), ("c", "d")]
     # G8 must reuse G7's component map — one fewer corpus-wide CC per run
@@ -273,14 +273,18 @@ def test_full_pruning_equals_distributed_composition(spark, monkeypatch, seed, r
 
     ref = P.prune_low_confidence_edges(e, cfg.min_edge_weight * 0.75)
     ref = P.prune_id_conflicts(ref, ids, cfg, max_iterations=rounds)
-    ref, assign = P.prune_oversized_clusters(ref, cfg, return_assignments=True)
-    ref = P.prune_weak_bridges(ref, cfg, assignments=assign)
+    ref = P.prune_oversized_clusters(ref, cfg)
+    ref = P.prune_weak_bridges(ref, cfg)
     expected = sorted(tuple(r) for r in ref.collect())
 
     monkeypatch.setattr(P, "_ID_CONFLICT_ITERATIONS", rounds)
     lin = LineageLog()
-    got = sorted(tuple(r) for r in P.full_pruning(e, ids, cfg, lin).collect())
+    pruned, assign = P.full_pruning(e, ids, cfg, lin)
+    got = sorted(tuple(r) for r in pruned.collect())
     assert got == expected
+    # the returned clustering is G4 over the returned edges
+    cc = connected_components(pruned, vertices=ids.select("id"))
+    assert sorted(tuple(r) for r in assign.collect()) == sorted(tuple(r) for r in cc.collect())
     done = [ev for ev in lin.events if ev["stage"] == "prune.done"][0]
     assert done["large_components"] is True
     assert (_conflicted_components(got, id_rows) > 0) == (rounds == 1)
@@ -303,7 +307,8 @@ def test_full_pruning_bounded_components_run_one_cc(spark):
         "id string, auth_id string",
     )
     lin = LineageLog()
-    kept = {(r.id_1, r.id_2) for r in P.full_pruning(_edges(spark, rows), ids, lineage=lin).collect()}
+    pruned, _ = P.full_pruning(_edges(spark, rows), ids, lineage=lin)
+    kept = {(r.id_1, r.id_2) for r in pruned.collect()}
     assert kept == {(u, v) for u, v, _ in rows} - {("b", "c"), ("r", "s"), ("x", "y")}
 
     stages = [ev["stage"] for ev in lin.events]
@@ -314,3 +319,30 @@ def test_full_pruning_bounded_components_run_one_cc(spark):
     done = [ev for ev in lin.events if ev["stage"] == "prune.done"]
     assert len(done) == 1 and done[0]["removed"] == 3
     assert done[0]["large_components"] is False
+
+
+@pytest.mark.parametrize("id_type", ["string", "bigint"])
+def test_pruning_keeps_id_type(spark, id_type):
+    """G8 and full pruning work on string and on bigint ids: the kernel's
+    output schema follows the input's id type."""
+    def node(i):
+        return i if id_type == "bigint" else f"n{i}"
+
+    # two triangles joined by one weak bridge (3-4), plus an isolated node 9
+    rows = [(node(u), node(v), w) for u, v, w in [
+        (1, 2, 0.5), (2, 3, 0.5), (1, 3, 0.5), (3, 4, 0.35),
+        (4, 5, 0.5), (5, 6, 0.5), (4, 6, 0.5)]]
+    e = spark.createDataFrame(rows, f"id_1 {id_type}, id_2 {id_type}, weight double")
+    expected = {(u, v) for u, v, _ in rows} - {(node(3), node(4))}
+    cfg = ResolutionConfig(min_edge_weight=0.40)
+
+    kept = {(r.id_1, r.id_2) for r in P.prune_weak_bridges(e, cfg).collect()}
+    assert kept == expected
+
+    ids = spark.createDataFrame([(node(i), None) for i in [1, 2, 3, 4, 5, 6, 9]],
+                                f"id {id_type}, auth_id string")
+    pruned, assign = P.full_pruning(e, ids, cfg)
+    assert {(r.id_1, r.id_2) for r in pruned.collect()} == expected
+    assert dict(assign.collect()) == {
+        node(1): node(1), node(2): node(1), node(3): node(1),
+        node(4): node(4), node(5): node(4), node(6): node(4), node(9): node(9)}
