@@ -46,7 +46,6 @@ def main() -> None:
             F.when(F.col("_id") % 2 == 0, F.lit("lang:hot"))
             .otherwise(F.concat(F.lit("lang:cold"), (F.col("_id") % 64)))
             .alias("_bk"),
-            F.lit("skew").alias("_strategy"),
         )
     )
     keyed.persist().count()

@@ -86,20 +86,19 @@ def minhash_signature(hashes: np.ndarray, num_perm: int = 64, seed: int = 42) ->
     return prod.min(axis=1)
 
 
-def lsh_band_keys(
-    sig: np.ndarray, bands: int = 16, seed_tag: str = ""
-) -> list[int]:
-    """Hash each band of the signature to a 63-bit bucket key.
+def lsh_band_keys(sig: np.ndarray, bands: int = 16) -> list[int]:
+    """Hash each band of the signature to a non-negative bucket key.
 
-    Key = crc32(band_index ‖ band bytes) folded with the band index so
-    different bands never collide into the same bucket space.
+    Key = ``(band_index << 32) | crc32(band bytes)``: the band index in the
+    high bits keeps different bands out of each other's bucket space, and
+    the key is below ``bands * 2**32`` (2**36 at 16 bands), so it fits a
+    signed LongType column as is.
     """
     rows = sig.shape[0] // bands
     keys = []
     for i in range(bands):
         band = sig[i * rows : (i + 1) * rows]
-        h = zlib.crc32(band.tobytes() + seed_tag.encode())
-        keys.append((i << 32) | h)
+        keys.append((i << 32) | zlib.crc32(band.tobytes()))
     return keys
 
 

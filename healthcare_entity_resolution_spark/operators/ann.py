@@ -587,7 +587,6 @@ def all_pairs_near_duplicates(
     keyed = e.select(
         F.col("id").alias("_id"),
         F.concat(F.lit("ann:"), bucket.cast("string")).alias("_bk"),
-        F.lit("ann_sign").alias("_strategy"),
     )
     pairs = B.candidate_pairs(keyed, cfg, lineage)
     pairs = pairs.join(

@@ -16,8 +16,13 @@ what Catalyst can't know (north_rule):
   the dropped cross-salt pair count is computed exactly and written to
   lineage — truncation is never silent.
 - **MinHash/LSH band keys** over content shingles as a recall-oriented
-  strategy: an Arrow-batched pandas UDF computes band bucket keys
-  (ArrayType(LongType)), ``F.explode`` turns them into block keys.
+  strategy: :func:`band_block_keys` turns per-document LSH band keys into
+  ``mh:`` block keys.  It is the only place that key is built; the
+  code-file blocking (:func:`minhash_band_keys`), the in-corpus near-dup
+  path and the crawl-dedup index's intra-batch step all go through it.
+
+Every key builder returns ``(_id, _bk)``; :func:`candidate_pairs` takes the
+union of such frames.
 """
 
 from __future__ import annotations
@@ -34,13 +39,20 @@ from ..plans.lineage import NULL_LINEAGE, LineageLog
 PAIR_SCHEMA = ["id_1", "id_2"]
 
 
-def exact_block_keys(df: DataFrame, id_col: str, key_expr, strategy: str) -> DataFrame:
+def exact_block_keys(df: DataFrame, id_col: str, key_expr) -> DataFrame:
     """B1/B2/B4-shaped strategy: one key column per record, NULL keys dropped."""
     return (
         df.select(F.col(id_col).alias("_id"), key_expr.alias("_bk"))
         .where(F.col("_bk").isNotNull())
-        .withColumn("_strategy", F.lit(strategy))
     )
+
+
+def band_block_keys(state: DataFrame) -> DataFrame:
+    """``(id, _bands)`` -> ``(_id, _bk = "mh:<band key>")``, one row per LSH
+    band: documents that agree on a whole band share a block."""
+    return state.select(
+        F.col("id").alias("_id"), F.explode("_bands").alias("_b")
+    ).select("_id", F.concat(F.lit("mh:"), F.col("_b").cast("string")).alias("_bk"))
 
 
 def minhash_band_keys(
@@ -48,7 +60,6 @@ def minhash_band_keys(
     id_col: str,
     text_col: str,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
-    strategy: str = "minhash",
 ) -> DataFrame:
     """LSH banding over char-shingle MinHash signatures -> (id, band_key)
     rows (north_star: "MinHash/LSH bands over content shingles").
@@ -58,7 +69,11 @@ def minhash_band_keys(
     driver testdata), which floods blocking with false candidates; k=5 char
     shingles push unrelated-pair Jaccard under ~0.3 while near-duplicates
     stay high — the band collision probability (1-(1-J^4)^16) then separates
-    cleanly."""
+    cleanly.
+
+    The UDF returns band keys only: signatures and shingle arrays never
+    leave the Python worker (the near-dup path, which verifies pairs, keeps
+    them in ``dedup.minhash_doc_state``)."""
     num_perm, bands = cfg.minhash_permutations, cfg.lsh_bands
     shingle_k = cfg.minhash_shingle_k
 
@@ -72,15 +87,11 @@ def minhash_band_keys(
             sig = textfn.minhash_signature(
                 textfn.shingle_hashes(t, k=shingle_k), num_perm=num_perm
             )
-            # fold to signed 63-bit for LongType
-            out.append([k & 0x7FFFFFFFFFFFFFFF for k in textfn.lsh_band_keys(sig, bands=bands)])
+            out.append(textfn.lsh_band_keys(sig, bands=bands))
         return pd.Series(out)
 
-    return (
-        df.select(F.col(id_col).alias("_id"), band_keys(F.col(text_col)).alias("_bands"))
-        .select("_id", F.explode("_bands").alias("_bkl"))
-        .select("_id", F.concat(F.lit("mh:"), F.col("_bkl").cast("string")).alias("_bk"))
-        .withColumn("_strategy", F.lit(strategy))
+    return band_block_keys(
+        df.select(F.col(id_col).alias("id"), band_keys(F.col(text_col)).alias("_bands"))
     )
 
 
@@ -132,10 +143,9 @@ def candidate_pairs(
     keyed_union: DataFrame,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     lineage: LineageLog = NULL_LINEAGE,
-    with_block_stats: bool = False,
 ) -> DataFrame:
     """B5: within-block self-join across all strategies, canonical order,
-    global dedup.  Input: union of (_id, _bk, _strategy) frames.
+    global dedup.  Input: union of (_id, _bk) frames.
 
     The keyed frame is persisted before the self-join: its lineage includes
     the MinHash pandas UDF, which would otherwise be recomputed for the
@@ -154,13 +164,9 @@ def candidate_pairs(
     pairs = (
         left.join(right, on=["_bk", "_salt"])
         .where(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2", "_bk")
+        .select("id_1", "id_2")
     )
-    if with_block_stats:
-        lineage.write_table(
-            pairs.groupBy("_bk").agg(F.count("*").alias("pair_count")), "block_pairs"
-        )
-    out = _checkpoint(pairs.select("id_1", "id_2").dropDuplicates(["id_1", "id_2"]))
+    out = _checkpoint(pairs.dropDuplicates(["id_1", "id_2"]))
     keyed.unpersist(blocking=False)
     return out
 
@@ -174,7 +180,7 @@ def physician_block_keys(records: DataFrame, cfg: ResolutionConfig = DEFAULT_CON
     (source_id, npi, name_last, facility_state)."""
     by_npi = exact_block_keys(
         records, "source_id",
-        F.when(F.col("npi").isNotNull(), F.concat(F.lit("npi:"), F.col("npi"))), "npi",
+        F.when(F.col("npi").isNotNull(), F.concat(F.lit("npi:"), F.col("npi"))),
     )
     by_last_state = exact_block_keys(
         records, "source_id",
@@ -183,7 +189,6 @@ def physician_block_keys(records: DataFrame, cfg: ResolutionConfig = DEFAULT_CON
             F.concat_ws("|", F.lit("ls:"), F.upper("name_last"),
                         F.coalesce(F.upper("facility_state"), F.lit("XX"))),
         ),
-        "last_state",
     )
     frames = [by_npi, by_last_state]
     if cfg.use_soundex_blocking:
@@ -193,7 +198,6 @@ def physician_block_keys(records: DataFrame, cfg: ResolutionConfig = DEFAULT_CON
                 snd, "source_id",
                 F.concat_ws("|", F.lit("sx:"), F.soundex(F.upper("name_last")),
                             F.coalesce(F.upper("facility_state"), F.lit("XX"))),
-                "soundex_state",
             )
         )
     out = frames[0]
@@ -210,6 +214,6 @@ def code_file_block_keys(
     stem = F.regexp_extract(F.col("path_norm"), r"([^/]+)$", 1)
     stem_key = F.concat_ws("|", F.lit("ps:"), F.col("lang"),
                            F.array_join(F.array_sort(F.split(stem, r"[^a-z0-9]+")), "_"))
-    by_path = exact_block_keys(files, "file_id", stem_key, "lang_pathstem")
+    by_path = exact_block_keys(files, "file_id", stem_key)
     by_minhash = minhash_band_keys(files, "file_id", "content", cfg)
     return by_path.unionByName(by_minhash)

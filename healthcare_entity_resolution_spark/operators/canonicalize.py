@@ -165,8 +165,9 @@ def source_canonical_mapping(entities: DataFrame) -> DataFrame:
     )
 
 
-def _reliability_expr(col, cfg: ResolutionConfig):
-    # singleton confidence map, confidence.py:112-120
+def _singleton_confidence_expr(col):
+    # singleton confidence map, confidence.py:112-120 (not the edge-weight
+    # reliability map, cfg.source_reliability)
     m = {"cms": 0.85, "license": 0.80, "hospital": 0.70, "publication": 0.50}
     expr = F.lit(0.5)
     for src, v in m.items():
@@ -186,7 +187,7 @@ def entity_confidence(
         F.count("*").alias("size"),
         F.countDistinct("npi").alias("n_npis"),
         F.countDistinct("source").alias("n_sources"),
-        F.min(_reliability_expr(F.col("source"), cfg)).alias("_single_rel"),
+        F.min(_singleton_confidence_expr(F.col("source"))).alias("_single_rel"),
     )
     e = edges.join(
         assignments.select(F.col("id").alias("id_1"), "component_id"), "id_1"

@@ -41,15 +41,12 @@ def classify(scored: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG,
     return scored.withColumn("decision", decision).withColumn("confidence", confidence)
 
 
-def determine_match_type(classified: DataFrame,
-                         name_col: str = "name_similarity",
-                         loc_col: str = "location_score",
-                         spec_col: str = "specialty_match",
-                         authoritative_col: str = "npi_match") -> DataFrame:
+def determine_match_type(classified: DataFrame) -> DataFrame:
     """C2 audit label (classifier.py:56-79)."""
-    name, loc, spec = F.col(name_col), F.col(loc_col), F.col(spec_col)
+    name = F.col("name_similarity")
+    loc, spec = F.col("location_score"), F.col("specialty_match")
     mt = (
-        F.when(F.col(authoritative_col) == 1.0, "npi_exact")
+        F.when(F.col("npi_match") == 1.0, "npi_exact")
         .when((name >= 0.9) & (loc >= 0.7), "name_location_strong")
         .when((name >= 0.9) & spec.isNotNull() & (spec >= 0.9), "name_specialty")
         .when(name >= 0.9, "name_strong")

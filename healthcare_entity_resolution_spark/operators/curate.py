@@ -135,7 +135,8 @@ def curate_corpus(
     # 2. near dedup: drop every non-representative (non-min-id) member of
     # each transitive near-dup group
     pairs = D.minhash_near_duplicates(
-        cur, id_col, text_col, cfg, jaccard_threshold=near_dup_threshold
+        cur, id_col, text_col, cfg, jaccard_threshold=near_dup_threshold,
+        lineage=lineage,
     )
     groups = D.near_duplicate_groups(pairs, cfg)
     drop = groups.where(F.col("id") != F.col("group_id")).select(

@@ -4,8 +4,12 @@ Beyond the reference's record-linkage flow, a 100 TB corpus pipeline needs
 document-level dedup.  Five strategies, all DataFrame-native:
 
 - exact:      sha/md5 hash-groupBy (one shuffle, map-side partial agg)
-- minhash:    char-shingle MinHash + LSH bands (reuses the blocking stage's
-              pandas UDF) -> band self-join -> Jaccard verify -> CC groups
+- minhash:    char-shingle MinHash + LSH bands (one Arrow pass) -> band
+              self-join through ``blocking.band_block_keys`` /
+              ``candidate_pairs`` -> two-tier Jaccard verify -> CC groups.
+              :func:`near_duplicate_pairs` is the one definition of that
+              core; the crawl-dedup index (dedup_index.py) calls it for its
+              intra-batch step and shares :func:`_tier_verify` for its probe
 - simhash:    64-bit SimHash, 4x16-bit chunk index (pigeonhole: hamming<=3
               duplicates share at least one exact chunk) -> hamming verify
 - ngram:      word n-gram Jaccard within cheap blocks (SQL-expressible)
@@ -25,7 +29,9 @@ from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, ResolutionConfig
 from ..functions import text as textfn
+from ..plans.lineage import NULL_LINEAGE, LineageLog
 from . import blocking as B
+from ._ckpt import checkpoint as _checkpoint
 from .components import connected_components
 
 
@@ -97,8 +103,7 @@ def minhash_doc_state(
                     continue
                 hashes = textfn.shingle_hashes(t, k=shingle_k)
                 sig = textfn.minhash_signature(hashes, num_perm=num_perm)
-                bnd.append([k & 0x7FFFFFFFFFFFFFFF
-                            for k in textfn.lsh_band_keys(sig, bands=bands)])
+                bnd.append(textfn.lsh_band_keys(sig, bands=bands))
                 sg.append(sig.astype("int64").tolist())
                 shn.append(hashes.astype("int64").tolist())
             yield pd.DataFrame({"id": ids, "_bands": bnd, "_sig": sg, "_shn": shn})
@@ -108,6 +113,75 @@ def minhash_doc_state(
     ).mapInPandas(gen, schema=DOC_STATE_SCHEMA)
 
 
+def _tier_verify(
+    pairs: DataFrame,
+    left_state: DataFrame,
+    right_state: DataFrame,
+    num_perm: int,
+    jaccard_threshold: float,
+    est_slack: float | None,
+) -> DataFrame:
+    """Two-tier Jaccard verification: signature-estimated Jaccard first
+    (free — the signatures already exist; the join ships only the
+    fixed-width signature, num_perm longs, ~0.5 KB), exact shingle-hash
+    Jaccard only for pairs whose estimate clears ``threshold - est_slack``
+    (the fat arrays are joined only for tier-1 survivors, and the exact
+    Jaccard is one JVM array_intersect pass — no Python).
+
+    ``pairs`` has (id_1, id_2); id_1 is looked up in ``left_state`` and
+    id_2 in ``right_state``, both (id, _sig, _shn).  Returns
+    (id_1, id_2, jaccard) with exact jaccard >= threshold.  ``est_slack``
+    defaults to 3 standard errors of the signature estimator
+    (3 * sqrt(t(1-t)/num_perm)), so recall loss vs the always-exact variant
+    is the binomial tail beyond 3 sigma (<~0.2%)."""
+    if est_slack is None:
+        est_slack = 3.0 * (
+            jaccard_threshold * (1 - jaccard_threshold) / num_perm
+        ) ** 0.5
+    s1 = left_state.select(F.col("id").alias("id_1"), F.col("_sig").alias("_s1"))
+    s2 = right_state.select(F.col("id").alias("id_2"), F.col("_sig").alias("_s2"))
+    agree = F.size(
+        F.filter(F.zip_with("_s1", "_s2", lambda x, y: x == y), lambda b: b)
+    )
+    tier1 = (
+        pairs.join(s1, "id_1").join(s2, "id_2")
+        .where(agree >= F.lit(num_perm * (jaccard_threshold - est_slack)))
+        .select("id_1", "id_2")
+    )
+    g1 = left_state.select(F.col("id").alias("id_1"), F.col("_shn").alias("_h1"))
+    g2 = right_state.select(F.col("id").alias("id_2"), F.col("_shn").alias("_h2"))
+    inter = F.size(F.array_intersect("_h1", "_h2")).cast("double")
+    # |A∪B| = |A|+|B|−|A∩B| exactly (shingle-hash arrays are distinct);
+    # skips the per-pair union hash-set build — one array pass, not two
+    union = F.size("_h1").cast("double") + F.size("_h2").cast("double") - inter
+    jac = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
+    return (
+        tier1.join(g1, "id_1").join(g2, "id_2")
+        .select("id_1", "id_2", jac.alias("jaccard"))
+        .where(F.col("jaccard") >= jaccard_threshold)
+    )
+
+
+def near_duplicate_pairs(
+    state: DataFrame,
+    cfg: ResolutionConfig,
+    jaccard_threshold: float,
+    est_slack: float | None,
+    lineage: LineageLog,
+) -> DataFrame:
+    """Verified near-duplicate pairs within one :func:`minhash_doc_state`
+    frame: the salted band self-join (:func:`blocking.band_block_keys` ->
+    :func:`blocking.candidate_pairs`, hot-band drops logged to ``lineage``),
+    then :func:`_tier_verify`.  Returns (id_1, id_2, jaccard), eagerly
+    checkpointed so the caller can release ``state`` before using it —
+    repeated calls in one session must not accumulate cached
+    signature/shingle blocks (same discipline as candidate_pairs)."""
+    pairs = B.candidate_pairs(B.band_block_keys(state), cfg, lineage)
+    return _checkpoint(_tier_verify(
+        pairs, state, state, cfg.minhash_permutations, jaccard_threshold, est_slack,
+    ))
+
+
 def minhash_near_duplicates(
     df: DataFrame,
     id_col: str,
@@ -115,63 +189,18 @@ def minhash_near_duplicates(
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     jaccard_threshold: float = 0.7,
     est_slack: float | None = None,
+    lineage: LineageLog = NULL_LINEAGE,
 ) -> DataFrame:
-    """Candidate pairs from LSH bands, two-tier verified: signature-estimated
-    Jaccard first (free — the signatures already exist), exact shingle-hash
-    Jaccard only for pairs whose estimate clears ``threshold - est_slack``.
+    """Candidate pairs from LSH bands, two-tier verified
+    (:func:`near_duplicate_pairs`).  Returns (id_1, id_2, jaccard) with
+    exact jaccard >= threshold.
 
-    Returns (id_1, id_2, jaccard) with exact jaccard >= threshold.
-
-    Scale shape: the document text is read exactly once (minhash_doc_state);
-    candidate ids travel alone through the salted band self-join; the tier-1
-    join ships only the fixed-width signature (num_perm longs, ~0.5 KB); the
-    full shingle-hash arrays are joined only for tier-1 survivors, and the
-    exact Jaccard runs as one JVM array_intersect pass (union size by
-    arithmetic over the distinct-array sizes) — no Python after the state
-    pass.  ``est_slack`` defaults to 3 standard errors of the
-    signature estimator (3 * sqrt(t(1-t)/num_perm)), so recall loss vs the
-    always-exact variant is the binomial tail beyond 3 sigma (<~0.2%)."""
-    num_perm = cfg.minhash_permutations
-    if est_slack is None:
-        est_slack = 3.0 * (jaccard_threshold * (1 - jaccard_threshold) / num_perm) ** 0.5
-
+    Scale shape: the document text is read exactly once (minhash_doc_state,
+    persisted for the join and the verify); candidate ids travel alone
+    through the salted band self-join, whose hot-block drops are logged to
+    ``lineage`` (``blocking.salting``)."""
     state = minhash_doc_state(df, id_col, text_col, cfg).persist()
-    keyed = (
-        state.select(F.col("id").alias("_id"), F.explode("_bands").alias("_bkl"))
-        .select("_id", F.concat(F.lit("mh:"), F.col("_bkl").cast("string")).alias("_bk"))
-        .withColumn("_strategy", F.lit("minhash"))
-    )
-    pairs = B.candidate_pairs(keyed, cfg)
-
-    s1 = state.select(F.col("id").alias("id_1"), F.col("_sig").alias("_s1"))
-    s2 = state.select(F.col("id").alias("id_2"), F.col("_sig").alias("_s2"))
-    agree = F.size(F.filter(
-        F.zip_with("_s1", "_s2", lambda x, y: x == y), lambda b: b
-    ))
-    tier1 = (
-        pairs.join(s1, "id_1").join(s2, "id_2")
-        .where(agree >= F.lit(num_perm * (jaccard_threshold - est_slack)))
-        .select("id_1", "id_2")
-    )
-
-    g1 = state.select(F.col("id").alias("id_1"), F.col("_shn").alias("_h1"))
-    g2 = state.select(F.col("id").alias("id_2"), F.col("_shn").alias("_h2"))
-    inter = F.size(F.array_intersect("_h1", "_h2")).cast("double")
-    # |A∪B| = |A|+|B|−|A∩B| exactly (shingle-hash arrays are distinct);
-    # skips the per-pair union hash-set build — one array pass, not two
-    union = F.size("_h1").cast("double") + F.size("_h2").cast("double") - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
-    out = (
-        tier1.join(g1, "id_1").join(g2, "id_2")
-        .select("id_1", "id_2", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= jaccard_threshold)
-    )
-    # eager checkpoint so the corpus-sized doc-state cache can be released
-    # before returning — repeated calls in one session must not accumulate
-    # cached signature/shingle blocks (same discipline as candidate_pairs)
-    from ._ckpt import checkpoint as _checkpoint
-
-    out = _checkpoint(out)
+    out = near_duplicate_pairs(state, cfg, jaccard_threshold, est_slack, lineage)
     state.unpersist(blocking=False)
     return out
 
@@ -260,7 +289,7 @@ def ngram_jaccard_pairs(
     n: int = 1,
     threshold: float = 0.5,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
-    lineage=None,
+    lineage: LineageLog = NULL_LINEAGE,
 ) -> DataFrame:
     """Word n-gram Jaccard within blocks — pure built-in functions end to
     end (split/array ops), whole-stage-codegen, no Python.
@@ -272,9 +301,6 @@ def ngram_jaccard_pairs(
     frame afterwards, so fat arrays never ride the blocking shuffle and a
     skewed block can't go quadratic.  Below ``cfg.max_block_size`` the salt
     is a no-op, so small-scale output (and the SQL oracle) is unchanged."""
-    from ..plans.lineage import NULL_LINEAGE
-
-    lineage = lineage if lineage is not None else NULL_LINEAGE
     words = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     if n == 1:
         grams = F.array_distinct(words)
@@ -306,7 +332,6 @@ def ngram_jaccard_pairs(
                 )
             ),
         ).alias("_bk"),
-        F.lit("ngram").alias("_strategy"),
     )
     pairs = B.candidate_pairs(keyed, cfg, lineage)
     gframe = df.select(F.col(id_col).alias("id"), grams.alias("grams"))

@@ -16,10 +16,11 @@ Scale shape (the whole point):
     corpus-sized index.
   * Append is ``mode('append') + partitionBy('shard')`` — O(batch), never
     O(index), same contract as `ann.append_lsh_index`.
-  * The candidate join ships ids only; tier-1 verification joins the
-    fixed-width MinHash signature (num_perm longs); the fat shingle-hash
-    arrays ride a join only for tier-1 survivors (same two-tier discipline
-    as `dedup.minhash_near_duplicates`).
+  * The candidate join ships ids only; verification is `dedup._tier_verify`
+    (signature estimate first, shingle-hash arrays only for tier-1
+    survivors), the same function the in-corpus path runs.  The intra-batch
+    step is `dedup.near_duplicate_pairs` itself: one band-key frame
+    (`blocking.band_block_keys`), one salted self-join, one verify.
   * Hot index bands (boilerplate documents that collapse into one band
     bucket) are capped at ``max_band_fanout`` candidates per band and the
     drop is lineage-logged with exact counts — never silent.
@@ -43,7 +44,7 @@ from ..config import DEFAULT_CONFIG, ResolutionConfig
 from ..plans.lineage import NULL_LINEAGE, LineageLog
 from ._ckpt import checkpoint as _checkpoint
 from .components import connected_components
-from .dedup import minhash_doc_state
+from .dedup import _tier_verify, minhash_doc_state, near_duplicate_pairs
 
 DEFAULT_N_SHARDS = 256  # test-scale default; 4096+ at corpus scale
 
@@ -129,44 +130,6 @@ def _check_meta(meta: dict, cfg: ResolutionConfig) -> None:
 # ---------------------------------------------------------------------------
 # query
 # ---------------------------------------------------------------------------
-
-
-def _tier_verify(
-    pairs: DataFrame,
-    left_state: DataFrame,
-    right_state: DataFrame,
-    num_perm: int,
-    jaccard_threshold: float,
-    est_slack: float | None,
-) -> DataFrame:
-    """Two-tier Jaccard verification shared by the index-probe and
-    intra-batch paths: signature-estimated first (fixed-width join), exact
-    shingle-hash second (fat arrays only for tier-1 survivors).  Column
-    contract: ``pairs`` has (id_1, id_2); states have (id, _sig, _shn)."""
-    if est_slack is None:
-        est_slack = 3.0 * (
-            jaccard_threshold * (1 - jaccard_threshold) / num_perm
-        ) ** 0.5
-    s1 = left_state.select(F.col("id").alias("id_1"), F.col("_sig").alias("_s1"))
-    s2 = right_state.select(F.col("id").alias("id_2"), F.col("_sig").alias("_s2"))
-    agree = F.size(
-        F.filter(F.zip_with("_s1", "_s2", lambda x, y: x == y), lambda b: b)
-    )
-    tier1 = (
-        pairs.join(s1, "id_1").join(s2, "id_2")
-        .where(agree >= F.lit(num_perm * (jaccard_threshold - est_slack)))
-        .select("id_1", "id_2")
-    )
-    g1 = left_state.select(F.col("id").alias("id_1"), F.col("_shn").alias("_h1"))
-    g2 = right_state.select(F.col("id").alias("id_2"), F.col("_shn").alias("_h2"))
-    inter = F.size(F.array_intersect("_h1", "_h2")).cast("double")
-    union = F.size("_h1").cast("double") + F.size("_h2").cast("double") - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
-    return (
-        tier1.join(g1, "id_1").join(g2, "id_2")
-        .select("id_1", "id_2", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= jaccard_threshold)
-    )
 
 
 def query_dedup_index(
@@ -286,8 +249,6 @@ def incremental_dedup_step(
     index append.  Deterministic: replaying the same batch (even after a
     crash mid-append) converges to the same kept set because index
     self-matches are id-excluded and query-side reads dedup on id."""
-    from . import blocking as B
-
     state = minhash_doc_state(new_df, id_col, text_col, cfg).persist()
 
     index_matches = query_dedup_index(
@@ -300,20 +261,9 @@ def incremental_dedup_step(
 
     # intra-batch near-dups among docs that survived the index probe
     surv_state = state.join(dropped_vs_index, "id", "left_anti").persist()
-    keyed = (
-        surv_state.select(F.col("id").alias("_id"), F.explode("_bands").alias("_bkl"))
-        .select(
-            "_id",
-            F.concat(F.lit("mh:"), F.col("_bkl").cast("string")).alias("_bk"),
-        )
-        .withColumn("_strategy", F.lit("minhash"))
-    )
-    pairs = B.candidate_pairs(keyed, cfg, lineage)
-    intra = _tier_verify(
-        pairs, surv_state, surv_state, cfg.minhash_permutations,
-        jaccard_threshold, None,
-    )
-    intra = _checkpoint(intra).persist()
+    intra = near_duplicate_pairs(
+        surv_state, cfg, jaccard_threshold, None, lineage
+    ).persist()
     # transitive min-id keep: only each duplicate group's minimum id survives
     groups = connected_components(intra.select("id_1", "id_2"), cfg=cfg)
     losers = (

@@ -56,18 +56,15 @@ def pagerank(
     edges: DataFrame,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     lineage: LineageLog = NULL_LINEAGE,
-    weight_col: str | None = "referral_count",
-    src: str = "src",
-    dst: str = "dst",
     fixed_iter: int | None = None,
 ) -> DataFrame:
     """N2 (influence.py:14-50): PageRank alpha=0.85 over the referral graph.
 
-    The edge list ``(src, dst, w)`` is collected ONCE with ``toArrow()`` (one
-    Spark job), ids are mapped to dense int32 codes by a pyarrow
-    ``dictionary_encode`` over ``src`` and ``dst`` concatenated (string and
-    bigint ids alike, no per-edge Python objects), and the power iteration
-    runs in numpy::
+    The edge list ``(src, dst, w = referral_count)`` is collected ONCE with
+    ``toArrow()`` (one Spark job), ids are mapped to dense int32 codes by a
+    pyarrow ``dictionary_encode`` over ``src`` and ``dst`` concatenated
+    (string and bigint ids alike, no per-edge Python objects), and the power
+    iteration runs in numpy::
 
         out_w = bincount(s, w)
         rank' = (1-alpha)/n + alpha*dangling/n + alpha*bincount(d, p*rank[s])
@@ -92,13 +89,12 @@ def pagerank(
     alpha, tol = cfg.pagerank_alpha, cfg.pagerank_tol
     spark = edges.sparkSession
     schema = StructType([
-        StructField("id", edges.schema[src].dataType),
+        StructField("id", edges.schema["src"].dataType),
         StructField("pagerank", DoubleType()),
     ])
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     tbl = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"),
-        F.coalesce(w, F.lit(0.0)).alias("w"),
+        "src", "dst",
+        F.coalesce(F.col("referral_count").cast("double"), F.lit(0.0)).alias("w"),
     ).toArrow()
     m = tbl.num_rows
     if m == 0:

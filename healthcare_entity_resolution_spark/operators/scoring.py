@@ -195,31 +195,6 @@ def _canon_specialty(s: str | None) -> str | None:
     return _REF_SPECIALTY_CANON.get(u, u)
 
 
-def _first_sim(f1: str | None, f2: str | None) -> float:
-    """F3 (similarity.py:48-67): missing->0.5 neutral, initial-prefix->0.8."""
-    if not f1 or not f2:
-        return 0.5
-    a, b = f1.upper().strip(), f2.upper().strip()
-    if a == b:
-        return 1.0
-    if len(a) == 1 and b.startswith(a):
-        return 0.8
-    if len(b) == 1 and a.startswith(b):
-        return 0.8
-    return strsim.jaro_winkler_similarity(a, b)
-
-
-def _last_sim(l1: str | None, l2: str | None) -> float:
-    """F4 (similarity.py:70-86): strip '/-/space, exact->1.0 else JW."""
-    if not l1 or not l2:
-        return 0.0
-    a = l1.upper().strip().replace("'", "").replace("-", "").replace(" ", "")
-    b = l2.upper().strip().replace("'", "").replace("-", "").replace(" ", "")
-    if a == b:
-        return 1.0
-    return strsim.jaro_winkler_similarity(a, b)
-
-
 def _specialty_fuzzy(s1: str | None, s2: str | None) -> float | None:
     """F7 (similarity.py:133-178): NULL missing; canonical map; ratio>0.8."""
     if not s1 or not s2:
@@ -253,11 +228,11 @@ def score_physician_pairs(
         for pdf in batches:
             t0 = time.perf_counter()
             n_rows = len(pdf)
-            # F4 batched — mirrors the scalar _last_sim exactly, including
-            # degenerate names: missing is decided on the RAW value (so "'"
-            # vs "'" strips to ""=="" -> 1.0 via the kernel's equality check,
-            # and "" vs "X" -> 0.0 via its empty check), then strip
-            # '/-/space + upper and run the vectorized JW kernel.
+            # F4 (similarity.py:70-86): a missing last name (RAW value
+            # falsy) scores 0.0; otherwise upper + strip ', -, space and run
+            # the vectorized JW kernel, whose equality check gives 1.0 for
+            # equal stripped names (so "'" vs "'" strips to ""=="" -> 1.0)
+            # and whose empty check gives 0.0 ("" vs "X").
             raw_l1, raw_l2 = pdf["name_last_1"], pdf["name_last_2"]
             la = [x.upper().strip().translate(_STRIP) if x else None for x in raw_l1]
             lb = [y.upper().strip().translate(_STRIP) if y else None for y in raw_l2]
@@ -267,8 +242,8 @@ def score_physician_pairs(
                 last[idx] = strsim.jaro_winkler_batch(
                     [la[i] for i in idx], [lb[i] for i in idx]
                 )
-            # F3 batched — mirrors _first_sim: missing (RAW falsy) -> 0.5
-            # neutral, stripped-exact -> 1.0 (kernel), single-initial
+            # F3 (similarity.py:48-67): missing (RAW falsy) -> 0.5
+            # neutral, upper+strip exact -> 1.0 (kernel), single-initial
             # prefix -> 0.8 override, whitespace-only -> 0.0 (kernel empty
             # check), else JW
             raw_f1, raw_f2 = pdf["name_first_1"], pdf["name_first_2"]

@@ -51,7 +51,7 @@ def test_missing_state_becomes_xx_block(spark):
 def test_hot_block_salting_caps_and_logs(spark):
     n = 60
     df = spark.createDataFrame([(f"id{i:03d}", "HOT") for i in range(n)], ["source_id", "k"])
-    keys = B.exact_block_keys(df, "source_id", F.col("k"), "hot")
+    keys = B.exact_block_keys(df, "source_id", F.col("k"))
     cfg = replace(DEFAULT_CONFIG, max_block_size=20)
     lin = LineageLog()
     pairs = B.candidate_pairs(keys, cfg, lin)
@@ -65,7 +65,7 @@ def test_hot_block_salting_caps_and_logs(spark):
 
 def test_small_blocks_not_salted(spark):
     df = spark.createDataFrame([(f"id{i}", "K") for i in range(5)], ["source_id", "k"])
-    keys = B.exact_block_keys(df, "source_id", F.col("k"), "s")
+    keys = B.exact_block_keys(df, "source_id", F.col("k"))
     lin = LineageLog()
     pairs = B.candidate_pairs(keys, DEFAULT_CONFIG, lin)
     assert pairs.count() == 10  # C(5,2), nothing dropped

@@ -32,7 +32,10 @@ def test_minhash_deterministic():
 
 def test_lsh_identical_docs_share_all_bands():
     s = tf.minhash_signature(tf.token_hashes("one two three four five"), num_perm=64)
-    assert len(set(tf.lsh_band_keys(s, bands=16))) == 16
+    keys = tf.lsh_band_keys(s, bands=16)
+    assert len(set(keys)) == 16
+    # the keys fill LongType band columns as they are: non-negative, < 2**63
+    assert all(0 <= k < 2**63 for k in keys)
 
 
 def test_simhash_near_duplicates_close():

@@ -465,6 +465,37 @@ def test_ngram_jaccard_hot_block_salted(spark):
     assert "Scan ExistingRDD" in buf.getvalue()
 
 
+def test_curate_near_dedup_logs_salting(spark):
+    """curate_corpus's near-dup stage passes its lineage to the band
+    self-join: hot MinHash bands are salted and the exact pair drop lands
+    in the caller's log, not in a discarded one."""
+    from collections import Counter
+    from dataclasses import replace
+
+    from healthcare_entity_resolution_spark.operators import curate as C
+    from healthcare_entity_resolution_spark.plans.lineage import LineageLog
+
+    base = ("the quick brown fox jumps over the lazy dog and runs far away "
+            "into the deep green forest while the sun is setting slowly")
+    rows = [(i, f"{base} {i}") for i in range(12)]  # 12 near-identical docs
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    cfg = replace(ResolutionConfig(), max_block_size=3)
+    lin = LineageLog()
+    res = C.curate_corpus(df, cfg=cfg, lineage=lin, min_quality=0.0, max_pii=None)
+    salting = [e for e in lin.events if e["stage"] == "blocking.salting"]
+    assert len(salting) == 1
+    ev = salting[0]
+    # exact accounting against the band blocks computed independently
+    sizes = Counter(
+        b for r in D.minhash_doc_state(df, "doc_id", "text", cfg).collect()
+        for b in r["_bands"]
+    )
+    hot = [n for n in sizes.values() if n > cfg.max_block_size]
+    assert hot and ev["hot_blocks"] == len(hot)
+    assert ev["pairs_dropped"] > 0
+    assert ev["pairs_dropped"] + ev["pairs_kept"] == sum(n * (n - 1) // 2 for n in hot)
+
+
 def test_ivf_index_append_and_replay(spark, tmp_path):
     """append_ivf_index assigns new vectors to the EXISTING centroids and
     appends only their list partitions; post-append queries (still
