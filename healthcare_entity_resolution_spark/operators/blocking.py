@@ -28,7 +28,7 @@ union of such frames.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -47,12 +47,35 @@ def exact_block_keys(df: DataFrame, id_col: str, key_expr) -> DataFrame:
     )
 
 
+def band_key(band: Column) -> Column:
+    """The ``mh:`` block key of one LSH band key (a long)."""
+    return F.concat(F.lit("mh:"), band.cast("string")).alias("_bk")
+
+
 def band_block_keys(state: DataFrame) -> DataFrame:
     """``(id, _bands)`` -> ``(_id, _bk = "mh:<band key>")``, one row per LSH
     band: documents that agree on a whole band share a block."""
     return state.select(
         F.col("id").alias("_id"), F.explode("_bands").alias("_b")
-    ).select("_id", F.concat(F.lit("mh:"), F.col("_b").cast("string")).alias("_bk"))
+    ).select("_id", band_key(F.col("_b")))
+
+
+def minhash_bands(texts: pd.Series, cfg: ResolutionConfig = DEFAULT_CONFIG) -> pd.Series:
+    """Each text's LSH band keys (a list of ``cfg.lsh_bands`` longs; an empty
+    list for NULL text).  The body of :func:`minhash_band_keys`' pandas UDF,
+    also called directly by the micro-batch, which keys its rows in the
+    driver."""
+    out = []
+    for t in texts:
+        if t is None:
+            out.append([])
+            continue
+        sig = textfn.minhash_signature(
+            textfn.shingle_hashes(t, k=cfg.minhash_shingle_k),
+            num_perm=cfg.minhash_permutations,
+        )
+        out.append(textfn.lsh_band_keys(sig, bands=cfg.lsh_bands))
+    return pd.Series(out)
 
 
 def minhash_band_keys(
@@ -74,21 +97,10 @@ def minhash_band_keys(
     The UDF returns band keys only: signatures and shingle arrays never
     leave the Python worker (the near-dup path, which verifies pairs, keeps
     them in ``dedup.minhash_doc_state``)."""
-    num_perm, bands = cfg.minhash_permutations, cfg.lsh_bands
-    shingle_k = cfg.minhash_shingle_k
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def band_keys(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if t is None:
-                out.append([])
-                continue
-            sig = textfn.minhash_signature(
-                textfn.shingle_hashes(t, k=shingle_k), num_perm=num_perm
-            )
-            out.append(textfn.lsh_band_keys(sig, bands=bands))
-        return pd.Series(out)
+        return minhash_bands(texts, cfg)
 
     return band_block_keys(
         df.select(F.col(id_col).alias("id"), band_keys(F.col(text_col)).alias("_bands"))
@@ -206,14 +218,18 @@ def physician_block_keys(records: DataFrame, cfg: ResolutionConfig = DEFAULT_CON
     return out
 
 
+def path_stem_block_keys(files: DataFrame) -> DataFrame:
+    """(lang, path-stem token) key over files(file_id, path_norm, lang)."""
+    stem = F.regexp_extract(F.col("path_norm"), r"([^/]+)$", 1)
+    stem_key = F.concat_ws("|", F.lit("ps:"), F.col("lang"),
+                           F.array_join(F.array_sort(F.split(stem, r"[^a-z0-9]+")), "_"))
+    return exact_block_keys(files, "file_id", stem_key)
+
+
 def code_file_block_keys(
     files: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """north_star strategies over files(file_id, path_norm, lang, content):
     (lang, path-stem token key) + MinHash/LSH bands over content."""
-    stem = F.regexp_extract(F.col("path_norm"), r"([^/]+)$", 1)
-    stem_key = F.concat_ws("|", F.lit("ps:"), F.col("lang"),
-                           F.array_join(F.array_sort(F.split(stem, r"[^a-z0-9]+")), "_"))
-    by_path = exact_block_keys(files, "file_id", stem_key)
     by_minhash = minhash_band_keys(files, "file_id", "content", cfg)
-    return by_path.unionByName(by_minhash)
+    return path_stem_block_keys(files).unionByName(by_minhash)

@@ -20,8 +20,9 @@ npi_match / specialty_match may be NULL = "cannot compare", distinct from
 
 from __future__ import annotations
 
+import functools
 import time
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -50,107 +51,132 @@ def _decorate_pairs(files: DataFrame, pairs: DataFrame, cols: list[str]) -> Data
     return pairs.join(a, "id_1").join(b, "id_2")
 
 
-def score_code_pairs(
-    files: DataFrame, pairs: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """Kernel scores for code-file pairs + classification-ready columns.
+def code_pair_scores(
+    batches: Iterable[pd.DataFrame], cfg: ResolutionConfig = DEFAULT_CONFIG
+) -> Iterator[pd.DataFrame]:
+    """The code-pair string kernels, one output frame (``CODE_SCORE_SCHEMA``)
+    per input batch of decorated pairs (id_1, id_2 and both sides'
+    path_norm, repo, content, content_sha).  The body of
+    :func:`score_code_pairs`' ``mapInPandas`` stage, also called directly by
+    the micro-batch, which scores its pairs in the driver.
 
-    Output: id_1, id_2, sha_equal, jw_path, jw_repo, jaccard, cosine,
-    batch_ms, content_tier (tiered cosine), sha_match, overall_score.
-
-    ``sha_match`` is the tri-state trump column ``classify`` reads
-    (``authoritative_col="sha_match"``), the code-domain analog of
-    ``npi_match``: 1.0 for identical content, NULL otherwise -- differing
-    content is NOT a conflict, so it is never 0.0.
-    """
+    NULL content cannot be compared: a pair with a NULL side gets NULL
+    ``jaccard`` and ``cosine`` and never ``sha_equal``."""
     shingle_k = cfg.shingle_size
-    decorated = _decorate_pairs(
-        files, pairs, ["path_norm", "repo", "content", "content_sha"]
-    )
+    # Per-file features memoized by content_sha (16-hex-char prefix key:
+    # far cheaper to hash per lookup than a multi-hundred-char content
+    # string, and two near-identical contents never share a sha).
+    # Entry: (sorted token hashes, tf ids, tf counts, precomputed L2 norm)
+    feat_cache: dict[str, tuple] = {}
 
-    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Per-file features memoized by content_sha (16-hex-char prefix key:
-        # far cheaper to hash per lookup than a multi-hundred-char content
-        # string, and two near-identical contents never share a sha).
-        # Entry: (sorted token hashes, tf ids, tf counts, precomputed L2 norm)
-        feat_cache: dict[str, tuple] = {}
+    def feats(sha: str, content: str):
+        key = sha[:16]
+        v = feat_cache.get(key)
+        if v is None:
+            tok = np.sort(textfn.token_hashes(content))
+            ids, counts = textfn.shingle_tf(content, k=shingle_k)
+            norm = float(np.sqrt((counts.astype(np.float64) ** 2).sum())) or 1.0
+            v = (tok, ids, counts, norm)
+            feat_cache[key] = v
+        return v
 
-        def feats(sha: str, content: str):
-            key = sha[:16]
-            v = feat_cache.get(key)
-            if v is None:
-                tok = np.sort(textfn.token_hashes(content))
-                ids, counts = textfn.shingle_tf(content, k=shingle_k)
-                norm = float(np.sqrt((counts.astype(np.float64) ** 2).sum())) or 1.0
-                v = (tok, ids, counts, norm)
-                feat_cache[key] = v
-            return v
-
-        for pdf in batches:
-            t0 = time.perf_counter()
-            n = len(pdf)
-            # batched Jaro-Winkler: vectorized over the pair dimension
-            # (functions/strsim.jaro_winkler_batch, ~5x the scalar kernel)
-            jw_path = strsim.jaro_winkler_batch(
-                pdf["path_norm_1"].tolist(), pdf["path_norm_2"].tolist()
-            )
-            jw_repo = strsim.jaro_winkler_batch(
-                pdf["repo_1"].tolist(), pdf["repo_2"].tolist()
-            )
-            jac, cos = [], []
-            for c1, c2, s1, s2 in zip(
-                pdf["content_1"], pdf["content_2"], pdf["content_sha_1"], pdf["content_sha_2"]
-            ):
-                if s1 == s2:
-                    jac.append(1.0)
-                    cos.append(1.0)
-                    continue
+    for pdf in batches:
+        t0 = time.perf_counter()
+        n = len(pdf)
+        # batched Jaro-Winkler: vectorized over the pair dimension
+        # (functions/strsim.jaro_winkler_batch, ~5x the scalar kernel)
+        jw_path = strsim.jaro_winkler_batch(
+            pdf["path_norm_1"].tolist(), pdf["path_norm_2"].tolist()
+        )
+        jw_repo = strsim.jaro_winkler_batch(
+            pdf["repo_1"].tolist(), pdf["repo_2"].tolist()
+        )
+        jac, cos = [], []
+        for c1, c2, s1, s2 in zip(
+            pdf["content_1"], pdf["content_2"], pdf["content_sha_1"], pdf["content_sha_2"]
+        ):
+            if s1 is None or s2 is None:
+                jac.append(None)
+                cos.append(None)
+            elif s1 == s2:
+                jac.append(1.0)
+                cos.append(1.0)
+            else:
                 t1, i1, w1, n1 = feats(s1, c1)
                 t2, i2, w2, n2 = feats(s2, c2)
                 jac.append(textfn.sorted_jaccard(t1, t2))
                 cos.append(textfn.sorted_tf_cosine_prenorm(i1, w1, n1, i2, w2, n2))
-            ms = (time.perf_counter() - t0) * 1000.0
-            yield pd.DataFrame(
-                {
-                    "id_1": pdf["id_1"],
-                    "id_2": pdf["id_2"],
-                    "sha_equal": (pdf["content_sha_1"] == pdf["content_sha_2"]),
-                    "jw_path": jw_path,
-                    "jw_repo": jw_repo,
-                    "jaccard": jac,
-                    "cosine": cos,
-                    "batch_ms": [ms] * n,
-                }
-            )
+        ms = (time.perf_counter() - t0) * 1000.0
+        yield pd.DataFrame(
+            {
+                "id_1": pdf["id_1"],
+                "id_2": pdf["id_2"],
+                # NULL == NULL is False here: no sha_equal without content
+                "sha_equal": (pdf["content_sha_1"] == pdf["content_sha_2"]),
+                "jw_path": jw_path,
+                "jw_repo": jw_repo,
+                "jaccard": pd.array(jac, dtype="Float64"),
+                "cosine": pd.array(cos, dtype="Float64"),
+                "batch_ms": [ms] * n,
+            }
+        )
 
-    scored = decorated.mapInPandas(score_batches, schema=CODE_SCORE_SCHEMA)
 
+def code_score_columns(scored: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Kernel scores (``CODE_SCORE_SCHEMA``) -> + content_tier, sha_match,
+    overall_score: the classification-ready columns, as JVM expressions.
+
+    ``sha_match`` is the tri-state trump column ``classify`` reads
+    (``authoritative_col="sha_match"``), the code-domain analog of
+    ``npi_match``: 1.0 for identical content, NULL otherwise -- differing
+    content is NOT a conflict, so it is never 0.0.  Without a content
+    similarity (NULL content) the overall score is NULL: the pair cannot be
+    compared, so it is never a match."""
     # tiered content similarity (analog of the reference's location tiers,
     # similarity.py:89-130, transferred per SURVEY §1.3)
+    cosine = F.col("cosine")
     content_tier = (
-        F.when(F.col("cosine") >= 0.95, 1.0)
-        .when(F.col("cosine") >= 0.80, 0.8)
-        .when(F.col("cosine") >= 0.60, 0.5)
-        .when(F.col("cosine") >= 0.40, 0.3)
-        .otherwise(0.1)
+        F.when(cosine >= 0.95, 1.0)
+        .when(cosine >= 0.80, 0.8)
+        .when(cosine >= 0.60, 0.5)
+        .when(cosine >= 0.40, 0.3)
+        .when(cosine.isNotNull(), 0.1)
     )
     # overall combine keeps the reference F8 shape (similarity.py:256-291):
     # authoritative id (content sha) trumps; else weighted name/location/
-    # specialty analog = path-JW / content-tier / token-Jaccard.
+    # specialty analog = path-JW / content-tier / token-Jaccard.  ``least``
+    # skips NULLs, so a NULL combination is kept NULL explicitly.
     path_sim = F.col("jw_path") * 0.8 + F.col("jw_repo") * 0.2
-    overall = F.when(F.col("sha_equal"), F.lit(cfg.authoritative_match_score)).otherwise(
-        F.least(
-            F.lit(1.0),
-            path_sim * cfg.weight_name
-            + F.col("content_tier") * cfg.weight_location
-            + F.col("jaccard") * cfg.weight_specialty,
-        )
+    combined = (path_sim * cfg.weight_name
+                + F.col("content_tier") * cfg.weight_location
+                + F.col("jaccard") * cfg.weight_specialty)
+    overall = (
+        F.when(F.col("sha_equal"), F.lit(cfg.authoritative_match_score))
+        .when(combined.isNotNull(), F.least(F.lit(1.0), combined))
     )
     return (
         scored.withColumn("content_tier", content_tier)
         .withColumn("sha_match", F.when(F.col("sha_equal"), F.lit(1.0)))
         .withColumn("overall_score", overall)
     )
+
+
+def score_code_pairs(
+    files: DataFrame, pairs: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG
+) -> DataFrame:
+    """Kernel scores for code-file pairs + classification-ready columns.
+
+    Output: id_1, id_2, sha_equal, jw_path, jw_repo, jaccard, cosine,
+    batch_ms, content_tier (tiered cosine), sha_match, overall_score: the
+    :func:`code_pair_scores` kernels in one ``mapInPandas`` stage, then
+    :func:`code_score_columns`."""
+    decorated = _decorate_pairs(
+        files, pairs, ["path_norm", "repo", "content", "content_sha"]
+    )
+    scored = decorated.mapInPandas(
+        functools.partial(code_pair_scores, cfg=cfg), schema=CODE_SCORE_SCHEMA
+    )
+    return code_score_columns(scored, cfg)
 
 
 # ---------------------------------------------------------------------------

@@ -11,7 +11,8 @@ only in how a stage is materialized: ``resolve_files`` persists and counts
 each stage in memory, ``resumable_resolve_files`` commits each one through
 ``SnapshotStore.stage`` so a rerun resumes from the first missing snapshot.
 Both log the same timed per-stage events.  The micro-batch path
-(streaming/incremental.py) shares the scoring stage, ``classify_code_pairs``.
+(streaming/incremental.py) shares the scoring kernels and
+``classify_code_scores``, which it runs in the driver.
 
 Stage boundaries that shuffle: blocking self-join, CC iterations,
 survivorship groupBy.  Component ids are the minimum member file_id
@@ -38,12 +39,18 @@ from .plans.snapshots import SnapshotStore
 CODE_FILE_STAGES = ("files", "pairs", "classified", "assignments")
 
 
+def classify_code_scores(scored: DataFrame,
+                         cfg: ResolutionConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Classify scored code-file pairs (``scoring.code_score_columns``):
+    identical content (the ``sha_match`` trump, the NPI analog) is a match
+    at 0.95."""
+    return C.classify(scored, cfg, authoritative_col="sha_match")
+
+
 def classify_code_pairs(files: DataFrame, pairs: DataFrame,
                         cfg: ResolutionConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Score and classify code-file pairs; identical content (the
-    ``sha_match`` trump, the NPI analog) is a match at 0.95."""
-    return C.classify(S.score_code_pairs(files, pairs, cfg), cfg,
-                      authoritative_col="sha_match")
+    """Score and classify code-file pairs."""
+    return classify_code_scores(S.score_code_pairs(files, pairs, cfg), cfg)
 
 
 def _in_memory(name: str, build) -> tuple[DataFrame, int]:
@@ -67,13 +74,17 @@ def _resolve_code_files(raw_files: DataFrame, cfg: ResolutionConfig,
     # exact duplicates are the biggest hot blocks (a popular license file
     # appears millions of times); resolving representatives only turns those
     # C(n,2) explosions into a hash-groupBy, and the sha join at the end
-    # fans the decision back out.  groupBy(content_sha) — not a window — so
-    # the map-side partial aggregation does the heavy lifting.  Derived from
+    # fans the decision back out.  A file with NULL content cannot be
+    # compared, so it is its own representative: its ``_rep_key`` is its
+    # file_id, never a shared NULL sha.  groupBy — not a window — so the
+    # map-side partial aggregation does the heavy lifting.  Derived from
     # ``files`` in memory in both modes: it is one aggregate, not a stage
     # worth a snapshot.
     t1 = time.perf_counter()
-    reps = files.groupBy("content_sha").agg(F.min("file_id").alias("file_id"))
-    rep_files = files.join(reps, ["content_sha", "file_id"]).persist()
+    rep_key = F.coalesce("content_sha", F.concat(F.lit("file:"), "file_id"))
+    keyed = files.withColumn("_rep_key", rep_key)
+    reps = keyed.groupBy("_rep_key").agg(F.min("file_id").alias("file_id"))
+    rep_files = keyed.join(reps, ["_rep_key", "file_id"]).persist()
     n_reps = rep_files.count()
     lineage.log("exact_dedup", rows=n_files, representatives=n_reps,
                 exact_duplicates=n_files - n_reps, sec=time.perf_counter() - t1)
@@ -110,9 +121,9 @@ def _resolve_code_files(raw_files: DataFrame, cfg: ResolutionConfig,
         # content-sha representative's component (broadcast-sized at test
         # scale; a plain shuffled equi-join on content_sha at cluster scale)
         return (
-            files.select("file_id", "content_sha")
-            .join(rep_files.select("content_sha", F.col("file_id").alias("rep_id")),
-                  "content_sha")
+            keyed.select("file_id", "_rep_key")
+            .join(rep_files.select("_rep_key", F.col("file_id").alias("rep_id")),
+                  "_rep_key")
             .join(rep_assign.withColumnRenamed("id", "rep_id"), "rep_id")
             .select(F.col("file_id").alias("id"), "component_id")
         )

@@ -19,16 +19,42 @@ from pyspark.sql import DataFrame
 
 @dataclass
 class LineageLog:
+    """Structured run events.  Without a ``run_dir`` they are kept in
+    ``events``; with one they are appended to
+    ``<run_dir>/lineage_events.jsonl`` only, so a long-lived process (the
+    stream) does not grow memory with every event — ``read_events`` reads
+    back the ones this log wrote."""
+
     run_dir: str | None = None
     events: list[dict] = field(default_factory=list)
 
+    def __post_init__(self) -> None:
+        # where this log's events start in a file earlier runs may share
+        path = self._path()
+        self._offset = os.path.getsize(path) if path and os.path.exists(path) else 0
+
+    def _path(self) -> str | None:
+        return os.path.join(self.run_dir, "lineage_events.jsonl") if self.run_dir else None
+
     def log(self, stage: str, **kv) -> None:
         row = {"stage": stage, "wall_time": time.time(), **kv}
-        self.events.append(row)
-        if self.run_dir:
-            os.makedirs(self.run_dir, exist_ok=True)
-            with open(os.path.join(self.run_dir, "lineage_events.jsonl"), "a") as f:
-                f.write(json.dumps(row, default=str) + "\n")
+        if not self.run_dir:
+            self.events.append(row)
+            return
+        os.makedirs(self.run_dir, exist_ok=True)
+        with open(self._path(), "a") as f:
+            f.write(json.dumps(row, default=str) + "\n")
+
+    def read_events(self) -> list[dict]:
+        """Every event this log has logged, oldest first."""
+        path = self._path()
+        if not path:
+            return list(self.events)
+        if not os.path.exists(path):
+            return []
+        with open(path) as f:
+            f.seek(self._offset)
+            return [json.loads(line) for line in f]
 
     def write_table(self, df: DataFrame, name: str) -> None:
         """Persist a per-partition/per-block lineage table (e.g. block sizes,

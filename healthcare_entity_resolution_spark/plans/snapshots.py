@@ -26,7 +26,11 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 
 class SnapshotStore:
@@ -36,6 +40,18 @@ class SnapshotStore:
         self.spark = spark
         self.run_dir = run_dir
         os.makedirs(run_dir, exist_ok=True)
+        # the schema of every snapshot this store has read or written, so a
+        # re-read skips Parquet schema inference (one Spark job per read);
+        # an append-mode snapshot keeps the schema of its first delta
+        self._schemas: dict[str, StructType] = {}
+
+    def _read(self, name: str, *paths: str) -> DataFrame:
+        reader = self.spark.read
+        if name in self._schemas:
+            reader = reader.schema(self._schemas[name])
+        df = reader.parquet(*paths)
+        self._schemas[name] = df.schema
+        return df
 
     def _path(self, name: str) -> str:
         return os.path.join(self.run_dir, name)
@@ -85,7 +101,8 @@ class SnapshotStore:
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(tmp, final)
-        return self.spark.read.parquet(final)
+        self._schemas[name] = df.schema
+        return self._read(name, final)
 
     def has_delta(self, name: str, delta_id: int) -> bool:
         return os.path.exists(
@@ -101,13 +118,17 @@ class SnapshotStore:
     def next_delta_id(self, name: str) -> int:
         return self._max_id(name) + 1
 
-    def append(self, df: DataFrame, name: str, delta_id: int) -> bool:
+    def append(self, delta: pa.Table | DataFrame, name: str, delta_id: int) -> bool:
         """Idempotent append commit: one immutable delta directory per
         (name, delta_id) — the per-micro-batch write is O(batch), never
         O(corpus) (the Iceberg fast-append pattern over plain parquet).
         Replaying a delta_id that is already committed is a no-op; returns
         whether this call wrote.  A snapshot is either append-mode or
-        whole-commit-mode — don't mix the two under one name."""
+        whole-commit-mode — don't mix the two under one name.
+
+        A delta is batch-sized, so the driver writes it as one Parquet file
+        from Arrow, which costs no Spark job; a DataFrame delta is collected
+        as Arrow first."""
         if self.has_delta(name, delta_id):
             return False
         if os.path.exists(os.path.join(self._path(name), "_SUCCESS")):
@@ -134,10 +155,16 @@ class SnapshotStore:
         os.makedirs(base, exist_ok=True)
         final = os.path.join(base, f"delta_{delta_id:012d}")
         tmp = self._path(f"_tmp_{name}_delta_{delta_id:012d}")
-        df.write.mode("overwrite").parquet(tmp)
+        if isinstance(delta, DataFrame):
+            delta = delta.toArrow()
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        pq.write_table(delta, os.path.join(tmp, "part-00000.parquet"))
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(tmp, final)
+        self._schemas.setdefault(name, from_arrow_schema(delta.schema))
         return True
 
     def compact(self, name: str) -> int:
@@ -162,7 +189,7 @@ class SnapshotStore:
         if [final] == parts:  # already fully compacted: no-op
             return new_id
         tmp = self._path(f"_tmp_{name}_compact_{new_id:012d}")
-        self.spark.read.parquet(*parts).write.mode("overwrite").parquet(tmp)
+        self._read(name, *parts).write.mode("overwrite").parquet(tmp)
         if os.path.exists(final):
             # e.g. a superseded compact whose best-effort rmtree deleted
             # _SUCCESS but not the dir — without this, every future
@@ -178,8 +205,8 @@ class SnapshotStore:
         if not os.path.exists(os.path.join(base, "_SUCCESS")):
             deltas = self._deltas(name)
             if deltas:
-                return self.spark.read.parquet(*deltas)
-        return self.spark.read.parquet(base)
+                return self._read(name, *deltas)
+        return self._read(name, base)
 
     def history(self, name: str) -> list[dict]:
         """Committed epochs of a snapshot, oldest first — the Iceberg
@@ -236,7 +263,7 @@ class SnapshotStore:
         ]
         if not paths:
             raise ValueError(f"load_as_of: {name!r} has no epoch {as_of_id}")
-        return self.spark.read.parquet(*paths)
+        return self._read(name, *paths)
 
     def stage(self, name: str, build) -> tuple[DataFrame, bool]:
         """Run ``build()`` and commit, or load the existing snapshot.

@@ -76,16 +76,17 @@ def main() -> None:
         write_run_report,
     )
 
+    events = lineage.read_events()  # this run's, read back from the jsonl
     report = write_run_report(
         os.path.join(args.output, "report.html"),
         assignments=out["assignments"],
         classified=out["classified"],
-        lineage_events=lineage.events,
+        lineage_events=events,
     )
     summary = {"assignments": n,
                "output": args.output,
                "report": report,
-               "stages": [e["stage"] for e in lineage.events]}
+               "stages": [e["stage"] for e in events]}
     print(json.dumps(summary))
 
 

@@ -53,3 +53,22 @@ def test_fresh_then_resumed_run(spark, tmp_path, monkeypatch, capsys):
              if e["stage"].startswith("resume.")}
     assert flags == {"resume.files": True, "resume.pairs": True,
                      "resume.classified": True, "resume.assignments": True}
+
+
+def test_file_backed_lineage_keeps_no_events_in_memory(tmp_path):
+    """A log with a run dir appends each event to its jsonl file only, so a
+    long-lived process (the stream) does not grow memory per event;
+    ``read_events`` reads back this log's events, not an earlier run's."""
+    from healthcare_entity_resolution_spark.plans.lineage import LineageLog
+
+    run_dir = str(tmp_path / "run")
+    earlier = LineageLog(run_dir=run_dir)
+    earlier.log("earlier.run")
+    log = LineageLog(run_dir=run_dir)
+    for i in range(5000):
+        log.log("stream.batch", batch=i)
+    assert log.events == []
+    assert [e["batch"] for e in log.read_events()] == list(range(5000))
+    with open(os.path.join(run_dir, "lineage_events.jsonl")) as f:
+        assert sum(1 for _ in f) == 5001
+    assert [e["stage"] for e in earlier.read_events()][0] == "earlier.run"

@@ -226,13 +226,11 @@ def test_repeated_rows_in_a_batch_assign_each_file_once(spark, tmp_path):
         sorted(map(tuple, ref.load("files").select(cols).collect()))
 
 
-def test_micro_batch_job_count(spark, corpus, tmp_path):
-    """A warm micro-batch contracts and labels its component graph in the
-    driver, so the batch runs no connected-components jobs.  On this corpus
-    and split the second batch ran 77 Spark jobs when the contracted graph
-    went through the distributed large-star/small-star loop and 32 with
-    the in-driver kernel; the bound is 0.6x the former."""
-    store = SnapshotStore(spark, str(tmp_path / "jobs_state"))
+@pytest.fixture(scope="module")
+def warm_batch(spark, corpus, tmp_path_factory):
+    """The counters and the Spark job count of a warm micro-batch: a quarter
+    of ``corpus`` against a store holding the other three quarters."""
+    store = SnapshotStore(spark, str(tmp_path_factory.mktemp("jobs_state")))
     wave = F.abs(F.xxhash64("repo", "path", "commit")) % 4
     micro_batch_resolve(spark, corpus.where(wave != 0), store)
 
@@ -242,9 +240,18 @@ def test_micro_batch_job_count(spark, corpus, tmp_path):
         stats = micro_batch_resolve(spark, corpus.where(wave == 0), store)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    return stats, len(sc.statusTracker().getJobIdsForGroup("test-micro-batch-jobs"))
+
+
+def test_micro_batch_job_count(warm_batch):
+    """A warm micro-batch contracts and labels its component graph in the
+    driver, so the batch runs no connected-components jobs.  On this corpus
+    and split the second batch ran 77 Spark jobs when the contracted graph
+    went through the distributed large-star/small-star loop and 32 with
+    the in-driver kernel; the bound is 0.6x the former."""
+    stats, jobs = warm_batch
     assert stats["new_files"] > 0 and stats["new_pairs"] > 0
-    jobs = sc.statusTracker().getJobIdsForGroup("test-micro-batch-jobs")
-    assert 1 <= len(jobs) <= int(0.6 * 77), len(jobs)
+    assert 1 <= jobs <= int(0.6 * 77), jobs
 
 
 def test_stateful_first_seen_dedup(spark, tmp_path):
@@ -400,3 +407,247 @@ def test_ann_index_stream_appends_and_prunes(spark, tmp_path):
     again = [r.vec_id for r in
              ann.query_lsh_index(spark, path, q, planes, k=10).collect()]
     assert again == after
+
+
+def test_warm_micro_batch_runs_half_the_jobs(warm_batch):
+    """The warm batch of ``test_micro_batch_job_count`` keys, scores,
+    classifies and clusters in the driver and writes its append deltas from
+    there: Spark runs only the corpus reads and the assignments rewrite.  It
+    ran 32 jobs when keys and scoring were Spark stages; the bound is half
+    of that."""
+    _, jobs = warm_batch
+    assert 1 <= jobs <= 32 // 2, jobs
+
+
+def _files(spark, pdf):
+    from healthcare_entity_resolution_spark.operators import normalize as N
+
+    return N.normalize_files(spark.createDataFrame(pdf[COLS])).persist()
+
+
+def test_driver_keys_equal_distributed_keys(spark):
+    """The micro-batch keys its rows in the driver; the keys must be exactly
+    ``code_file_block_keys``' (the MinHash pandas UDF path)."""
+    from healthcare_entity_resolution_spark.config import DEFAULT_CONFIG
+    from healthcare_entity_resolution_spark.operators import blocking as B
+    from healthcare_entity_resolution_spark.streaming import incremental as INC
+
+    pdf, _ = generate_files_corpus(n_entities=40, seed=5)
+    files = _files(spark, pdf)
+    dist = sorted(map(tuple, B.code_file_block_keys(files, DEFAULT_CONFIG)
+                      .select("_id", "_bk").collect()))
+    local = INC._batch_keys(spark, files.toArrow(), DEFAULT_CONFIG)
+    driver = sorted(zip(local["_id"].to_pylist(), local["_bk"].to_pylist()))
+    assert driver == dist
+    assert any(bk.startswith("mh:") for _, bk in dist)
+    assert any(bk.startswith("ps:") for _, bk in dist)
+
+
+def test_driver_scores_equal_distributed_scores(spark):
+    """Scores, decisions and matches of the driver path equal
+    ``classify_code_pairs``' (the ``mapInPandas`` path) on the same pairs,
+    exactly."""
+    from healthcare_entity_resolution_spark.config import DEFAULT_CONFIG
+    from healthcare_entity_resolution_spark.operators import blocking as B
+    from healthcare_entity_resolution_spark.operators import classify as C
+    from healthcare_entity_resolution_spark.pipeline import classify_code_pairs
+    from healthcare_entity_resolution_spark.streaming import incremental as INC
+
+    pdf, _ = generate_files_corpus(n_entities=40, seed=5)
+    files = _files(spark, pdf)
+    pairs = B.candidate_pairs(B.code_file_block_keys(files, DEFAULT_CONFIG))
+    cols = ["id_1", "id_2", "sha_equal", "jw_path", "jw_repo", "jaccard",
+            "cosine", "content_tier", "sha_match", "overall_score",
+            "decision", "confidence"]
+    dist = classify_code_pairs(files, pairs, DEFAULT_CONFIG)
+    local = INC._classify(spark, pairs.toArrow(),
+                          files.select("file_id", *INC.SCORE_COLS).toArrow(),
+                          DEFAULT_CONFIG)
+    want = sorted(map(tuple, dist.select(cols).collect()))
+    got = sorted(map(tuple, local.select(cols).collect()))
+    assert len(got) == pairs.count() > 0
+    assert got == want
+    assert len({d for *_, d, _ in got}) > 1  # more than one decision
+
+    def matches(df):
+        return sorted(map(tuple, C.confirmed_matches(df, DEFAULT_CONFIG)
+                          .select("id_1", "id_2").collect()))
+
+    assert matches(local) == matches(dist)
+
+
+def test_null_content_files_cannot_be_compared(spark, tmp_path):
+    """NULL content means "cannot compare", under Spark 4's default ANSI
+    mode, in both paths: such a file is its own representative (the batch
+    path's sha equi-join dropped it), never gets ``sha_match``, scores NULL
+    ``jaccard``/``cosine`` (two NULL contents are not identical), and every
+    file gets exactly one assignment.  The stream used to crash scoring a
+    pair with a NULL side."""
+    import pandas as pd
+
+    from healthcare_entity_resolution_spark.config import DEFAULT_CONFIG
+    from healthcare_entity_resolution_spark.operators import blocking as B
+    from healthcare_entity_resolution_spark.pipeline import classify_code_pairs
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    pdf, _ = generate_files_corpus(n_entities=10, seed=3)
+    rows = pdf[COLS].reset_index(drop=True)
+    # two NULL-content files on one existing path: they block with each
+    # other and with the file already there (path-stem key)
+    nulls = pd.concat([rows.iloc[[0]]] * 2).assign(
+        repo=["null/a", "null/b"], content=None)
+    data = pd.concat([rows, nulls], ignore_index=True)
+    raw = spark.createDataFrame(data, "repo string, path string, commit string, "
+                                      "lang string, content string")
+    n = len(data)
+
+    batch = resolve_files(spark, raw)
+    got = _norm_assign(batch["assignments"])
+    assert len(got) == len({i for i, _ in got}) == n
+    null_ids = [r["file_id"] for r in batch["files"].where(F.col("content").isNull())
+                .select("file_id").collect()]
+    assert len(null_ids) == 2
+    comp = dict(got)
+    for i in null_ids:  # singletons: nothing can match them
+        assert comp[i] == i and list(comp.values()).count(i) == 1
+
+    files = batch["files"]
+    pairs = B.candidate_pairs(B.code_file_block_keys(files, DEFAULT_CONFIG))
+    scored = classify_code_pairs(files, pairs, DEFAULT_CONFIG).where(
+        F.col("id_1").isin(null_ids) | F.col("id_2").isin(null_ids)).collect()
+    assert any(r["id_1"] in null_ids and r["id_2"] in null_ids for r in scored)
+    for r in scored:
+        assert r["jaccard"] is None and r["cosine"] is None
+        assert r["sha_match"] is None and r["overall_score"] is None
+        assert r["decision"] != "match"
+
+    store = SnapshotStore(spark, str(tmp_path / "null_content_state"))
+    stats = micro_batch_resolve(spark, raw, store)
+    assert stats["new_files"] == n
+    assert _norm_assign(store.load("assignments")) == got
+
+
+def test_empty_batch_on_fresh_and_committed_store(spark, corpus, tmp_path):
+    """An empty batch ingests nothing: counters are 0, every snapshot stays
+    readable, and replaying it writes nothing."""
+    import os
+
+    empty = corpus.limit(0)
+    store = SnapshotStore(spark, str(tmp_path / "empty_state"))
+    stats = micro_batch_resolve(spark, empty, store)
+    assert stats == {"new_files": 0, "new_pairs": 0, "total_entities": 0}
+    for name in ("files", "keys", "edges", "assignments"):
+        assert store.load(name).count() == 0
+    listing = sorted(os.listdir(store.run_dir))
+    again = micro_batch_resolve(spark, empty, store)
+    assert again == stats
+    assert sorted(os.listdir(store.run_dir)) == listing
+
+    wave = F.abs(F.xxhash64("repo", "path", "commit")) % 2
+    first = micro_batch_resolve(spark, corpus.where(wave == 0), store)
+    assert first["new_files"] > 0
+    before = {name: store.load(name).count()
+              for name in ("files", "keys", "edges", "assignments")}
+    assign = _norm_assign(store.load("assignments"))
+    for _ in range(2):  # the empty batch, then its replay
+        stats = micro_batch_resolve(spark, empty, store)
+        assert stats == {"new_files": 0, "new_pairs": 0,
+                         "total_entities": first["total_entities"]}
+        assert {name: store.load(name).count() for name in before} == before
+        assert _norm_assign(store.load("assignments")) == assign
+
+
+def test_hot_blocks_bound_candidates_and_are_logged(spark, tmp_path):
+    """A block whose committed members (the batch included) number more than
+    ``max_block_size`` gives the batch no pairs.  Per-batch candidates stay
+    within files x ((1 + lsh_bands) x max_block_size + 1), and ``stream.hot_blocks``
+    carries the exact block and dropped-pair counts, recomputed here from
+    the committed keys."""
+    import pandas as pd
+
+    from healthcare_entity_resolution_spark.config import ResolutionConfig
+    from healthcare_entity_resolution_spark.plans.lineage import LineageLog
+
+    cfg = ResolutionConfig(max_block_size=6)
+    body = "".join(f"def helper_{i}(x):\n    return x * {i}\n" for i in range(30))
+    data = pd.DataFrame({
+        "repo": [f"org/r{i}" for i in range(20)],
+        "path": ["src/util.py"] * 20,
+        "commit": ["c1"] * 20,
+        "lang": ["python"] * 20,
+        "content": [body + f"# copy {i % 7}\n" for i in range(20)],
+    })
+    store = SnapshotStore(spark, str(tmp_path / "hot_state"))
+    seen: set[str] = set()
+    for batch in (data.iloc[:8], data.iloc[8:]):
+        lin = LineageLog()
+        stats = micro_batch_resolve(spark, spark.createDataFrame(batch), store,
+                                    cfg, lin)
+        n_files = stats["new_files"]
+        assert n_files == len(batch)
+        (ev,) = [e for e in lin.events if e["stage"] == "stream.batch"]
+        assert ev["candidate_pairs"] <= n_files * (
+            (1 + cfg.lsh_bands) * cfg.max_block_size + 1)
+
+        # oracle: block sizes over the committed keys, the batch included
+        keys = store.load("keys").toPandas()
+        new = keys[~keys["_id"].isin(seen)]
+        before, seen = seen, seen | set(new["_id"])
+        size = keys.groupby("_bk")["_id"].nunique()
+        b = new.groupby("_bk")["_id"].nunique()
+        hot = [k for k in b.index if size[k] > cfg.max_block_size]
+        assert hot, "the test corpus must build hot blocks"
+        dropped = sum(size[k] * (size[k] - 1) // 2
+                      - (size[k] - b[k]) * (size[k] - b[k] - 1) // 2 for k in hot)
+        (hev,) = [e for e in lin.events if e["stage"] == "stream.hot_blocks"]
+        assert (hev["hot_blocks"], hev["pairs_dropped"]) == (len(hot), dropped)
+        cold = {k for k in b.index if size[k] <= cfg.max_block_size}
+        members = keys[keys["_bk"].isin(cold)]
+        expect = {tuple(sorted((x, y)))
+                  for k, grp in members.groupby("_bk")
+                  for x in grp["_id"] if x in set(new["_id"])
+                  for y in grp["_id"] if x != y}
+        # plus each new file against its exact-copy representative
+        sha = dict(map(tuple, store.load("files").select("file_id", "content_sha")
+                       .collect()))
+        for x in set(new["_id"]):
+            copies = [y for y in sha if sha[y] == sha[x]]
+            old = [y for y in copies if y in before]
+            rep = min(old or copies)
+            if rep != x:
+                expect.add(tuple(sorted((x, rep))))
+        assert ev["candidate_pairs"] == len(expect)
+
+
+def test_exact_copies_stay_connected_through_hot_blocks(spark, tmp_path):
+    """More than ``max_block_size`` byte-identical copies make every block of
+    theirs hot, in the batch that brings them and in every later one; each
+    copy is still paired with its content's representative, so all copies
+    end in one component, as in the batch path (its exact-dedup pass)."""
+    import pandas as pd
+
+    from healthcare_entity_resolution_spark.config import ResolutionConfig
+    from healthcare_entity_resolution_spark.plans.lineage import LineageLog
+
+    cfg = ResolutionConfig(max_block_size=6)
+    license_text = "Permission is hereby granted, free of charge, to any person\n" * 12
+    data = pd.DataFrame({
+        "repo": [f"org/r{i:02d}" for i in range(16)],
+        "path": ["LICENSE"] * 16,
+        "commit": ["c1"] * 16,
+        "lang": ["text"] * 16,
+        "content": [license_text] * 16,
+    })
+    store = SnapshotStore(spark, str(tmp_path / "copies_state"))
+    for batch in (data.iloc[:10], data.iloc[10:]):
+        lin = LineageLog()
+        stats = micro_batch_resolve(spark, spark.createDataFrame(batch), store, cfg, lin)
+        assert stats["new_files"] == len(batch)
+        (hev,) = [e for e in lin.events if e["stage"] == "stream.hot_blocks"]
+        assert hev["hot_blocks"] == 1 + cfg.lsh_bands  # every block is hot
+        (ev,) = [e for e in lin.events if e["stage"] == "stream.batch"]
+        assert ev["candidate_pairs"] <= len(batch)  # one pair per copy at most
+    got = _norm_assign(store.load("assignments"))
+    assert len(got) == 16 and len({c for _, c in got}) == 1
+    batch = resolve_files(spark, spark.createDataFrame(data), cfg)
+    assert got == _norm_assign(batch["assignments"])
