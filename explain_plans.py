@@ -186,8 +186,10 @@ def main() -> None:
           f"(**{c11.get('BroadcastHashJoin', 0)}** broadcast, LeftSemi on "
           "the exploded shingles): the corpus side is one MapInPandas "
           "shingling pass + groupBy over MATCHING shingles only — document "
-          "text crosses no Exchange; the shipped operator checkpoints this "
-          "exact shape (its own post-checkpoint plan is flat by design)\n")
+          "text crosses no Exchange; the shipped operator leaves the join "
+          "to AQE, which picks this broadcast at run time for an index under "
+          "the broadcast threshold (its own post-checkpoint plan is flat by "
+          "design)\n")
 
     print("## 12. Credit-card redaction split (round 5) — candidate-free "
           "branch is pure codegen\n")

@@ -30,7 +30,9 @@ class ResolutionConfig:
     authoritative_match_score: float = 0.95  # NPI / content-sha match
 
     # --- scale knobs (new; north_rule: hot-block salting, LSH banding) ---
-    max_block_size: int = 200          # blocks larger than this get salted
+    # a block with more members than this is hot: the batch path salts it
+    # (blocking.candidate_pairs), a micro-batch drops it (stream.hot_blocks)
+    max_block_size: int = 200
     minhash_permutations: int = 64
     lsh_bands: int = 16                # 16 bands x 4 rows
     minhash_shingle_k: int = 5         # char-shingle width for MinHash tokens

@@ -24,6 +24,9 @@ from difflib import SequenceMatcher
 
 import numpy as np
 
+# Winkler's prefix scale p
+PREFIX_WEIGHT = 0.1
+
 
 def jaro_similarity(s1: str, s2: str) -> float:
     """Jaro similarity in [0, 1]."""
@@ -67,7 +70,7 @@ def jaro_similarity(s1: str, s2: str) -> float:
     return (m / len1 + m / len2 + (m - transpositions) / m) / 3.0
 
 
-def jaro_winkler_similarity(s1: str, s2: str, prefix_weight: float = 0.1) -> float:
+def jaro_winkler_similarity(s1: str, s2: str) -> float:
     """Jaro-Winkler: Jaro with a boost for a shared prefix (<= 4 chars)."""
     jaro = jaro_similarity(s1, s2)
     if jaro <= 0.7:
@@ -78,10 +81,10 @@ def jaro_winkler_similarity(s1: str, s2: str, prefix_weight: float = 0.1) -> flo
             prefix += 1
         else:
             break
-    return jaro + prefix * prefix_weight * (1.0 - jaro)
+    return jaro + prefix * PREFIX_WEIGHT * (1.0 - jaro)
 
 
-def jaro_winkler_batch(strs1, strs2, prefix_weight: float = 0.1) -> np.ndarray:
+def jaro_winkler_batch(strs1, strs2) -> np.ndarray:
     """Vectorized Jaro-Winkler over a batch of string pairs.
 
     Bit-for-bit identical to :func:`jaro_winkler_similarity` (property-tested
@@ -105,7 +108,7 @@ def jaro_winkler_batch(strs1, strs2, prefix_weight: float = 0.1) -> np.ndarray:
             ba = a.encode("latin-1")
             bb = b.encode("latin-1")
         except (UnicodeEncodeError, AttributeError):
-            out[i] = jaro_winkler_similarity(a or "", b or "", prefix_weight)
+            out[i] = jaro_winkler_similarity(a or "", b or "")
             continue
         if not ba or not bb:
             out[i] = 0.0
@@ -192,7 +195,7 @@ def jaro_winkler_batch(strs1, strs2, prefix_weight: float = 0.1) -> np.ndarray:
         prefix = np.zeros(m, dtype=np.int64)
     boost = jaro > 0.7
     jw = jaro.copy()
-    jw[boost] = jaro[boost] + prefix[boost] * prefix_weight * (1.0 - jaro[boost])
+    jw[boost] = jaro[boost] + prefix[boost] * PREFIX_WEIGHT * (1.0 - jaro[boost])
     out[rows] = jw
     return out
 

@@ -61,22 +61,22 @@ def shingle_hashes(text: str, k: int = 3) -> np.ndarray:
         return np.unique(windows @ weights)
 
 
-def _perm_params(num_perm: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.RandomState(seed)
+def _perm_params(num_perm: int) -> tuple[np.ndarray, np.ndarray]:
+    rng = np.random.RandomState(42)
     a = rng.randint(1, MERSENNE_P, size=num_perm, dtype=np.uint64)
     b = rng.randint(0, MERSENNE_P, size=num_perm, dtype=np.uint64)
     return a, b
 
 
-_PERM_CACHE: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
+_PERM_CACHE: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
 
-def minhash_signature(hashes: np.ndarray, num_perm: int = 64, seed: int = 42) -> np.ndarray:
-    """MinHash signature (num_perm uint64) over a set of element hashes."""
-    key = (num_perm, seed)
-    if key not in _PERM_CACHE:
-        _PERM_CACHE[key] = _perm_params(num_perm, seed)
-    a, b = _PERM_CACHE[key]
+def minhash_signature(hashes: np.ndarray, num_perm: int = 64) -> np.ndarray:
+    """MinHash signature (num_perm uint64) over a set of element hashes; the
+    permutations are seeded (42), so signatures agree across processes."""
+    if num_perm not in _PERM_CACHE:
+        _PERM_CACHE[num_perm] = _perm_params(num_perm)
+    a, b = _PERM_CACHE[num_perm]
     if hashes.size == 0:
         return np.full(num_perm, MERSENNE_P, dtype=np.uint64)
     # (num_perm, n) — modular arithmetic in object-free uint64 with wraparound
@@ -102,8 +102,9 @@ def lsh_band_keys(sig: np.ndarray, bands: int = 16) -> list[int]:
     return keys
 
 
-def simhash64(hashes: np.ndarray, weights: np.ndarray | None = None) -> int:
-    """64-bit SimHash (Charikar 2002) over element hashes, vectorized."""
+def simhash64(hashes: np.ndarray) -> int:
+    """64-bit SimHash (Charikar 2002) over element hashes, each of weight 1,
+    vectorized."""
     if hashes.size == 0:
         return 0
     h64 = np.empty(hashes.size, dtype=np.uint64)
@@ -114,8 +115,7 @@ def simhash64(hashes: np.ndarray, weights: np.ndarray | None = None) -> int:
     bits = ((h64[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)).astype(
         np.int64
     )
-    w = weights if weights is not None else np.ones(hashes.size, dtype=np.int64)
-    sums = (bits * 2 - 1).T @ w
+    sums = (bits * 2 - 1).sum(axis=0)
     out = np.uint64(0)
     for bit in range(64):
         if sums[bit] > 0:
@@ -194,9 +194,11 @@ def shingle_tf(text: str, k: int = 3) -> tuple[np.ndarray, np.ndarray]:
     return np.unique(windows @ weights, return_counts=True)
 
 
-def rolling_fingerprint(text: str, window: int = 32) -> int:
-    """Deterministic 64-bit document fingerprint: min crc over byte windows
-    (winnowing-style min-sampling, Schleimer et al. 2003 simplified)."""
+def rolling_fingerprint(text: str) -> int:
+    """Deterministic 64-bit document fingerprint: min crc over 32-byte
+    windows (winnowing-style min-sampling, Schleimer et al. 2003
+    simplified)."""
+    window = 32
     data = text.encode("utf-8", errors="ignore")
     if len(data) <= window:
         return zlib.crc32(data)

@@ -4,16 +4,18 @@
   products via `F.zip_with`+`F.aggregate` (JVM, codegen) for oracle parity;
   `cosine_topk_arrow` is the same math through a vectorized pandas UDF
   (one numpy matmul per Arrow batch) for throughput.
-- sign_lsh_topk: the scale path — random-hyperplane LSH where the
-  hyperplanes are the first `n_planes` coordinate axes (sign bits).  Probes
-  the query's bucket plus all 1-bit-flip neighbor buckets, so moderate
-  boundary effects don't cost recall; exact re-rank inside the probed set.
+- sign_lsh_topk: the scale path — multi-table random-hyperplane LSH.
+  Probes the query's bucket plus all 1-bit-flip neighbor buckets, so
+  moderate boundary effects don't cost recall; exact re-rank inside the
+  probed set.
 - ivf_topk: inverted-file variant — coarse centroids from a deterministic
   sample, `nprobe` nearest lists probed, exact re-rank inside.
 
 At 100 TB the bucketed variants turn an all-rows scan into a partition-
 pruned probe: bucket id is a computed column you can partition/Z-ORDER the
 table by, so the scan only reads the probed buckets.
+
+Every function reads ids from ``vec_id`` and vectors from ``embedding``.
 """
 
 from __future__ import annotations
@@ -27,6 +29,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _LOG = logging.getLogger(__name__)
+
+ID = "vec_id"
+VEC = "embedding"
+# expected rows per sign-LSH bucket (auto_n_planes)
+_TARGET_BUCKET_ROWS = 4096
+# base seed of the multi-table hyperplanes; table t uses _LSH_SEED + 1000 * t
+_LSH_SEED = 13
 
 
 def _dot(a, b):
@@ -45,30 +54,36 @@ def _as_double(c):
     return F.transform(c, lambda x: x.cast("double"))
 
 
+def _vectors(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, v) with the vector as array<double>."""
+    return embeddings.select(F.col(ID), _as_double(F.col(VEC)).alias("v"))
+
+
+def _top_k(df: DataFrame, query_vec: list[float], k: int) -> DataFrame:
+    """Exact cosine of ``v`` against the query, rounded to 6 places; the
+    k best by (cosine desc, id)."""
+    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    cos = _dot(F.col("v"), q) / (_norm(F.col("v")) * _norm(q))
+    return (
+        df.select(ID, F.round(cos, 6).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col(ID))
+        .limit(k)
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k against a literal query vector (JVM-side)."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    e = embeddings.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    cos = _dot(F.col("v"), q) / (_norm(F.col("v")) * _norm(q))
-    return (
-        e.select(id_col, F.round(cos, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _top_k(_vectors(embeddings), query_vec, k)
 
 
 def cosine_topk_arrow(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Same result as brute_force_topk, computed as one numpy matmul per
     Arrow batch — the throughput version of the exact scan."""
@@ -82,18 +97,18 @@ def cosine_topk_arrow(
         return pd.Series(sims)
 
     return (
-        embeddings.select(F.col(id_col), cos(F.col(vec_col)).alias("cosine"))
+        embeddings.select(F.col(ID), cos(F.col(VEC)).alias("cosine"))
         .withColumn("cosine", F.round("cosine", 6))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
+        .orderBy(F.col("cosine").desc(), F.col(ID))
         .limit(k)
     )
 
 
 def sign_bucket(vec_col, n_planes: int = 4):
     """Axis-aligned sign-LSH bucket id: bit i = sign(vec[i]).  Kept for the
-    portable/oracle queries; :func:`random_hyperplanes` +
-    :func:`projected_bucket` is the production path (axis signs depend
-    entirely on the distribution of the first dims)."""
+    portable/oracle queries and :func:`all_pairs_near_duplicates`; the
+    multi-table :func:`random_hyperplanes` index is the top-k path (axis
+    signs depend entirely on the distribution of the first dims)."""
     bits = [
         F.when(F.element_at(vec_col, i + 1) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
         for i in range(n_planes)
@@ -104,7 +119,7 @@ def sign_bucket(vec_col, n_planes: int = 4):
     return out
 
 
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 13) -> np.ndarray:
+def random_hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     """Seeded Gaussian random projections (Charikar sign-LSH): (n_planes,
     dim), unit rows, deterministic for a given (dim, n_planes, seed)."""
     rng = np.random.default_rng(seed)
@@ -118,12 +133,11 @@ def clamp_sign_planes(n_planes: int, dim: int) -> int:
     the bucket count at ``2^dim`` (expected occupancy then stays far above
     target and the salting cap drops pairs).  Clamp auto-sized plane counts
     to the dimension and log when it happens — past ``dim`` axis bits,
-    :func:`projected_bucket` with :func:`random_hyperplanes` is the right
-    tool."""
+    :func:`random_hyperplanes` is the right tool."""
     if n_planes > dim:
         _LOG.warning(
             "sign-LSH: clamping n_planes %d to embedding dim %d "
-            "(use random_hyperplanes/projected_bucket for more bits)",
+            "(use random_hyperplanes for more bits)",
             n_planes,
             dim,
         )
@@ -131,31 +145,15 @@ def clamp_sign_planes(n_planes: int, dim: int) -> int:
     return n_planes
 
 
-def auto_n_planes(n_rows: int, target_bucket_rows: int = 4096) -> int:
+def auto_n_planes(n_rows: int) -> int:
     """Bucket-count sizing: 2^n_planes ~ corpus/target so expected bucket
     occupancy stays ~target regardless of corpus size (fixes the round-1
     toy default of 16 buckets at any scale)."""
     import math
 
-    if n_rows <= target_bucket_rows:
+    if n_rows <= _TARGET_BUCKET_ROWS:
         return 4
-    return max(4, math.ceil(math.log2(n_rows / target_bucket_rows)))
-
-
-def projected_bucket(vec_col, planes: np.ndarray):
-    """Bucket id from sign bits of ``planes @ v`` — one Arrow-batched numpy
-    matmul; the bucket id is a plain long you can partition / Z-ORDER the
-    table by at scale."""
-    p = planes.astype(np.float64)
-    weights = (1 << np.arange(p.shape[0])).astype(np.int64)
-
-    @F.pandas_udf(T.LongType())
-    def bucket(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy()).astype(np.float64)
-        bits = (m @ p.T) >= 0
-        return pd.Series(bits @ weights)
-
-    return bucket(vec_col)
+    return max(4, math.ceil(math.log2(n_rows / _TARGET_BUCKET_ROWS)))
 
 
 def table_buckets(vec_col, planes_per_table: list[np.ndarray]):
@@ -200,9 +198,6 @@ def sign_lsh_topk(
     query_vec: list[float],
     k: int = 10,
     n_planes: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 13,
     axis_planes: bool = False,
     n_tables: int = 4,
 ) -> DataFrame:
@@ -218,41 +213,28 @@ def sign_lsh_topk(
     count job).  ``axis_planes=True`` is the single-table axis-sign legacy
     mode the SQL oracle replays.
     """
-    e = embeddings.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+    e = _vectors(embeddings)
     if n_planes is None:
         n_planes = auto_n_planes(e.count())
-
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = _dot(F.col("v"), q) / (_norm(F.col("v")) * _norm(q))
 
     if axis_planes:
         n_planes = clamp_sign_planes(n_planes, len(query_vec))
         e = e.withColumn("bucket", sign_bucket(F.col("v"), n_planes))
         qb = sum((1 << i) for i in range(n_planes) if query_vec[i] >= 0)
         probes = [qb] + [qb ^ (1 << i) for i in range(n_planes)]
-        probed = e.where(F.col("bucket").isin(probes))
-        return (
-            probed.select(id_col, F.round(cos, 6).alias("cosine"))
-            .orderBy(F.col("cosine").desc(), F.col(id_col))
-            .limit(k)
-        )
+        return _top_k(e.where(F.col("bucket").isin(probes)), query_vec, k)
 
     planes_per_table = [
-        random_hyperplanes(len(query_vec), n_planes, seed + 1000 * t)
+        random_hyperplanes(len(query_vec), n_planes, _LSH_SEED + 1000 * t)
         for t in range(n_tables)
     ]
     probes = _query_probe_set(query_vec, planes_per_table)
     idx = e.select(
-        F.col(id_col),
+        F.col(ID),
         F.explode(table_buckets(F.col("v"), planes_per_table)).alias("tb"),
     )
-    cand = idx.where(F.col("tb").isin(probes)).select(id_col).distinct()
-    probed = e.join(cand, id_col, "left_semi")
-    return (
-        probed.select(id_col, F.round(cos, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    cand = idx.where(F.col("tb").isin(probes)).select(ID).distinct()
+    return _top_k(e.join(cand, ID, "left_semi"), query_vec, k)
 
 
 def ivf_topk(
@@ -261,8 +243,6 @@ def ivf_topk(
     k: int = 10,
     n_lists: int | None = None,
     nprobe: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
 ) -> DataFrame:
     """IVF-flat: deterministic-sample centroids, assign each vector to its
@@ -272,20 +252,13 @@ def ivf_topk(
     ``n_lists=None`` derives the FAISS-style sqrt(N) list count from the
     corpus size (capped so the centroid collect stays a driver-trivial
     broadcast); ``nprobe=None`` probes ~1/8 of the lists (min 4)."""
-    e = embeddings.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    cents = _ivf_centroids(e, n_lists, seed, id_col)
+    e = _vectors(embeddings)
+    cents = _ivf_centroids(e, n_lists, seed, ID)
     if nprobe is None:
         nprobe = max(4, len(cents) // 8)
     probe_lists = _ivf_probe_lists(cents, query_vec, nprobe)
     assigned = e.withColumn("list_id", _ivf_assign_udf(cents)(F.col("v")))
-    probed = assigned.where(F.col("list_id").isin(probe_lists))
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = _dot(F.col("v"), q) / (_norm(F.col("v")) * _norm(q))
-    return (
-        probed.select(id_col, F.round(cos, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _top_k(assigned.where(F.col("list_id").isin(probe_lists)), query_vec, k)
 
 
 def _ivf_centroids(e, n_lists, seed, id_col):
@@ -329,16 +302,14 @@ def build_ivf_index(
     path: str,
     n_lists: int | None = None,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> np.ndarray:
     """Materialize the IVF assignment ONCE as parquet PARTITIONED BY
     ``list_id`` (plus the centroid matrix under ``<path>/_centroids``), so
     repeated queries are partition-pruned reads instead of re-assigning
     every vector per query (the ad-hoc :func:`ivf_topk` cost).  Mirrors
     :func:`build_lsh_index`'s on-disk contract; returns the centroids."""
-    e = embeddings.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    cents = _ivf_centroids(e, n_lists, seed, id_col)
+    e = _vectors(embeddings)
+    cents = _ivf_centroids(e, n_lists, seed, ID)
     assigned = e.withColumn("list_id", _ivf_assign_udf(cents)(F.col("v")))
     assigned.write.mode("overwrite").partitionBy("list_id").parquet(
         f"{path}/data"
@@ -351,13 +322,20 @@ def build_ivf_index(
     return cents
 
 
+def _read_centroids(spark, path: str) -> np.ndarray:
+    rows = spark.read.parquet(f"{path}/_centroids").collect()
+    return np.array(
+        [r["centroid"] for r in sorted(rows, key=lambda r: r["list_id"])],
+        dtype=np.float64,
+    )
+
+
 def query_ivf_index(
     spark,
     path: str,
     query_vec: list[float],
     k: int = 10,
     nprobe: int | None = None,
-    id_col: str = "vec_id",
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """Top-k against a :func:`build_ivf_index` layout.  The ``list_id IN
@@ -365,26 +343,19 @@ def query_ivf_index(
     directories are scanned.  Pass ``centroids`` to skip the (tiny)
     centroid read on hot paths."""
     if centroids is None:
-        rows = spark.read.parquet(f"{path}/_centroids").collect()
-        centroids = np.array(
-            [r["centroid"] for r in sorted(rows, key=lambda r: r["list_id"])],
-            dtype=np.float64,
-        )
+        centroids = _read_centroids(spark, path)
     if nprobe is None:
         nprobe = max(4, len(centroids) // 8)
     probes = _ivf_probe_lists(centroids, query_vec, nprobe)
-    idx = spark.read.parquet(f"{path}/data")
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = _dot(F.col("v"), q) / (_norm(F.col("v")) * _norm(q))
-    return (
-        idx.where(F.col("list_id").isin(probes))
-        .select(id_col, F.round(cos, 6).alias("cosine"))
-        # id dedup makes at-least-once appends (append_ivf_index under
-        # crash replay) harmless at query time
-        .dropDuplicates([id_col])
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
+    # id dedup makes at-least-once appends (append_ivf_index under crash
+    # replay) harmless at query time
+    cand = (
+        spark.read.parquet(f"{path}/data")
+        .where(F.col("list_id").isin(probes))
+        .select(ID, "v")
+        .dropDuplicates([ID])
     )
+    return _top_k(cand, query_vec, k)
 
 
 def build_lsh_index(
@@ -392,17 +363,14 @@ def build_lsh_index(
     path: str,
     n_planes: int | None = None,
     n_tables: int = 4,
-    seed: int = 13,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[np.ndarray]:
     """Materialize the multi-table sign-LSH index as parquet PARTITIONED BY
     the bucket id — the on-disk layout that makes ANN a partition-pruned
     read at 100 TB: a query touches ``n_tables x (bits+1)`` directories out
     of ``n_tables x 2^bits``, and the scan's PartitionFilters prove it
     (asserted in tests).  Returns the plane matrices (regenerate them
-    anywhere with the same (dim, n_planes, seed))."""
-    e = embeddings.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+    anywhere with the same (dim, n_planes) and the module's seeds)."""
+    e = _vectors(embeddings)
     if n_planes is None:
         n_planes = auto_n_planes(e.count())
     first = e.select("v").first()
@@ -412,10 +380,10 @@ def build_lsh_index(
             "null) — cannot infer the embedding dimension"
         )
     dim = len(first["v"])
-    planes = [random_hyperplanes(dim, n_planes, seed + 1000 * t)
+    planes = [random_hyperplanes(dim, n_planes, _LSH_SEED + 1000 * t)
               for t in range(n_tables)]
     idx = e.select(
-        F.col(id_col), F.col("v"),
+        F.col(ID), F.col("v"),
         F.explode(table_buckets(F.col("v"), planes)).alias("tb"),
     )
     idx.write.mode("overwrite").partitionBy("tb").parquet(path)
@@ -426,8 +394,6 @@ def append_lsh_index(
     new_embeddings: DataFrame,
     path: str,
     planes_per_table: list[np.ndarray],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Incrementally add vectors to a :func:`build_lsh_index` layout —
     ``mode('append') + partitionBy`` writes ONLY the bucket directories the
@@ -438,14 +404,11 @@ def append_lsh_index(
     seed)); mixing plane sets silently corrupts recall.
 
     Replay-safe by the query side: :func:`query_lsh_index` dedups on
-    ``id_col``, so a crash-replayed micro-batch appending the same ids
+    ``vec_id``, so a crash-replayed micro-batch appending the same ids
     twice costs bytes, not correctness (compact by rebuilding when the
     duplicate fraction grows)."""
-    e = new_embeddings.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("v")
-    )
-    idx = e.select(
-        F.col(id_col), F.col("v"),
+    idx = _vectors(new_embeddings).select(
+        F.col(ID), F.col("v"),
         F.explode(table_buckets(F.col("v"), planes_per_table)).alias("tb"),
     )
     idx.write.mode("append").partitionBy("tb").parquet(path)
@@ -455,8 +418,6 @@ def append_ivf_index(
     new_embeddings: DataFrame,
     path: str,
     centroids: np.ndarray | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> np.ndarray:
     """Incrementally add vectors to a :func:`build_ivf_index` layout: new
     vectors are assigned to the EXISTING centroids (read from
@@ -466,16 +427,9 @@ def append_ivf_index(
     between data and centroids degrades recall.  Returns the centroids so
     hot paths can cache them."""
     if centroids is None:
-        spark = new_embeddings.sparkSession
-        rows = spark.read.parquet(f"{path}/_centroids").collect()
-        centroids = np.array(
-            [r["centroid"] for r in sorted(rows, key=lambda r: r["list_id"])],
-            dtype=np.float64,
-        )
-    e = new_embeddings.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("v")
-    )
-    assigned = e.withColumn("list_id", _ivf_assign_udf(centroids)(F.col("v")))
+        centroids = _read_centroids(new_embeddings.sparkSession, path)
+    assigned = _vectors(new_embeddings).withColumn(
+        "list_id", _ivf_assign_udf(centroids)(F.col("v")))
     assigned.write.mode("append").partitionBy("list_id").parquet(f"{path}/data")
     return centroids
 
@@ -485,27 +439,23 @@ def ann_index_stream(
     input_dir: str,
     index_path: str,
     planes_per_table: list[np.ndarray],
-    schema: str = "vec_id long, embedding array<float>",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     checkpoint_dir: str | None = None,
     available_now: bool = True,
 ):
     """Streaming ANN index maintenance: readStream(parquet dir) ->
-    foreachBatch(:func:`append_lsh_index`).  Each micro-batch writes only
+    foreachBatch(:func:`append_lsh_index`) over ``vec_id long, embedding
+    array<float>`` drops.  Each micro-batch writes only
     its touched bucket partitions; queries against ``index_path`` see new
     vectors as soon as the batch commits, still partition-pruned.  Same
     foreachBatch discipline as streaming/incremental.py — the checkpoint
     dir gives at-least-once appends, and the query-side id dedup makes
     replays harmless."""
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    stream = spark.readStream.schema(
+        f"{ID} long, {VEC} array<float>").parquet(input_dir)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        append_lsh_index(
-            batch_df, index_path, planes_per_table,
-            id_col=id_col, vec_col=vec_col,
-        )
+        append_lsh_index(batch_df, index_path, planes_per_table)
 
     writer = stream.writeStream.foreachBatch(handle).option(
         "checkpointLocation",
@@ -522,46 +472,33 @@ def query_lsh_index(
     query_vec: list[float],
     planes_per_table: list[np.ndarray],
     k: int = 10,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Top-k against a :func:`build_lsh_index` layout: the ``tb IN (...)``
     filter is a partition filter, so only the probed bucket directories are
     read; exact cosine re-rank inside the candidate union."""
     probes = _query_probe_set(query_vec, planes_per_table)
-    idx = spark.read.parquet(path)
     cand = (
-        idx.where(F.col("tb").isin(probes))
-        .select(id_col, "v")
-        .dropDuplicates([id_col])
+        spark.read.parquet(path)
+        .where(F.col("tb").isin(probes))
+        .select(ID, "v")
+        .dropDuplicates([ID])
     )
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = _dot(F.col("v"), q) / (_norm(F.col("v")) * _norm(q))
-    return (
-        cand.select(id_col, F.round(cos, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _top_k(cand, query_vec, k)
 
 
 def all_pairs_near_duplicates(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    n_planes: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes: np.ndarray | None = None,
     cfg=None,
     lineage=None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs: block by sign bucket, exact cosine
     within buckets (boundary pairs in adjacent buckets are missed — the
-    standard LSH recall trade, tune n_planes down for recall up).  Pass
-    ``planes`` (see :func:`random_hyperplanes`) for projection buckets
-    instead of axis signs.
+    standard LSH recall trade).
 
-    Scale discipline (round-3 VERDICT hazard fix): ``n_planes`` defaults to
-    :func:`auto_n_planes` of the corpus count so bucket count grows with the
-    corpus instead of staying at 16 forever, and the within-bucket self-join
+    Scale discipline: the plane count is :func:`auto_n_planes` of the
+    corpus count (clamped to the embedding dimension), so bucket count
+    grows with the corpus instead of staying at 16 forever, and the within-bucket self-join
     goes through :func:`blocking.candidate_pairs` — the same hot-block
     salting/cap with exact dropped-pair lineage the record-linkage path
     uses, with vectors joined back onto id-only pairs afterwards (fat
@@ -572,18 +509,12 @@ def all_pairs_near_duplicates(
 
     cfg = cfg or DEFAULT_CONFIG
     lineage = lineage or NULL_LINEAGE
-    e = embeddings.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    )
-    if planes is not None:
-        bucket = projected_bucket(F.col("v"), planes)
-    else:
-        if n_planes is None:
-            n_planes = auto_n_planes(e.count())
-        first = e.select(F.size("v").alias("d")).first()
-        if first is not None and first["d"] is not None and first["d"] > 0:
-            n_planes = clamp_sign_planes(n_planes, int(first["d"]))
-        bucket = sign_bucket(F.col("v"), n_planes)
+    e = _vectors(embeddings).withColumnRenamed(ID, "id")
+    n_planes = auto_n_planes(e.count())
+    first = e.select(F.size("v").alias("d")).first()
+    if first is not None and first["d"] is not None and first["d"] > 0:
+        n_planes = clamp_sign_planes(n_planes, int(first["d"]))
+    bucket = sign_bucket(F.col("v"), n_planes)
     keyed = e.select(
         F.col("id").alias("_id"),
         F.concat(F.lit("ann:"), bucket.cast("string")).alias("_bk"),

@@ -179,7 +179,6 @@ def entity_confidence(
     records: DataFrame,
     edges: DataFrame,
     assignments: DataFrame,
-    cfg: ResolutionConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """K4 (confidence.py:10-69): per-component confidence 0..1."""
     rec = records.join(assignments.withColumnRenamed("id", "source_id"), "source_id")
@@ -216,11 +215,7 @@ def entity_confidence(
     return j.select("component_id", F.round(conf, 6).alias("entity_confidence"))
 
 
-def record_confidence(
-    edges: DataFrame,
-    assignments: DataFrame,
-    cfg: ResolutionConfig = DEFAULT_CONFIG,
-) -> DataFrame:
+def record_confidence(edges: DataFrame, assignments: DataFrame) -> DataFrame:
     """K5 (confidence.py:72-109): per-record membership confidence.
 
     Edges exploded in both directions -> groupBy(node) avg/max; records with

@@ -47,14 +47,11 @@ def curate_corpus(
     lineage: LineageLog = NULL_LINEAGE,
     languages: list[str] | None = None,
     min_quality: float = 0.5,
-    max_dup_line_frac: float | None = None,
     max_top_bigram_frac: float | None = None,
     max_pii: int | None = 10,
     near_dup_threshold: float = 0.85,
     dedup_index_path: str | None = None,
     embeddings: DataFrame | None = None,
-    emb_id_col: str = "vec_id",
-    emb_vec_col: str = "embedding",
     semantic_threshold: float = 0.95,
     boilerplate_min_docs: int | None = None,
     bench_index: DataFrame | None = None,
@@ -65,7 +62,8 @@ def curate_corpus(
     """Returns ``{"curated": DataFrame, "counts": dict, "timings": dict}``;
     ``counts`` holds the per-stage survivor numbers (also lineage-logged per
     stage) and ``timings`` the per-stage wall seconds (the checkpoint makes
-    each stage's work land inside its own measurement window)."""
+    each stage's work land inside its own measurement window).
+    ``embeddings`` is a ``(vec_id, embedding)`` table keyed by document id."""
     import time
 
     from ._ckpt import checkpoint as _checkpoint
@@ -156,19 +154,12 @@ def curate_corpus(
     if embeddings is not None:
         from . import semdedup as SD
 
-        surv_emb = embeddings.select(
-            F.col(emb_id_col).cast("string").alias("id"),
-            F.col(emb_vec_col).alias("v_emb"),
-        ).join(
-            cur.select(F.col(id_col).cast("string").alias("id")),
-            "id",
-            "left_semi",
+        surv_ids = cur.select(F.col(id_col).cast("string").alias("__surv"))
+        surv_emb = embeddings.join(
+            surv_ids, F.col("vec_id").cast("string") == F.col("__surv"), "left_semi"
         )
         sem_drop = (
-            SD.semantic_dedup(
-                surv_emb, threshold=semantic_threshold,
-                id_col="id", vec_col="v_emb", lineage=lineage,
-            )
+            SD.semantic_dedup(surv_emb, threshold=semantic_threshold, lineage=lineage)
             .where(~F.col("keep"))
             .select(F.col("id").alias("__sem_drop"))
         )
@@ -190,26 +181,16 @@ def curate_corpus(
     if languages:
         gated = gated.where(F.col("lang_pred").isin(languages))
     gated = gated.where(F.col("quality_score") >= F.lit(min_quality))
-    rep_cols: list[str] = []
-    if max_dup_line_frac is not None or max_top_bigram_frac is not None:
-        # Gopher-style repetition gates (textstats.repetition_features:
-        # explode+agg, O(lines+bigrams) shuffle) join into the same pass
+    if max_top_bigram_frac is not None:
+        # Gopher-style repetition gate (textstats.repetition_features:
+        # explode+agg, O(lines+bigrams) shuffle) joins into the same pass
         rep = TS.repetition_features(cur, id_col, text_col).select(
-            id_col, "dup_line_frac", "top_bigram_frac"
+            id_col, "top_bigram_frac"
         )
-        gated = gated.join(rep, id_col)
-        rep_cols = ["dup_line_frac", "top_bigram_frac"]
-        if max_dup_line_frac is not None:
-            gated = gated.where(
-                F.col("dup_line_frac") <= F.lit(max_dup_line_frac)
-            )
-        if max_top_bigram_frac is not None:
-            gated = gated.where(
-                F.col("top_bigram_frac") <= F.lit(max_top_bigram_frac)
-            )
-    cur = log(
-        "quality_gate", gated.drop("quality_score", "lang_pred", *rep_cols)
-    )
+        gated = gated.join(rep, id_col).where(
+            F.col("top_bigram_frac") <= F.lit(max_top_bigram_frac)
+        ).drop("top_bigram_frac")
+    cur = log("quality_gate", gated.drop("quality_score", "lang_pred"))
 
     # 4. PII: redact in place, drop the pathological tail.  credit_cards=True
     # adds the Luhn-checked pass — opt-in because it's the one redaction

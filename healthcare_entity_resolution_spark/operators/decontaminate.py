@@ -7,8 +7,9 @@ set, then flag any training document whose distinct-shingle overlap ratio
 against that index exceeds a threshold.  100 TB shape:
 
 - the benchmark index is small by construction (eval sets are thousands of
-  documents, not billions) — it broadcasts, so the corpus-side explode
-  joins map-side with NO shuffle of document content;
+  documents, not billions) — AQE broadcasts it once its distinct stage has
+  run, so the corpus-side explode joins map-side with NO shuffle of
+  document content;
 - documents are shingled in ONE Arrow pass (the same numpy kernel the
   MinHash path uses); only (id, shingle_hash) pairs explode, never text;
 - per-document ratios come from one groupBy over the exploded hits —
@@ -69,24 +70,20 @@ def contamination_report(
     text_col: str,
     k: int = 8,
     threshold: float = 0.1,
-    broadcast_index: bool = True,
 ) -> DataFrame:
     """Per-document contamination: (id, n_shingles, n_hits, overlap_ratio,
     contaminated).  ``overlap_ratio`` is |doc-shingles ∩ benchmark| /
     |doc-shingles| — the fraction of the document that appears verbatim (at
     k-gram granularity) in the eval set.
 
-    ``broadcast_index=True`` (default) is the 100 TB path: eval sets are
-    tiny relative to the corpus, so the join is map-side.  Set False if the
-    index outgrows executor memory — the join falls back to shuffle and
-    everything else is unchanged."""
+    The join strategy is AQE's: the index is broadcast when its distinct
+    shingle set is under ``spark.sql.autoBroadcastJoinThreshold`` (eval sets
+    are tiny relative to the corpus, so the join is map-side) and shuffled
+    if it ever outgrows it."""
     state = shingle_state(docs, id_col, text_col, k=k).persist()
     exploded = state.select("id", F.explode("_shn").alias("sh"))
-    idx = bench_index.select("sh").distinct()
-    if broadcast_index:
-        idx = F.broadcast(idx)
     hits = (
-        exploded.join(idx, "sh", "left_semi")
+        exploded.join(bench_index.select("sh").distinct(), "sh", "left_semi")
         .groupBy("id").agg(F.count("*").alias("n_hits"))
     )
     out = (

@@ -119,7 +119,6 @@ def _tier_verify(
     right_state: DataFrame,
     num_perm: int,
     jaccard_threshold: float,
-    est_slack: float | None,
 ) -> DataFrame:
     """Two-tier Jaccard verification: signature-estimated Jaccard first
     (free — the signatures already exist; the join ships only the
@@ -131,13 +130,12 @@ def _tier_verify(
     ``pairs`` has (id_1, id_2); id_1 is looked up in ``left_state`` and
     id_2 in ``right_state``, both (id, _sig, _shn).  Returns
     (id_1, id_2, jaccard) with exact jaccard >= threshold.  ``est_slack``
-    defaults to 3 standard errors of the signature estimator
+    is 3 standard errors of the signature estimator
     (3 * sqrt(t(1-t)/num_perm)), so recall loss vs the always-exact variant
     is the binomial tail beyond 3 sigma (<~0.2%)."""
-    if est_slack is None:
-        est_slack = 3.0 * (
-            jaccard_threshold * (1 - jaccard_threshold) / num_perm
-        ) ** 0.5
+    est_slack = 3.0 * (
+        jaccard_threshold * (1 - jaccard_threshold) / num_perm
+    ) ** 0.5
     s1 = left_state.select(F.col("id").alias("id_1"), F.col("_sig").alias("_s1"))
     s2 = right_state.select(F.col("id").alias("id_2"), F.col("_sig").alias("_s2"))
     agree = F.size(
@@ -166,7 +164,6 @@ def near_duplicate_pairs(
     state: DataFrame,
     cfg: ResolutionConfig,
     jaccard_threshold: float,
-    est_slack: float | None,
     lineage: LineageLog,
 ) -> DataFrame:
     """Verified near-duplicate pairs within one :func:`minhash_doc_state`
@@ -178,7 +175,7 @@ def near_duplicate_pairs(
     signature/shingle blocks (same discipline as candidate_pairs)."""
     pairs = B.candidate_pairs(B.band_block_keys(state), cfg, lineage)
     return _checkpoint(_tier_verify(
-        pairs, state, state, cfg.minhash_permutations, jaccard_threshold, est_slack,
+        pairs, state, state, cfg.minhash_permutations, jaccard_threshold,
     ))
 
 
@@ -188,7 +185,6 @@ def minhash_near_duplicates(
     text_col: str,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     jaccard_threshold: float = 0.7,
-    est_slack: float | None = None,
     lineage: LineageLog = NULL_LINEAGE,
 ) -> DataFrame:
     """Candidate pairs from LSH bands, two-tier verified
@@ -200,7 +196,7 @@ def minhash_near_duplicates(
     through the salted band self-join, whose hot-block drops are logged to
     ``lineage`` (``blocking.salting``)."""
     state = minhash_doc_state(df, id_col, text_col, cfg).persist()
-    out = near_duplicate_pairs(state, cfg, jaccard_threshold, est_slack, lineage)
+    out = near_duplicate_pairs(state, cfg, jaccard_threshold, lineage)
     state.unpersist(blocking=False)
     return out
 

@@ -5,15 +5,17 @@ cannot express: dedupe each NEW crawl batch against everything already
 accepted into the corpus WITHOUT rescanning the corpus.  The index lives on
 disk as two parquet trees:
 
-  <path>/bands/  (id, bk)      partitioned by shard = pmod(bk, n_shards)
+  <path>/bands/  (id, bk)      partitioned by shard = pmod(bk, N_SHARDS)
   <path>/state/  (id, _sig, _shn)
   <path>/_meta/  one row: (num_perm, bands, shingle_k, n_shards)
 
+Documents are read as ``(doc_id, text)``; only :func:`query_dedup_index`,
+which `curate.curate_corpus` calls with its own columns, takes others.
+
 Scale shape (the whole point):
   * A batch probe reads ONLY the band shards its own band keys land in —
-    `shard IN (...)` is a PartitionFilter (plan-asserted in tests), so at
-    n_shards=4096 a small batch touches a few dozen directories of a
-    corpus-sized index.
+    `shard IN (...)` is a PartitionFilter (plan-asserted in tests), so a
+    small batch touches a few dozen of the index's shard directories.
   * Append is ``mode('append') + partitionBy('shard')`` — O(batch), never
     O(index), same contract as `ann.append_lsh_index`.
   * The candidate join ships ids only; verification is `dedup._tier_verify`
@@ -46,7 +48,8 @@ from ._ckpt import checkpoint as _checkpoint
 from .components import connected_components
 from .dedup import _tier_verify, minhash_doc_state, near_duplicate_pairs
 
-DEFAULT_N_SHARDS = 256  # test-scale default; 4096+ at corpus scale
+N_SHARDS = 256  # band-key shards of a built index (kept in its _meta)
+ID, TEXT = "doc_id", "text"
 
 
 # ---------------------------------------------------------------------------
@@ -64,14 +67,11 @@ def _band_rows(state: DataFrame, n_shards: int) -> DataFrame:
 def build_dedup_index(
     df: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     cfg: ResolutionConfig = DEFAULT_CONFIG,
-    n_shards: int = DEFAULT_N_SHARDS,
 ) -> None:
     """Materialize the corpus's MinHash state as a shard-partitioned index."""
-    state = minhash_doc_state(df, id_col, text_col, cfg).persist()
-    _band_rows(state, n_shards).write.mode("overwrite").partitionBy(
+    state = minhash_doc_state(df, ID, TEXT, cfg).persist()
+    _band_rows(state, N_SHARDS).write.mode("overwrite").partitionBy(
         "shard"
     ).parquet(f"{path}/bands")
     state.select("id", "_sig", "_shn").write.mode("overwrite").parquet(
@@ -79,7 +79,7 @@ def build_dedup_index(
     )
     spark = df.sparkSession
     spark.createDataFrame(
-        [(cfg.minhash_permutations, cfg.lsh_bands, cfg.minhash_shingle_k, n_shards)],
+        [(cfg.minhash_permutations, cfg.lsh_bands, cfg.minhash_shingle_k, N_SHARDS)],
         "num_perm int, bands int, shingle_k int, n_shards int",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
     state.unpersist(blocking=False)
@@ -93,8 +93,6 @@ def read_index_meta(spark, path: str) -> dict:
 def append_dedup_index(
     new_df: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     state: DataFrame | None = None,
 ) -> None:
@@ -105,7 +103,7 @@ def append_dedup_index(
     meta = read_index_meta(new_df.sparkSession, path)
     _check_meta(meta, cfg)
     if state is None:
-        state = minhash_doc_state(new_df, id_col, text_col, cfg)
+        state = minhash_doc_state(new_df, ID, TEXT, cfg)
     state = state.persist()
     _band_rows(state, meta["n_shards"]).write.mode("append").partitionBy(
         "shard"
@@ -139,7 +137,6 @@ def query_dedup_index(
     text_col: str = "text",
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     jaccard_threshold: float = 0.7,
-    est_slack: float | None = None,
     max_band_fanout: int | None = None,
     lineage: LineageLog = NULL_LINEAGE,
     state: DataFrame | None = None,
@@ -209,7 +206,6 @@ def query_dedup_index(
         istate,
         meta["num_perm"],
         jaccard_threshold,
-        est_slack,
     ).select(
         F.col("id_1").alias("query_id"),
         F.col("id_2").alias("index_id"),
@@ -230,8 +226,6 @@ def query_dedup_index(
 def incremental_dedup_step(
     new_df: DataFrame,
     path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     jaccard_threshold: float = 0.7,
     append: bool = True,
@@ -249,10 +243,10 @@ def incremental_dedup_step(
     index append.  Deterministic: replaying the same batch (even after a
     crash mid-append) converges to the same kept set because index
     self-matches are id-excluded and query-side reads dedup on id."""
-    state = minhash_doc_state(new_df, id_col, text_col, cfg).persist()
+    state = minhash_doc_state(new_df, ID, TEXT, cfg).persist()
 
     index_matches = query_dedup_index(
-        new_df, path, id_col, text_col, cfg, jaccard_threshold,
+        new_df, path, ID, TEXT, cfg, jaccard_threshold,
         lineage=lineage, state=state,
     ).persist()
     dropped_vs_index = index_matches.select(
@@ -261,9 +255,7 @@ def incremental_dedup_step(
 
     # intra-batch near-dups among docs that survived the index probe
     surv_state = state.join(dropped_vs_index, "id", "left_anti").persist()
-    intra = near_duplicate_pairs(
-        surv_state, cfg, jaccard_threshold, None, lineage
-    ).persist()
+    intra = near_duplicate_pairs(surv_state, cfg, jaccard_threshold, lineage).persist()
     # transitive min-id keep: only each duplicate group's minimum id survives
     groups = connected_components(intra.select("id_1", "id_2"), cfg=cfg)
     losers = (
@@ -278,18 +270,15 @@ def incremental_dedup_step(
     # MinHash pass (same discipline as minhash_near_duplicates)
     kept = _checkpoint(
         new_df.join(
-            kept_ids.select(F.col("id").alias(id_col)).dropDuplicates([id_col]),
-            id_col,
+            kept_ids.select(F.col("id").alias(ID)).dropDuplicates([ID]),
+            ID,
             "left_semi",
         )
     )
 
     if append:
         kept_state = state.join(kept_ids, "id", "left_semi")
-        append_dedup_index(
-            kept, path, id_col, text_col, cfg,
-            state=kept_state,
-        )
+        append_dedup_index(kept, path, cfg, state=kept_state)
     lineage.log(
         "dedup_index.step",
         batch_rows=new_df.count(),
@@ -307,15 +296,12 @@ def dedup_index_stream(
     input_dir: str,
     index_path: str,
     output_dir: str,
-    schema: str = "doc_id string, text string",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     jaccard_threshold: float = 0.7,
     checkpoint_dir: str | None = None,
-    available_now: bool = True,
 ):
-    """Streaming crawl dedup: readStream(parquet dir) -> foreachBatch
+    """Streaming crawl dedup: readStream(parquet dir of ``doc_id string,
+    text string`` drops, every file available now) -> foreachBatch
     (:func:`incremental_dedup_step`) -> append kept docs to ``output_dir``.
 
     At-least-once like every foreachBatch sink here: a crash-replayed batch
@@ -323,21 +309,15 @@ def dedup_index_stream(
     its duplicate ids re-drop, and the only cost is duplicate band/state
     rows that the query side's id-dedup neutralizes (rebuild to compact)."""
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    stream = spark.readStream.schema(f"{ID} string, {TEXT} string").parquet(input_dir)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):
             return
-        res = incremental_dedup_step(
-            batch_df, index_path, id_col, text_col, cfg, jaccard_threshold,
-            append=True,
-        )
+        res = incremental_dedup_step(batch_df, index_path, cfg, jaccard_threshold)
         res["kept"].write.mode("append").parquet(output_dir)
 
-    writer = stream.writeStream.foreachBatch(handle).option(
+    return stream.writeStream.foreachBatch(handle).option(
         "checkpointLocation",
         checkpoint_dir or f"{index_path}/_stream_checkpoint",
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ).trigger(availableNow=True).start()

@@ -8,6 +8,9 @@ contingency table ``groupBy(pred, true).count()`` in closed form
 
 ``labeled_pair_f1`` is the BASELINE gate: F1 of MATCH decisions on labeled
 same-block candidate pairs.
+
+Ground truth is ``(file_id, true_entity_id)``; ``pairwise_cluster_f1``
+joins it on ``id`` to a ``(id, component_id)`` clustering.
 """
 
 from __future__ import annotations
@@ -20,20 +23,17 @@ def _c2(col):
     return F.sum(F.expr(f"{col} * ({col} - 1) / 2"))
 
 
-def pairwise_cluster_f1(pred: DataFrame, truth: DataFrame,
-                        id_col: str = "id",
-                        pred_col: str = "component_id",
-                        true_col: str = "true_entity_id") -> dict:
+def pairwise_cluster_f1(pred: DataFrame, truth: DataFrame) -> dict:
     """Exact pairwise P/R/F1 between predicted clustering and ground truth."""
-    j = pred.select(id_col, pred_col).join(truth.select(id_col, true_col), id_col)
-    cont = j.groupBy(pred_col, true_col).agg(F.count("*").alias("n")).persist()
+    j = pred.select("id", "component_id").join(truth.select("id", "true_entity_id"), "id")
+    cont = j.groupBy("component_id", "true_entity_id").agg(F.count("*").alias("n")).persist()
     tp = cont.agg(_c2("n").alias("x")).collect()[0]["x"] or 0.0
     pred_pairs = (
-        cont.groupBy(pred_col).agg(F.sum("n").alias("n"))
+        cont.groupBy("component_id").agg(F.sum("n").alias("n"))
         .agg(_c2("n").alias("x")).collect()[0]["x"] or 0.0
     )
     true_pairs = (
-        cont.groupBy(true_col).agg(F.sum("n").alias("n"))
+        cont.groupBy("true_entity_id").agg(F.sum("n").alias("n"))
         .agg(_c2("n").alias("x")).collect()[0]["x"] or 0.0
     )
     cont.unpersist()
@@ -50,21 +50,27 @@ def pairwise_cluster_f1(pred: DataFrame, truth: DataFrame,
     }
 
 
-def labeled_pair_f1(classified: DataFrame, truth: DataFrame,
-                    id_col: str = "file_id",
-                    true_col: str = "true_entity_id") -> dict:
+def _labeled(classified: DataFrame, truth: DataFrame) -> DataFrame:
+    """``classified`` with both sides' true entity and boolean ``actual`` /
+    ``predicted`` columns."""
+    t1 = truth.select(F.col("file_id").alias("id_1"), F.col("true_entity_id").alias("true_1"))
+    t2 = truth.select(F.col("file_id").alias("id_2"), F.col("true_entity_id").alias("true_2"))
+    return (
+        classified.join(t1, "id_1").join(t2, "id_2")
+        .withColumn("actual", F.col("true_1") == F.col("true_2"))
+        .withColumn("predicted", F.col("decision") == "match")
+    )
+
+
+def labeled_pair_f1(classified: DataFrame, truth: DataFrame) -> dict:
     """BASELINE gate: F1 of MATCH decisions on labeled same-block pairs.
 
     ``classified`` must carry (id_1, id_2, decision).  A pair is positive iff
     both sides share a ground-truth entity.
     """
-    t1 = truth.select(F.col(id_col).alias("id_1"), F.col(true_col).alias("true_1"))
-    t2 = truth.select(F.col(id_col).alias("id_2"), F.col(true_col).alias("true_2"))
-    j = (
-        classified.select("id_1", "id_2", "decision")
-        .join(t1, "id_1").join(t2, "id_2")
-        .withColumn("actual", (F.col("true_1") == F.col("true_2")).cast("int"))
-        .withColumn("predicted", (F.col("decision") == "match").cast("int"))
+    j = _labeled(classified.select("id_1", "id_2", "decision"), truth).select(
+        F.col("actual").cast("int").alias("actual"),
+        F.col("predicted").cast("int").alias("predicted"),
     )
     agg = j.agg(
         F.sum(F.expr("predicted * actual")).alias("tp"),
@@ -82,19 +88,10 @@ def labeled_pair_f1(classified: DataFrame, truth: DataFrame,
     }
 
 
-def error_analysis(classified: DataFrame, truth: DataFrame,
-                   id_col: str = "file_id",
-                   true_col: str = "true_entity_id",
-                   limit: int = 20) -> DataFrame:
-    """FP/FN pair listings (analog of evaluation.py:131-194)."""
-    t1 = truth.select(F.col(id_col).alias("id_1"), F.col(true_col).alias("true_1"))
-    t2 = truth.select(F.col(id_col).alias("id_2"), F.col(true_col).alias("true_2"))
-    j = (
-        classified.join(t1, "id_1").join(t2, "id_2")
-        .withColumn("actual", F.col("true_1") == F.col("true_2"))
-        .withColumn("predicted", F.col("decision") == "match")
-    )
+def error_analysis(classified: DataFrame, truth: DataFrame) -> DataFrame:
+    """The first 20 FP/FN pairs (analog of evaluation.py:131-194)."""
+    j = _labeled(classified, truth)
     errs = j.where(F.col("actual") != F.col("predicted")).withColumn(
         "error_type", F.when(F.col("predicted"), "false_positive").otherwise("false_negative")
     )
-    return errs.orderBy("error_type", "id_1", "id_2").limit(limit)
+    return errs.orderBy("error_type", "id_1", "id_2").limit(20)

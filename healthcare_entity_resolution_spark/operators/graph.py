@@ -172,7 +172,6 @@ def specialty_conflicts(records: DataFrame, assignments: DataFrame) -> DataFrame
 
 def detect_overmatching(
     quality: DataFrame,
-    cfg: ResolutionConfig = DEFAULT_CONFIG,
     records: DataFrame | None = None,
     assignments: DataFrame | None = None,
     edges: DataFrame | None = None,
@@ -224,12 +223,9 @@ GRAPH_DIAG_SCHEMA = (
 )
 
 
-def component_graph_diagnostics(
-    edges: DataFrame, assignments: DataFrame,
-    weak_threshold: float = 0.5,
-) -> DataFrame:
+def component_graph_diagnostics(edges: DataFrame, assignments: DataFrame) -> DataFrame:
     """G8-helper/G12: per-component bridges / weak bridges (weight below
-    ``weak_threshold``, reference overmatching.py:100-123) / articulation
+    0.5, reference overmatching.py:100-123) / articulation
     points / cohesion via networkx inside applyInPandas (components bounded
     by G7)."""
     e = edges.join(
@@ -245,7 +241,7 @@ def component_graph_diagnostics(
         n = g.number_of_nodes()
         bridges = list(nx.bridges(g)) if n > 2 else []
         weak = [(u, v) for u, v in bridges
-                if g[u][v].get("weight", 0.5) < weak_threshold]
+                if g[u][v].get("weight", 0.5) < 0.5]
         arts = list(nx.articulation_points(g)) if n > 2 else []
         # reference cohesion (overmatching.py:164-186):
         # 0.6 * avg edge weight + 0.4 * density; singletons -> 1.0

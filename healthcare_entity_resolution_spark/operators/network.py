@@ -23,31 +23,29 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from ..config import DEFAULT_CONFIG, ResolutionConfig
 from ..plans.lineage import NULL_LINEAGE, LineageLog
 
+# largest facility whose members are paired as colleagues
+MAX_FACILITY_SIZE = 100
 
-def build_referral_graph(
-    referrals: DataFrame,
-    mapping: DataFrame,
-    src_col: str = "referring_npi",
-    dst_col: str = "receiving_npi",
-    date_col: str = "referral_date",
-) -> DataFrame:
-    """N1/A10 (referrals.py:13-85 + J3): map raw referral endpoints through
+
+def build_referral_graph(referrals: DataFrame, mapping: DataFrame) -> DataFrame:
+    """N1/A10 (referrals.py:13-85 + J3): map raw referral endpoints
+    (``referring_npi`` -> ``receiving_npi`` on ``referral_date``) through
     the source->canonical mapping (two broadcast joins, inner = drop
     unresolved), drop self-loops, aggregate count + max(date) per edge."""
     m_src = mapping.select(
-        F.col("source_key").alias(src_col), F.col("canonical_id").alias("src")
+        F.col("source_key").alias("referring_npi"), F.col("canonical_id").alias("src")
     )
     m_dst = mapping.select(
-        F.col("source_key").alias(dst_col), F.col("canonical_id").alias("dst")
+        F.col("source_key").alias("receiving_npi"), F.col("canonical_id").alias("dst")
     )
     return (
-        referrals.join(F.broadcast(m_src), src_col)
-        .join(F.broadcast(m_dst), dst_col)
+        referrals.join(F.broadcast(m_src), "referring_npi")
+        .join(F.broadcast(m_dst), "receiving_npi")
         .where(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(
             F.count("*").alias("referral_count"),
-            F.max(date_col).alias("last_referral_date"),
+            F.max("referral_date").alias("last_referral_date"),
         )
     )
 
@@ -145,20 +143,16 @@ def referral_metrics(edges: DataFrame) -> DataFrame:
     )
 
 
-def colleague_pairs(
-    entities: DataFrame,
-    max_facility_size: int = 100,
-    id_col: str = "canonical_id",
-    facility_col: str = "primary_facility",
-) -> DataFrame:
-    """N4 (influence.py:90-135): same-facility pair enumeration; facilities
-    larger than the cap are skipped — logged, not silent (cf. reference's
-    silent `continue` at influence.py:113)."""
-    fac = entities.where(F.col(facility_col).isNotNull()).select(
-        F.col(facility_col).alias("facility"), F.col(id_col).alias("id")
+def colleague_pairs(entities: DataFrame) -> DataFrame:
+    """N4 (influence.py:90-135): same-facility pairs of ``canonical_id``s
+    sharing a ``primary_facility``; facilities of more than
+    ``MAX_FACILITY_SIZE`` members are skipped (the reference's
+    `continue` at influence.py:113)."""
+    fac = entities.where(F.col("primary_facility").isNotNull()).select(
+        F.col("primary_facility").alias("facility"), F.col("canonical_id").alias("id")
     )
     sizes = fac.groupBy("facility").agg(F.count("*").alias("n"))
-    keep = sizes.where((F.col("n") >= 2) & (F.col("n") <= max_facility_size))
+    keep = sizes.where((F.col("n") >= 2) & (F.col("n") <= MAX_FACILITY_SIZE))
     fac = fac.join(F.broadcast(keep.select("facility")), "facility", "left_semi")
     a = fac.select("facility", F.col("id").alias("id_1"))
     b = fac.select("facility", F.col("id").alias("id_2"))

@@ -200,7 +200,8 @@ def parse_affiliation(col: F.Column) -> F.Column:
 
 def geocode_by_zip(records: DataFrame, centroids: DataFrame) -> DataFrame:
     """P5 (etl/geocoder.py:52-99): broadcast-join zip -> (lat, lon) with a
-    zip3-prefix fallback (deterministic first centroid per prefix)."""
+    zip3-prefix fallback (deterministic first centroid per prefix).  Apply
+    it to a normalized source's records (the reference geocodes licenses)."""
     exact = centroids.select(
         F.col("zip").alias("_zip"), F.col("lat").alias("_lat"), F.col("lon").alias("_lon")
     )
@@ -234,7 +235,6 @@ def normalize_source(
     source: str,
     mapping: dict[str, str],
     id_key_cols: list[str],
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """P1: one per-source normalizer = one projection.  ``mapping`` maps
     canonical record fields -> raw column names; missing fields become NULL.
@@ -273,8 +273,6 @@ def normalize_source(
     for c in ["npi", "name_first", "name_last", "name_middle", "specialty",
               "facility_name", "facility_city", "facility_state", "facility_zip"]:
         df = df.withColumn(c, F.when(F.length(F.col(c)) > 0, F.col(c)))
-    if centroids is not None:
-        df = geocode_by_zip(df, centroids)
     return df.select(*RECORD_COLUMNS)
 
 

@@ -67,6 +67,8 @@ from .components import connected_components
 _EDGE_COLS = ["id_1", "id_2", "weight"]
 # G6's round cap, shared by the distributed and the in-memory replay
 _ID_CONFLICT_ITERATIONS = 50
+# G7's round cap (one weakest edge per oversized component per round)
+_OVERSIZED_ITERATIONS = 1000
 
 
 def prune_low_confidence_edges(edges: DataFrame, threshold: float) -> DataFrame:
@@ -192,11 +194,11 @@ def prune_oversized_clusters(
     edges: DataFrame,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     lineage: LineageLog = NULL_LINEAGE,
-    max_iterations: int = 1000,
     return_assignments: bool = False,
 ):
     """G7: split components larger than ``cfg.max_cluster_size`` by removing
-    the weakest edge per oversized component per iteration.
+    the weakest edge per oversized component per iteration (at most
+    ``_OVERSIZED_ITERATIONS``).
 
     With ``return_assignments=True`` returns ``(edges, assignments)`` so the
     caller (full_pruning) can hand the final component map to G8 instead of
@@ -206,7 +208,7 @@ def prune_oversized_clusters(
     # re-clustered (see _localized_recluster)
     assign = connected_components(cur.select("id_1", "id_2"), cfg=cfg, lineage=lineage)
     removed_total = 0
-    for it in range(max_iterations):
+    for it in range(_OVERSIZED_ITERATIONS):
         oversized = (
             assign.groupBy("component_id").agg(F.count("*").alias("n"))
             .where(F.col("n") > cfg.max_cluster_size)
@@ -232,7 +234,7 @@ def prune_oversized_clusters(
         lineage.log("prune.recluster", scope="oversized",
                     components_touched=n_removed)
         assign = _localized_recluster(cur, assign, touched, cfg, lineage)
-    lineage.log("prune.oversized", iterations=max_iterations,
+    lineage.log("prune.oversized", iterations=_OVERSIZED_ITERATIONS,
                 edges_removed=removed_total, max_iterations_hit=True)
     return (cur, assign) if return_assignments else cur
 
@@ -241,9 +243,9 @@ def prune_weak_bridges(
     edges: DataFrame,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     lineage: LineageLog = NULL_LINEAGE,
-    threshold: float | None = None,
 ) -> DataFrame:
-    """G8: drop bridge edges with weight < threshold (pruning.py:139-169).
+    """G8: drop bridge edges with weight < ``cfg.min_edge_weight``
+    (pruning.py:139-169).
 
     One connected-components run groups the edges by component; each group
     goes through :func:`_component_kernel` (networkx bridges inside
@@ -252,12 +254,11 @@ def prune_weak_bridges(
     parallelizes across components.  Returns the surviving
     ``(id_1, id_2, weight)`` rows.
     """
-    t = cfg.min_edge_weight if threshold is None else threshold
     e = edges.select(*_EDGE_COLS)
     assign = connected_components(e.select("id_1", "id_2"), cfg=cfg, lineage=lineage)
     lineage.log("prune.weak_bridges", reused_assignments=False)
     return _prune_components(_by_component(e, assign),
-                             _component_kernel(t)).select(*_EDGE_COLS)
+                             _component_kernel(cfg.min_edge_weight)).select(*_EDGE_COLS)
 
 
 def _replay_id_conflicts(pdf: pd.DataFrame, max_iterations: int) -> pd.DataFrame:

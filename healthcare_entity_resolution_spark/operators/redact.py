@@ -20,7 +20,7 @@ Pattern notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PII_PATTERNS: dict[str, str] = {
@@ -34,47 +34,30 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def pii_counts(text: Column, kinds: list[str] | None = None) -> dict[str, Column]:
-    """{kind: regexp_count(text, pattern)} — JVM-side, codegen."""
-    kinds = kinds or list(PII_PATTERNS)
-    return {k: F.regexp_count(text, F.lit(PII_PATTERNS[k])) for k in kinds}
-
-
-def redact_text(text: Column, kinds: list[str] | None = None,
-                token: str = "[{kind}]") -> Column:
-    """Chained regexp_replace over the selected patterns (applied in the
-    declared order, so e.g. emails are replaced before phone rules see the
-    text)."""
-    kinds = kinds or list(PII_PATTERNS)
-    out = text
-    for k in kinds:
-        out = F.regexp_replace(out, PII_PATTERNS[k], token.format(kind=k))
-    return out
-
-
 def redact_pii(
     df: DataFrame,
     text_col: str,
-    kinds: list[str] | None = None,
-    token: str = "[{kind}]",
     keep_original: bool = False,
-    with_counts: bool = True,
 ) -> DataFrame:
-    """Redact PII/secrets in ``text_col`` in place (or alongside, with
-    ``keep_original=True`` -> ``<col>_raw``), adding ``pii_<kind>`` count
-    columns and a ``pii_total`` rollup when ``with_counts``."""
-    kinds = kinds or list(PII_PATTERNS)
+    """Redact every PII/secret pattern in ``text_col`` in place as
+    ``[<kind>]`` (or alongside, with ``keep_original=True`` ->
+    ``<col>_raw``), adding ``pii_<kind>`` count columns (JVM-side
+    ``regexp_count``) and a ``pii_total`` rollup.  The replacements chain in
+    the declared order, so e.g. emails are replaced before phone rules see
+    the text."""
     out = df
-    if with_counts:
-        for k, c in pii_counts(F.col(text_col), kinds).items():
-            out = out.withColumn(f"pii_{k}", c)
-        out = out.withColumn(
-            "pii_total",
-            sum((F.col(f"pii_{k}") for k in kinds), F.lit(0)),
-        )
+    for k, pattern in PII_PATTERNS.items():
+        out = out.withColumn(f"pii_{k}", F.regexp_count(F.col(text_col), F.lit(pattern)))
+    out = out.withColumn(
+        "pii_total",
+        sum((F.col(f"pii_{k}") for k in PII_PATTERNS), F.lit(0)),
+    )
     if keep_original:
         out = out.withColumn(f"{text_col}_raw", F.col(text_col))
-    return out.withColumn(text_col, redact_text(F.col(text_col), kinds, token))
+    text = F.col(text_col)
+    for k, pattern in PII_PATTERNS.items():
+        text = F.regexp_replace(text, pattern, f"[{k}]")
+    return out.withColumn(text_col, text)
 
 
 # ---------------------------------------------------------------------------
@@ -103,14 +86,9 @@ def luhn_valid(digits: str) -> bool:
     return total % 10 == 0
 
 
-def redact_credit_cards(
-    df: DataFrame,
-    text_col: str,
-    token: str = "[credit_card]",
-    with_counts: bool = True,
-) -> DataFrame:
-    """Redact Luhn-valid card numbers; adds ``pii_credit_card`` when
-    ``with_counts``.
+def redact_credit_cards(df: DataFrame, text_col: str) -> DataFrame:
+    """Redact Luhn-valid card numbers as ``[credit_card]``; adds
+    ``pii_credit_card``.
 
     Luhn isn't regex-expressible, so this is the one redaction with a
     Python stage — kept off the hot path by a two-stage split: a JVM
@@ -139,7 +117,7 @@ def redact_credit_cards(
                     nonlocal n
                     if luhn_valid(re.sub(r"[ \-]", "", m.group(0))):
                         n += 1
-                        return token
+                        return "[credit_card]"
                     return m.group(0)
 
                 reds.append(cc_re.sub(sub, t))
@@ -163,7 +141,4 @@ def redact_credit_cards(
     flagged = base.where(F.col("_cc_cand") > 0).mapInPandas(
         _luhn_batches, schema=flagged_schema
     )
-    out = clean.unionByName(flagged).drop("_cc_cand")
-    if not with_counts:
-        out = out.drop("pii_credit_card")
-    return out
+    return clean.unionByName(flagged).drop("_cc_cand")

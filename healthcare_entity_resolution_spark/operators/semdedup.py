@@ -100,21 +100,20 @@ def semantic_dedup(
     embeddings: DataFrame,
     threshold: float = 0.95,
     n_lists: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
     max_cluster_rows: int = 4096,
     policy: str = "min_id",
     lineage: LineageLog = NULL_LINEAGE,
 ) -> DataFrame:
-    """Returns (id, list_id, keep, dup_of) for every input row; filter
-    ``keep`` for the deduplicated corpus.  ``dup_of`` names the kept row
+    """Returns (id, list_id, keep, dup_of) for every ``(vec_id, embedding)``
+    input row, ``id`` being ``vec_id`` as a string; filter ``keep`` for the
+    deduplicated corpus.  ``dup_of`` names the kept row
     that suppressed a dropped one (same cluster, cosine > threshold)."""
     if policy not in ("min_id", "far_from_centroid"):
         raise ValueError(f"semantic_dedup: unknown keep policy {policy!r}")
     e = embeddings.select(
-        F.col(id_col).cast("string").alias("id"),
-        _as_double(F.col(vec_col)).alias("v"),
+        F.col("vec_id").cast("string").alias("id"),
+        _as_double(F.col("embedding")).alias("v"),
     )
     cents = _ivf_centroids(e, n_lists, seed, "id")
     assigned = e.withColumn("list_id", _ivf_assign_udf(cents)(F.col("v")))
@@ -155,17 +154,14 @@ def semantic_dedup(
 def semantic_dedup_survivors(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     **kw,
 ) -> DataFrame:
-    """Convenience: the input rows whose embedding survived
-    :func:`semantic_dedup` (semi join on id — input columns preserved)."""
-    kept = semantic_dedup(
-        embeddings, threshold, id_col=id_col, vec_col=vec_col, **kw
-    ).where("keep")
+    """Convenience: the input rows whose ``embedding`` survived
+    :func:`semantic_dedup` (semi join on ``vec_id`` — input columns
+    preserved)."""
+    kept = semantic_dedup(embeddings, threshold, **kw).where("keep")
     return embeddings.join(
         kept.select(F.col("id").cast("string").alias("_kid")),
-        F.col(id_col).cast("string") == F.col("_kid"),
+        F.col("vec_id").cast("string") == F.col("_kid"),
         "left_semi",
     )

@@ -237,8 +237,8 @@ def resolve_physicians(
 
     entities = K.canonical_entities(records, assignments, cfg)
     mapping = K.source_canonical_mapping(entities)
-    e_conf = K.entity_confidence(records, pruned, assignments, cfg)
-    r_conf = K.record_confidence(pruned, assignments, cfg)
+    e_conf = K.entity_confidence(records, pruned, assignments)
+    r_conf = K.record_confidence(pruned, assignments)
 
     out = {
         "records": records,

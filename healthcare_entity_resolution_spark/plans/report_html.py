@@ -5,9 +5,9 @@ The reference serves an interactive viewer over exported CSV/JSON; a
 100 TB batch engine wants the inverse: the RUN writes a self-contained
 ``report.html`` artifact (no server, no JS deps, inline SVG charts) from
 the same small report aggregates the reference pages display —
-resolution stats, cluster-size histogram, match quality, per-source data
-quality, top entities.  Reports are small by construction (bounded
-groupBy outputs), so collecting them at the edge is driver-safe.
+resolution stats, cluster-size histogram, match quality, provenance.
+Reports are small by construction (bounded groupBy outputs), so
+collecting them at the edge is driver-safe.
 
 Use :func:`write_run_report` with the pipeline's DataFrames, or the
 ``make_report.py`` CLI to render from a committed run directory without a
@@ -37,6 +37,10 @@ svg .bar { fill: #4361ee; }
 svg text { font-size: 10px; fill: #333; }
 footer { margin-top: 3rem; color: #888; font-size: .8rem; }
 """
+_TITLE = "Entity Resolution Run Report"
+# physician_search_report page sizes: result rows, and drill-down entities
+_MAX_ROWS = 200
+_MAX_DRILL = 10
 
 
 def _table(rows: Sequence[Mapping], columns: Sequence[str] | None = None,
@@ -57,14 +61,13 @@ def _table(rows: Sequence[Mapping], columns: Sequence[str] | None = None,
     return f"<table><tr>{head}</tr>{body}</table>{more}"
 
 
-def _bar_svg(items: Sequence[tuple[str, float]], width: int = 640,
-             bar_h: int = 18, gap: int = 4) -> str:
+def _bar_svg(items: Sequence[tuple[str, float]]) -> str:
     """Horizontal bar chart as inline SVG (no JS)."""
     items = list(items)
     if not items:
         return ""
     mx = max(v for _, v in items) or 1.0
-    label_w = 120
+    width, bar_h, gap, label_w = 640, 18, 4, 120
     rows = []
     for i, (label, v) in enumerate(items):
         y = i * (bar_h + gap)
@@ -82,7 +85,6 @@ def _bar_svg(items: Sequence[tuple[str, float]], width: int = 640,
 def render_report(
     stats: Mapping[str, object],
     sections: Iterable[tuple[str, str]],
-    title: str = "Entity Resolution Run Report",
 ) -> str:
     kpis = "".join(
         f'<span class="kpi"><b>{html.escape(str(v))}</b>{html.escape(str(k))}</span>'
@@ -91,8 +93,8 @@ def render_report(
     body = "".join(f"<h2>{html.escape(t)}</h2>{content}" for t, content in sections)
     return (
         "<!doctype html><html><head><meta charset='utf-8'>"
-        f"<title>{html.escape(title)}</title><style>{_CSS}</style></head>"
-        f"<body><h1>{html.escape(title)}</h1>{kpis}{body}"
+        f"<title>{html.escape(_TITLE)}</title><style>{_CSS}</style></head>"
+        f"<body><h1>{html.escape(_TITLE)}</h1>{kpis}{body}"
         "<footer>generated by healthcare_entity_resolution_spark</footer>"
         "</body></html>"
     )
@@ -101,17 +103,12 @@ def render_report(
 def write_run_report(
     path: str,
     assignments=None,
-    entities=None,
     classified=None,
-    records=None,
     lineage_events: Sequence[Mapping] | None = None,
-    top_n: int = 25,
 ) -> str:
     """Collect the small report aggregates from the pipeline DataFrames and
     write a self-contained HTML file.  Every input is optional — sections
     render for whatever is provided."""
-    from pyspark.sql import functions as F
-
     from ..operators import reports as R
 
     stats: dict[str, object] = {}
@@ -138,17 +135,6 @@ def write_run_report(
             _bar_svg([(str(r["decision"]), float(r["n"])) for r in mq])
             + _table(mq),
         ))
-    if records is not None:
-        dq = [r.asDict() for r in R.data_quality_report(records).collect()]
-        sections.append(("Per-source data quality", _table(dq)))
-    if entities is not None:
-        cols = [c for c in entities.columns
-                if c not in ("source_records", "all_facilities")]
-        top = [r.asDict() for r in
-               entities.select(*cols)
-               .orderBy(F.col("source_count").desc(), "canonical_id")
-               .limit(top_n).collect()]
-        sections.append((f"Top {top_n} entities by source count", _table(top)))
     if lineage_events:
         sections.append((
             "Provenance (lineage events)",
@@ -173,14 +159,12 @@ def physician_search_report(
     min_confidence: float | None = None,
     name_contains: str | None = None,
     top_k: int = 25,
-    max_rows: int = 200,
-    max_drill: int = 10,
 ) -> str:
     """Pages 01+02+03 of the reference dashboard (dashboard/pages/
     01_physician_search.py, 02_referral_network.py:46-90,
     03_data_provenance.py:60-111) as one static HTML page: metrics row,
-    filtered results table, top influencers, and per-entity source-record
-    drill-down.  All heavy lifting happens as Spark plans over the
+    filtered results table (first 200), top influencers, and per-entity
+    source-record drill-down (first 10 entities).  All heavy lifting happens as Spark plans over the
     exported snapshots (:mod:`.explore`); only page-sized results are
     collected."""
     from . import explore as X
@@ -203,9 +187,9 @@ def physician_search_report(
     cols = ["id", "name", "specialty", "city", "state",
             "confidence_score", "npi", "source_count"]
     rows = [r.asDict() for r in
-            filtered.select(*cols).orderBy("id").limit(max_rows).collect()]
+            filtered.select(*cols).orderBy("id").limit(_MAX_ROWS).collect()]
     sections.append(
-        (f"Results (first {len(rows)})", _table(rows, cols, max_rows=max_rows))
+        (f"Results (first {len(rows)})", _table(rows, cols, max_rows=_MAX_ROWS))
     )
 
     if influence is not None:
@@ -220,7 +204,7 @@ def physician_search_report(
         ))
 
     if mapping is not None and rows:
-        drill_ids = [r["id"] for r in rows[:max_drill]]
+        drill_ids = [r["id"] for r in rows[:_MAX_DRILL]]
         prov = mapping.join(
             physicians.select(F.col("id").alias("canonical_id"), "name")
             .where(F.col("canonical_id").isin(drill_ids)),
@@ -232,13 +216,13 @@ def physician_search_report(
             f"Provenance drill-down (first {len(drill_ids)} entities)",
             _table(prov_rows,
                    ["canonical_id", "name", "source_record_id",
-                    "confidence"], max_rows=max_drill * 25),
+                    "confidence"], max_rows=_MAX_DRILL * 25),
         ))
         if source_records is not None and prov_rows:
             rec_ids = sorted({r["source_record_id"] for r in prov_rows})
             recs = source_records.where(F.col("id").isin(rec_ids))
             rec_rows = [r.asDict() for r in recs.orderBy("id").limit(
-                max_drill * 25).collect()]
+                _MAX_DRILL * 25).collect()]
             keep = [c for c in ("id", "source", "source_id", "npi",
                                 "name_raw", "specialty", "facility_city",
                                 "facility_state") if rec_rows

@@ -47,8 +47,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("HER_ARROW_BATCH", "16384"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
         .config("spark.driver.memory",
                 os.environ.get("HER_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")

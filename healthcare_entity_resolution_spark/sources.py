@@ -10,7 +10,7 @@ projection.  Column mappings mirror the reference normalizers exactly:
 - cms:         provider_name / provider_specialty / facility_name; NPI
                kept (invalid forms nulled by P7).
 - license:     physician_name / specialty / address_city / address_state /
-               address_zip (geocoded via P5 when centroids are given);
+               address_zip (geocode with ``normalize.geocode_by_zip``, P5);
                licenses carry no NPI.
 - hospital:    physician_name / department -> specialty / hospital_name.
 - publication: author_name; facility/city/state parsed from
@@ -120,10 +120,7 @@ def load_all_sources(spark: SparkSession, data_dir: str) -> dict[str, DataFrame]
     }
 
 
-def normalize_all(
-    sources: dict[str, DataFrame],
-    centroids: DataFrame | None = None,
-) -> DataFrame:
+def normalize_all(sources: dict[str, DataFrame]) -> DataFrame:
     """normalizer.py:177-194 analog: per-source projections unioned into
     ONE records frame with :data:`RECORD_COLUMNS`."""
     frames = []
@@ -141,12 +138,7 @@ def normalize_all(
                 .withColumn("_aff_state", F.col("_aff.state"))
                 .drop("_aff")
             )
-        frames.append(
-            normalize_source(
-                raw, name, SOURCE_MAPPINGS[name], ["source_id"],
-                centroids=centroids if name == "license" else None,
-            )
-        )
+        frames.append(normalize_source(raw, name, SOURCE_MAPPINGS[name], ["source_id"]))
     return union_sources(frames)
 
 

@@ -329,8 +329,11 @@ def micro_batch_resolve(
     foreachBatch epoch: a crash-replay re-presents the same id, and the
     already-committed deltas are skipped wholesale; direct (batch-mode)
     callers may omit it — the id is then derived from the files snapshot,
-    which commits LAST, so a half-committed batch replays under the same
-    derived id and the per-row guards below still apply.
+    which commits LAST, so a half-committed batch that the caller re-sends
+    replays under the same derived id and the per-row guards below still
+    apply.  Any other batch derives that id too: if its keys are not in the
+    crashed attempt's committed keys delta, the call raises rather than skip
+    its appends (re-send the crashed batch first).
 
     A file repeated within the batch is ingested once (the row with the
     smallest ``content_sha`` is kept).
@@ -347,12 +350,19 @@ def micro_batch_resolve(
     batch of f files has at most f x ((1 + ``cfg.lsh_bands``) x
     ``cfg.max_block_size`` + 1) candidate pairs (the 1: a file's
     exact-copy representative).  The rule reads only the committed state at
-    probe time, so a replay probes the same blocks.  The driver holds the
-    batch's rows, the candidate ids and the decorated pairs and scores of
-    one ``SCORE_CHUNK`` of candidates.  Envelope (local[4] on a shared
-    4-core x86 host, 2g driver heap): a 1,000-file batch against 1,000
-    committed files, every path-stem block at the cap (200 members, 100
-    new), ~640-byte contents: 149,574 candidates, 19.8 s (14.2 s when keys
+    probe time, so a replay probes the same blocks.
+
+    This is where stream and batch answers differ: the batch path salts a
+    hot block (``blocking.candidate_pairs``), a micro-batch drops it.  On
+    a backfill of 8,070 generated files the stream ended with 2,669
+    entities, one micro-batch of all of them with 2,676, and pairing every
+    block with 2,664.
+
+    The driver holds the batch's rows, the candidate ids and the decorated
+    pairs and scores of one ``SCORE_CHUNK`` of candidates.  Envelope
+    (local[4] on a shared 4-core x86 host, 2g driver heap): a 1,000-file
+    batch against 1,000 committed files, every path-stem block at the cap
+    (200 members, 100 new), ~640-byte contents: 149,574 candidates, 19.8 s (14.2 s when keys
     and scoring were Spark stages), 130 MB peak Arrow memory, driver Python
     RSS +226 MB.  The work grows with the batch and the kernels run on one
     core, so callers pass batches of at most about 1,000 files: the stream
@@ -392,18 +402,23 @@ def micro_batch_resolve(
                     new_match_pairs=0, entities=n_entities, replayed=True)
         return {"new_files": 0, "new_pairs": 0, "total_entities": n_entities}
     delta = batch_id if batch_id is not None else store.next_delta_id("files")
-    if store.has_delta("files", delta):
+    unkeyed = pc.is_in(pending["_id"], value_set=new_ids)
+    if store.has_delta("files", delta) or (
+            store.has_delta("keys", delta) and pc.any(unkeyed).as_py()):
         # The files delta for this epoch is already committed, yet the batch
-        # contains files the snapshot has never seen (n_new > 0): the caller
-        # is replaying epoch ids against the wrong run_dir (e.g. the stream
-        # checkpoint was reset but the snapshot store was not).  Proceeding
-        # would silently skip the files/keys/edges appends and strand the
-        # new files as assignment-only singletons.
+        # contains files the snapshot has never seen (n_new > 0); or the keys
+        # delta is, yet lacks the keys of some of them (a direct caller's
+        # batch after a crashed one derives the crashed batch's id).  Either
+        # the caller is replaying epoch ids against the wrong run_dir (e.g.
+        # the stream checkpoint was reset but the snapshot store was not), or
+        # the crashed batch was not re-sent.  Proceeding would silently skip
+        # the keys/edges (or files) appends of the new files.
         raise ValueError(
             f"micro_batch_resolve: epoch {delta} is already committed in "
             f"{store.run_dir!r} but this batch still has {n_new} un-ingested "
             "files — stream checkpoint and snapshot store are out of sync "
-            "(reset both together, or resume from the original checkpoint)"
+            "(reset both together, resume from the original checkpoint, or "
+            "re-send the batch that crashed)"
         )
     cand = cand.filter(pc.or_(pc.is_in(cand["id_1"], value_set=new_ids),
                               pc.is_in(cand["id_2"], value_set=new_ids)))

@@ -2,9 +2,9 @@
 aggregation surface (driver brief: "watermarks + windowed aggs for late
 data").
 
-``ingest_metrics_stream`` turns a file-arrival stream into per-window,
-per-language ingest counts and byte volumes: event-time tumbling windows
-with a watermark, so late arrivals inside the allowed lateness still
+``ingest_metrics`` turns a file-arrival stream into per-window,
+per-language ingest counts and byte volumes: one-minute event-time
+tumbling windows with a two-minute watermark, so late arrivals inside the allowed lateness still
 update their window and state for closed windows is dropped (bounded
 state — the property that matters on an unbounded 100 TB ingest feed).
 """
@@ -15,15 +15,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def ingest_metrics(
-    stream_df: DataFrame,
-    event_time_col: str = "event_time",
-    window_duration: str = "1 minute",
-    watermark: str = "2 minutes",
-    lang_col: str = "lang",
-    content_col: str = "content",
-) -> DataFrame:
-    """Streaming frame -> windowed (window, lang, n_files, n_bytes).
+def ingest_metrics(stream_df: DataFrame) -> DataFrame:
+    """Streaming frame of (event_time, lang, content) -> windowed
+    (window, lang, n_files, n_bytes).
 
     Append-safe: with the watermark, a window finalizes once event time
     passes window_end + watermark; update mode emits refinements as late
@@ -31,14 +25,11 @@ def ingest_metrics(
     """
     return (
         stream_df
-        .withWatermark(event_time_col, watermark)
-        .groupBy(
-            F.window(F.col(event_time_col), window_duration).alias("win"),
-            F.col(lang_col).alias("lang"),
-        )
+        .withWatermark("event_time", "2 minutes")
+        .groupBy(F.window(F.col("event_time"), "1 minute").alias("win"), "lang")
         .agg(
             F.count("*").alias("n_files"),
-            F.sum(F.length(content_col)).alias("n_bytes"),
+            F.sum(F.length("content")).alias("n_bytes"),
         )
         .select(
             F.col("win.start").alias("window_start"),

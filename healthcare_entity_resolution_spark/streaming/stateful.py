@@ -30,13 +30,9 @@ FIRST_SEEN_OUTPUT_SCHEMA = (
 _STATE_SCHEMA = "first_id string, occurrences bigint"
 
 
-def dedup_first_seen(
-    stream_df: DataFrame,
-    id_col: str = "file_id",
-    key_col: str = "content_sha",
-) -> DataFrame:
-    """``stream_df`` is a STREAMING frame carrying ``id_col`` + ``key_col``.
-    Emits one row per key per micro-batch in which the key appears:
+def dedup_first_seen(stream_df: DataFrame) -> DataFrame:
+    """``stream_df`` is a STREAMING frame carrying ``file_id`` +
+    ``content_sha``.  Emits one row per key per micro-batch in which the key appears:
     ``(key, first_id, cumulative occurrences, is_new)`` (update mode)."""
 
     def update(
@@ -48,7 +44,7 @@ def dedup_first_seen(
         min_id = None
         for pdf in pdfs:
             n += len(pdf)
-            batch_min = pdf[id_col].min()
+            batch_min = pdf["file_id"].min()
             if min_id is None or batch_min < min_id:
                 min_id = batch_min
         if state.exists:
@@ -68,8 +64,8 @@ def dedup_first_seen(
         )
 
     return (
-        stream_df.select(key_col, id_col)
-        .groupBy(key_col)
+        stream_df.select("content_sha", "file_id")
+        .groupBy("content_sha")
         .applyInPandasWithState(
             update,
             FIRST_SEEN_OUTPUT_SCHEMA,

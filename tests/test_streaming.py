@@ -144,6 +144,43 @@ def test_epoch_collision_raises(spark, corpus, tmp_path):
     shutil.rmtree(run_dir, ignore_errors=True)
 
 
+def test_batch_after_crashed_batch_raises(spark, corpus, tmp_path, monkeypatch):
+    """A direct caller's batch after one that crashed between its keys/edges
+    deltas and its assignments commit derives the crashed batch's id.  Its
+    keys are not in that committed keys delta, so proceeding would skip its
+    keys and edges appends; it must raise instead.  Re-sending the crashed
+    batch still replays it, and the next batch then commits in full."""
+    run_dir = str(tmp_path / "crashed_state")
+    store = SnapshotStore(spark, run_dir)
+    wave = F.abs(F.xxhash64("repo", "path", "commit")) % 3
+    w0, w1, w2 = (corpus.where(wave == i) for i in range(3))
+    micro_batch_resolve(spark, w0, store)
+
+    commit = store.commit
+
+    def crash(df, name):
+        if name == "assignments":
+            raise RuntimeError("crash before the assignments commit")
+        return commit(df, name)
+
+    monkeypatch.setattr(store, "commit", crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        micro_batch_resolve(spark, w1, store)
+    monkeypatch.undo()
+    assert store.has_delta("keys", 1) and store.has_delta("edges", 1)
+    assert not store.has_delta("files", 1)
+
+    with pytest.raises(ValueError, match="out of sync"):
+        micro_batch_resolve(spark, w2, store)
+
+    assert micro_batch_resolve(spark, w1, store)["new_files"] == w1.count()
+    assert micro_batch_resolve(spark, w2, store)["new_files"] == w2.count()
+    files = {r[0] for r in store.load("files").select("file_id").collect()}
+    keyed = {r[0] for r in store.load("keys").select("_id").collect()}
+    assert len(files) == corpus.count() and files <= keyed
+    shutil.rmtree(run_dir, ignore_errors=True)
+
+
 def test_readstream_available_now(spark, corpus, tmp_path):
     in_dir = str(tmp_path / "drops")
     run_dir = str(tmp_path / "state")
