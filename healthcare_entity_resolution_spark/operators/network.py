@@ -143,15 +143,20 @@ def referral_metrics(edges: DataFrame) -> DataFrame:
     )
 
 
-def colleague_pairs(entities: DataFrame) -> DataFrame:
+def colleague_pairs(entities: DataFrame, lineage: LineageLog = NULL_LINEAGE) -> DataFrame:
     """N4 (influence.py:90-135): same-facility pairs of ``canonical_id``s
     sharing a ``primary_facility``; facilities of more than
     ``MAX_FACILITY_SIZE`` members are skipped (the reference's
-    `continue` at influence.py:113)."""
+    `continue` at influence.py:113), and ``network.colleagues_skipped``
+    logs how many and their members (one aggregation job)."""
     fac = entities.where(F.col("primary_facility").isNotNull()).select(
         F.col("primary_facility").alias("facility"), F.col("canonical_id").alias("id")
     )
     sizes = fac.groupBy("facility").agg(F.count("*").alias("n"))
+    over = sizes.where(F.col("n") > MAX_FACILITY_SIZE).agg(
+        F.count("*").alias("facilities"), F.sum("n").alias("members")).collect()[0]
+    lineage.log("network.colleagues_skipped", facilities=over["facilities"],
+                members=over["members"] or 0, max_facility_size=MAX_FACILITY_SIZE)
     keep = sizes.where((F.col("n") >= 2) & (F.col("n") <= MAX_FACILITY_SIZE))
     fac = fac.join(F.broadcast(keep.select("facility")), "facility", "left_semi")
     a = fac.select("facility", F.col("id").alias("id_1"))

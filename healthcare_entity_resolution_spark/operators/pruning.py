@@ -41,8 +41,9 @@ G5-filtered edges and splits the components by size:
   per-component window ``row_number() = 1`` pick of the weakest qualifying
   edge, an anti-join removal, and a connected-components re-run over ONLY
   the components that lost an edge.  G7 leaves every component within the
-  cap, so G8 then runs the same kernel (G6 off) over G7's components.  A
-  ``limit(1)`` probe skips this path when no component is that large.
+  cap, so G8 then runs the same kernel (G6 off) over G7's components.
+  This path is skipped when no component is that large (a count observed
+  on the checkpoint of the tagged edges, no job of its own).
 
 The kernel's labels give the final clustering (G4) without a second
 connected-components run.  Components shrink monotonically, the
@@ -55,7 +56,7 @@ from __future__ import annotations
 from collections import Counter
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
@@ -373,23 +374,27 @@ def full_pruning(
     running the distributed loops over every edge, and the pass labels the
     pieces that survive, so no second connected-components run is needed.
     """
-    n0 = edges.count()
-    e = prune_low_confidence_edges(edges, cfg.min_edge_weight * 0.75).select(*_EDGE_COLS)
+    # the prune.done counts ride on the checkpoints: no job of their own
+    n_in, n_large, n_out = Observation(), Observation(), Observation()
+    e = _checkpoint(prune_low_confidence_edges(
+        edges.observe(n_in, F.count(F.lit(1)).alias("n")), cfg.min_edge_weight * 0.75,
+    ).select(*_EDGE_COLS))
     assign = connected_components(e.select("id_1", "id_2"), cfg=cfg, lineage=lineage)
     sizes = assign.groupBy("component_id").agg(F.count("*").alias("_n"))
     aid = node_ids.select("id", "auth_id")
+    bounded = F.coalesce("_n", F.lit(0)) <= cfg.max_cluster_size
     tagged = _checkpoint(
         _by_component(e, assign)
         .join(sizes, "component_id", "left")
         .join(aid.toDF("id_1", "aid_1"), "id_1", "left")
         .join(aid.toDF("id_2", "aid_2"), "id_2", "left")
+        .observe(n_large, F.count(F.when(~bounded, 1)).alias("n"))
     )
-    bounded = F.coalesce("_n", F.lit(0)) <= cfg.max_cluster_size
     out = _prune_components(tagged.where(bounded), _component_kernel(
         cfg.min_edge_weight, _ID_CONFLICT_ITERATIONS if cfg.prune_id_conflicts else 0))
     lineage.log("prune.weak_bridges", reused_assignments=True)
 
-    has_large = tagged.where(~bounded).limit(1).count() > 0
+    has_large = n_large.get["n"] > 0
     if has_large:
         big = tagged.where(~bounded).select(*_EDGE_COLS)
         if cfg.prune_id_conflicts:
@@ -397,8 +402,8 @@ def full_pruning(
         big, big_assign = prune_oversized_clusters(big, cfg, lineage, return_assignments=True)
         out = out.unionByName(_prune_components(
             _by_component(big, big_assign), _component_kernel(cfg.min_edge_weight)))
-    out = _checkpoint(out)
-    n1 = out.count()
+    out = _checkpoint(out.observe(n_out, F.count(F.lit(1)).alias("n")))
+    n0, n1 = n_in.get["n"], n_out.get["n"]
     lineage.log("prune.done", edges_before=n0, edges_after=n1, removed=n0 - n1,
                 large_components=has_large)
     ends = out.select(F.col("id_1").alias("id"), "component_id").union(

@@ -1,5 +1,6 @@
 """Property-test large-star/small-star CC against networkx (SURVEY §7 M5)."""
 
+import contextlib
 import random
 
 import networkx as nx
@@ -109,3 +110,83 @@ def test_cluster_labels_by_size_desc(spark):
     labeled = {r["id"]: r["cluster_label"] for r in assign_cluster_labels(assign).collect()}
     assert labeled["a"] == labeled["b"] == labeled["c"] == "CLUSTER_00000"
     assert labeled["x"] == labeled["y"] == "CLUSTER_00001"
+
+
+def _expected_rows(edges, vertices=()):
+    g = nx.Graph()
+    g.add_nodes_from(vertices)
+    g.add_edges_from((a, b) for a, b in edges if a != b)
+    return sorted((n, min(c)) for c in nx.connected_components(g) for n in c)
+
+
+def _cc_events(log):
+    return [e for e in log.events if e["stage"].startswith("cc.")]
+
+
+@contextlib.contextmanager
+def _shuffle_partitions(spark, n):
+    """``n`` shuffle partitions; with AQE's coalescing off, a small graph's
+    components span them."""
+    keys = {"spark.sql.shuffle.partitions": str(n),
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    before = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k, v in keys.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("name", ["random-4-25-200", "chain-40", "lexicographic",
+                                  "empty", "self-loops"])
+def test_cc_same_output_for_any_partitioning(spark, name):
+    """The rows do not depend on the partitioning: at 1 shuffle partition
+    every component is pre-contracted to a star (no round); at 4 and 16
+    (AQE's coalescing off) components span partitions, so pre-contraction
+    is partial and the rounds finish the job (a 40-node path needs them).
+    Input partitions vary too, and isolated vertices come out as
+    singletons."""
+    edges = ({**PINNED_GRAPHS, "self-loops": [("a", "a"), ("b", "b")]})[name]
+    vertices = sorted({x for e in edges for x in e} | {"zz-isolated", "0-isolated"})
+    edf = spark.createDataFrame(edges, "id_1 string, id_2 string")
+    vdf = spark.createDataFrame([(v,) for v in vertices], "id string")
+    rounds = {}
+    layouts = ((1, edf.repartition(5)), (4, edf.coalesce(1)), (16, edf.repartition(7)))
+    for shuffle, parts in layouts:
+        with _shuffle_partitions(spark, shuffle):
+            log = LineageLog()
+            got = sorted(map(tuple, connected_components(parts, lineage=log).collect()))
+            assert got == _expected_rows(edges), shuffle
+            (ev,) = _cc_events(log)
+            assert ev["stage"] == "cc.converged"
+            rounds[shuffle] = ev["iterations"]
+            got_v = sorted(map(tuple, connected_components(parts, vdf).collect()))
+            assert got_v == _expected_rows(edges, vertices), shuffle
+    assert rounds[1] == 0
+    if name == "chain-40":
+        assert rounds[16] > 0
+
+
+def test_cc_reads_its_input_once(spark):
+    """The input lineage is evaluated once: a Python UDF in it counts one
+    call per input row, though the rounds (the graph spans 4 partitions)
+    and the result's endpoints run jobs of their own."""
+    edges = PINNED_GRAPHS["random-2-50-60"] + [("x", "x")]
+    calls = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        calls.add(1)
+        return x
+
+    edf = spark.createDataFrame(edges, "id_1 string, id_2 string").repartition(3)
+    # nondeterministic: the optimizer may not copy the call into the filter
+    counted = edf.select(
+        F.udf(tick, "string").asNondeterministic()("id_1").alias("id_1"), "id_2")
+    log = LineageLog()
+    with _shuffle_partitions(spark, 4):
+        rows = connected_components(counted, lineage=log).collect()
+    assert sorted(map(tuple, rows)) == _expected_rows(edges)
+    assert _cc_events(log)[0]["iterations"] > 0
+    assert calls.value == len(edges)

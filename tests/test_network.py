@@ -187,6 +187,23 @@ def test_colleagues_and_ego(spark, referral_edges):
     assert {r["id"] for r in ego["colleagues"].collect()} == {"PHY_B", "PHY_D"}
 
 
+def test_oversized_facility_is_skipped_and_logged(spark):
+    """A facility of more than MAX_FACILITY_SIZE members gives no colleague
+    pairs, and the skip is logged with its member count."""
+    big = N.MAX_FACILITY_SIZE + 1
+    ents = spark.createDataFrame(
+        [(f"PHY_{i:03d}", "MEGA") for i in range(big)]
+        + [("PHY_X", "CLINIC"), ("PHY_Y", "CLINIC")],
+        "canonical_id string, primary_facility string",
+    )
+    lin = LineageLog()
+    got = sorted((r.id_1, r.id_2, r.facility) for r in N.colleague_pairs(ents, lin).collect())
+    assert got == [("PHY_X", "PHY_Y", "CLINIC")]
+    skipped = [e for e in lin.events if e["stage"] == "network.colleagues_skipped"]
+    assert len(skipped) == 1
+    assert skipped[0]["facilities"] == 1 and skipped[0]["members"] == big
+
+
 def test_top_influencers(spark, referral_edges):
     ranks = N.pagerank(referral_edges, ResolutionConfig())
     top = N.top_influencers(ranks, N.referral_metrics(referral_edges), n=2).collect()

@@ -321,6 +321,27 @@ def test_full_pruning_bounded_components_run_one_cc(spark):
     assert done[0]["large_components"] is False
 
 
+def test_full_pruning_local_components_run_no_round(spark):
+    """A small graph: AQE coalesces its deduplicated edges into one
+    partition, pre-contraction leaves every component a star, and the one
+    connected-components run needs no large/small-star round.  The
+    prune.done counts (observed on checkpoints) are exact."""
+    from healthcare_entity_resolution_spark.plans.lineage import LineageLog
+
+    rows = [("a", "b", 0.9), ("b", "c", 0.9), ("c", "d", 0.9),
+            ("p", "q", 0.5), ("q", "r", 0.5), ("x", "y", 0.1)]
+    ids = spark.createDataFrame([("a", "111"), ("d", "111")], "id string, auth_id string")
+    lin = LineageLog()
+    pruned, assign = P.full_pruning(_edges(spark, rows).repartition(3), ids, lineage=lin)
+    assert pruned.count() == 5
+    assert dict(assign.collect()) == {"a": "a", "d": "a"}
+    cc = [ev for ev in lin.events if ev["stage"].startswith("cc.")]
+    assert [(ev["stage"], ev["iterations"]) for ev in cc] == [("cc.converged", 0)]
+    done = [ev for ev in lin.events if ev["stage"] == "prune.done"]
+    assert [(ev["edges_before"], ev["edges_after"], ev["removed"], ev["large_components"])
+            for ev in done] == [(6, 5, 1, False)]
+
+
 @pytest.mark.parametrize("id_type", ["string", "bigint"])
 def test_pruning_keeps_id_type(spark, id_type):
     """G8 and full pruning work on string and on bigint ids: the kernel's
