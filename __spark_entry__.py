@@ -253,18 +253,11 @@ def q_a15_multi(spark, sf):
 
 
 def q_a16_pairwise_f1(spark, sf):
-    d = _t(spark, sf, "documents")
-    cont = d.groupBy("lang", "source").agg(F.count("*").alias("n"))
-    c2 = lambda col: F.sum(F.expr(f"{col} * ({col} - 1) / 2"))  # noqa: E731
-    tp = cont.agg(c2("n").alias("tp"))
-    pp = cont.groupBy("lang").agg(F.sum("n").alias("n")).agg(c2("n").alias("pp"))
-    tr = cont.groupBy("source").agg(F.sum("n").alias("n")).agg(c2("n").alias("tr"))
-    j = tp.crossJoin(pp).crossJoin(tr)
-    return j.select(
-        F.round(F.col("tp") / F.col("pp"), 6).alias("precision"),
-        F.round(F.col("tp") / F.col("tr"), 6).alias("recall"),
-        F.round(2 * F.col("tp") / (F.col("pp") + F.col("tr")), 6).alias("f1"),
-    )
+    """A16 pairwise P/R/F1 of the ``lang`` clustering against ``source``."""
+    from healthcare_entity_resolution_spark.operators.evaluate import pairwise_f1
+
+    out = pairwise_f1(_t(spark, sf, "documents"), "lang", "source")
+    return out.select(*[F.round(c, 6).alias(c) for c in ("precision", "recall", "f1")])
 
 
 def q_a17_topk(spark, sf):
@@ -609,23 +602,6 @@ _LI_SCORED_SQL = (
     " CASE WHEN l_partkey % 4 != 0 THEN round(l_quantity / 50.0, 6) END AS specialty_match "
     "FROM lineitem"
 )
-
-
-def q_c1_classify(spark, sf):
-    from healthcare_entity_resolution_spark.operators import classify as C
-
-    out = C.classify(_li_scored(spark, sf))
-    return out.select(
-        "id_1", "id_2", "overall_score", "decision",
-        F.round("confidence", 6).alias("confidence"),
-    )
-
-
-def q_c2_match_type(spark, sf):
-    from healthcare_entity_resolution_spark.operators import classify as C
-
-    out = C.determine_match_type(_li_scored(spark, sf))
-    return out.select("id_1", "id_2", "match_type")
 
 
 # --- G1–G3: edge construction -----------------------------------------------
@@ -1048,30 +1024,6 @@ def q_j3_map_join(spark, sf):
         .where(F.col("src") != F.col("dst"))
         .groupBy("src", "dst").agg(F.count("*").alias("n"))
     )
-
-
-def q_g6_conflict_pruning(spark, sf):
-    """G6 demo (NOT registered in queries(): the iterative CC-per-round
-    fixpoint costs minutes of fixed job overhead at toy scale — covered by
-    tests/test_pruning_canonical.py instead): conflict pruning on a derived
-    graph whose consecutive-custkey edges span nation boundaries."""
-    from healthcare_entity_resolution_spark.operators import pruning as P
-
-    c = _t(spark, sf, "customer").where(F.col("c_custkey") < 300)
-    a = c.select(F.col("c_custkey").alias("k1"), F.col("c_nationkey").alias("n1"))
-    b = c.select(F.col("c_custkey").alias("k2"))
-    edges = (
-        a.join(b, F.col("k2") == F.col("k1") + 1)
-        .select(
-            F.col("k1").cast("string").alias("id_1"),
-            F.col("k2").cast("string").alias("id_2"),
-            (0.5 + (F.col("k1") % 40) / 100.0).alias("weight"),
-        )
-    )
-    ids = c.select(F.col("c_custkey").cast("string").alias("id"),
-                   F.col("c_nationkey").cast("string").alias("auth_id"))
-    pruned = P.prune_id_conflicts(edges, ids)
-    return pruned.select("id_1", "id_2", F.floor(F.col("weight") * 1e6).alias("w_micro"))
 
 
 def q_g12_graph_diagnostics(spark, sf):
@@ -1826,7 +1778,8 @@ def oracle_sql() -> dict[str, str]:
             "FROM sx GROUP BY 1 HAVING count(*) >= 2"
         ),
         "corpus_boilerplate": (
-            "WITH docs2 AS (SELECT doc_id, text || chr(10) || '" + _BP_FOOTER + "'"
+            "WITH docs2 AS (SELECT doc_id, text || chr(10) || '"
+            + _BP_FOOTER.replace("'", "''") + "'"
             "  AS text FROM documents), "
             "normed AS ("
             " SELECT doc_id,"

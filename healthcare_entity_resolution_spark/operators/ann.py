@@ -1,9 +1,7 @@
 """Similarity search over embedding columns (`array<float>`).
 
 - brute_force_topk: exact cosine top-k — the correctness baseline.  Dot
-  products via `F.zip_with`+`F.aggregate` (JVM, codegen) for oracle parity;
-  `cosine_topk_arrow` is the same math through a vectorized pandas UDF
-  (one numpy matmul per Arrow batch) for throughput.
+  products via `F.zip_with`+`F.aggregate` (JVM, codegen) for oracle parity.
 - sign_lsh_topk: the scale path — multi-table random-hyperplane LSH.
   Probes the query's bucket plus all 1-bit-flip neighbor buckets, so
   moderate boundary effects don't cost recall; exact re-rank inside the
@@ -80,35 +78,11 @@ def brute_force_topk(
     return _top_k(_vectors(embeddings), query_vec, k)
 
 
-def cosine_topk_arrow(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-) -> DataFrame:
-    """Same result as brute_force_topk, computed as one numpy matmul per
-    Arrow batch — the throughput version of the exact scan."""
-    qv = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.linalg.norm(qv))
-
-    @F.pandas_udf(T.DoubleType())
-    def cos(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy()).astype(np.float64)
-        sims = (m @ qv) / (np.linalg.norm(m, axis=1) * qn)
-        return pd.Series(sims)
-
-    return (
-        embeddings.select(F.col(ID), cos(F.col(VEC)).alias("cosine"))
-        .withColumn("cosine", F.round("cosine", 6))
-        .orderBy(F.col("cosine").desc(), F.col(ID))
-        .limit(k)
-    )
-
-
 def sign_bucket(vec_col, n_planes: int = 4):
-    """Axis-aligned sign-LSH bucket id: bit i = sign(vec[i]).  Kept for the
-    portable/oracle queries and :func:`all_pairs_near_duplicates`; the
-    multi-table :func:`random_hyperplanes` index is the top-k path (axis
-    signs depend entirely on the distribution of the first dims)."""
+    """Axis-aligned sign-LSH bucket id: bit i = sign(vec[i]).  The blocking
+    key of :func:`all_pairs_near_duplicates`; the multi-table
+    :func:`random_hyperplanes` index is the top-k path (axis signs depend
+    entirely on the distribution of the first dims)."""
     bits = [
         F.when(F.element_at(vec_col, i + 1) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
         for i in range(n_planes)
@@ -198,7 +172,6 @@ def sign_lsh_topk(
     query_vec: list[float],
     k: int = 10,
     n_planes: int | None = None,
-    axis_planes: bool = False,
     n_tables: int = 4,
 ) -> DataFrame:
     """Approximate top-k via multi-table random-hyperplane LSH: ``n_tables``
@@ -210,20 +183,11 @@ def sign_lsh_topk(
     probe filter is an IN-list the scan can push down).
 
     ``n_planes=None`` derives bits-per-table from the corpus size (one
-    count job).  ``axis_planes=True`` is the single-table axis-sign legacy
-    mode the SQL oracle replays.
+    count job).
     """
     e = _vectors(embeddings)
     if n_planes is None:
         n_planes = auto_n_planes(e.count())
-
-    if axis_planes:
-        n_planes = clamp_sign_planes(n_planes, len(query_vec))
-        e = e.withColumn("bucket", sign_bucket(F.col("v"), n_planes))
-        qb = sum((1 << i) for i in range(n_planes) if query_vec[i] >= 0)
-        probes = [qb] + [qb ^ (1 << i) for i in range(n_planes)]
-        return _top_k(e.where(F.col("bucket").isin(probes)), query_vec, k)
-
     planes_per_table = [
         random_hyperplanes(len(query_vec), n_planes, _LSH_SEED + 1000 * t)
         for t in range(n_tables)

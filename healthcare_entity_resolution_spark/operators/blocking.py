@@ -37,6 +37,9 @@ from ..functions import text as textfn
 from ..plans.lineage import NULL_LINEAGE, LineageLog
 
 PAIR_SCHEMA = ["id_1", "id_2"]
+# char-shingle width of the MinHash tokens (:func:`minhash_bands`, the
+# near-dup doc state and the SimHash of dedup.py, the dedup index's _meta)
+MINHASH_SHINGLE_K = 5
 
 
 def exact_block_keys(df: DataFrame, id_col: str, key_expr) -> DataFrame:
@@ -71,7 +74,7 @@ def minhash_bands(texts: pd.Series, cfg: ResolutionConfig = DEFAULT_CONFIG) -> p
             out.append([])
             continue
         sig = textfn.minhash_signature(
-            textfn.shingle_hashes(t, k=cfg.minhash_shingle_k),
+            textfn.shingle_hashes(t, k=MINHASH_SHINGLE_K),
             num_perm=cfg.minhash_permutations,
         )
         out.append(textfn.lsh_band_keys(sig, bands=cfg.lsh_bands))
@@ -187,9 +190,10 @@ def candidate_pairs(
 # Domain key builders
 # ---------------------------------------------------------------------------
 
-def physician_block_keys(records: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG) -> DataFrame:
+def physician_block_keys(records: DataFrame) -> DataFrame:
     """Reference strategies B1–B3 on a normalized records frame with columns
-    (source_id, npi, name_last, facility_state)."""
+    (source_id, npi, name_last, facility_state): NPI, (last name, state) and
+    (soundex of last name, state)."""
     by_npi = exact_block_keys(
         records, "source_id",
         F.when(F.col("npi").isNotNull(), F.concat(F.lit("npi:"), F.col("npi"))),
@@ -202,20 +206,12 @@ def physician_block_keys(records: DataFrame, cfg: ResolutionConfig = DEFAULT_CON
                         F.coalesce(F.upper("facility_state"), F.lit("XX"))),
         ),
     )
-    frames = [by_npi, by_last_state]
-    if cfg.use_soundex_blocking:
-        snd = records.where(F.col("name_last").isNotNull())
-        frames.append(
-            exact_block_keys(
-                snd, "source_id",
-                F.concat_ws("|", F.lit("sx:"), F.soundex(F.upper("name_last")),
-                            F.coalesce(F.upper("facility_state"), F.lit("XX"))),
-            )
-        )
-    out = frames[0]
-    for fdf in frames[1:]:
-        out = out.unionByName(fdf)
-    return out
+    by_soundex = exact_block_keys(
+        records.where(F.col("name_last").isNotNull()), "source_id",
+        F.concat_ws("|", F.lit("sx:"), F.soundex(F.upper("name_last")),
+                    F.coalesce(F.upper("facility_state"), F.lit("XX"))),
+    )
+    return by_npi.unionByName(by_last_state).unionByName(by_soundex)
 
 
 def path_stem_block_keys(files: DataFrame) -> DataFrame:

@@ -30,21 +30,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..config import DEFAULT_CONFIG, ResolutionConfig
+# survivorship priority per source (reference canonicalization/merge.py)
+SOURCE_PRIORITY = {"cms": 4, "license": 3, "hospital": 2, "publication": 1}
 
 
-def _priority_expr(col, cfg: ResolutionConfig):
+def _priority_expr(col):
     expr = F.lit(0)
-    for src, p in cfg.source_priority.items():
+    for src, p in SOURCE_PRIORITY.items():
         expr = F.when(col == src, F.lit(p)).otherwise(expr)
     return expr
 
 
-def canonical_entities(
-    records: DataFrame,
-    assignments: DataFrame,
-    cfg: ResolutionConfig = DEFAULT_CONFIG,
-) -> DataFrame:
+def canonical_entities(records: DataFrame, assignments: DataFrame) -> DataFrame:
     """K1+K3: one canonical row per component over normalized physician-shaped
     records ``(source_id, source, npi, name_raw, specialty, facility_name,
     facility_city, facility_state)``.
@@ -60,7 +57,7 @@ def canonical_entities(
     """
     rec = (
         records.join(assignments.withColumnRenamed("id", "source_id"), "source_id")
-        .withColumn("_prio", _priority_expr(F.col("source"), cfg))
+        .withColumn("_prio", _priority_expr(F.col("source")))
         .withColumn(
             "_vnpi",
             F.when(F.col("npi").rlike("^[0-9]{10}$"), F.col("npi")),
@@ -167,7 +164,7 @@ def source_canonical_mapping(entities: DataFrame) -> DataFrame:
 
 def _singleton_confidence_expr(col):
     # singleton confidence map, confidence.py:112-120 (not the edge-weight
-    # reliability map, cfg.source_reliability)
+    # reliability map, graph.SOURCE_RELIABILITY)
     m = {"cms": 0.85, "license": 0.80, "hospital": 0.70, "publication": 0.50}
     expr = F.lit(0.5)
     for src, v in m.items():

@@ -9,17 +9,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, ResolutionConfig
-
 MATCH, NON_MATCH, UNCERTAIN = "match", "non_match", "uncertain"
 
+# decision thresholds (reference config.py:15-16)
+MATCH_THRESHOLD = 0.85
+NON_MATCH_THRESHOLD = 0.30
 
-def classify(scored: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG,
-             authoritative_col: str = "npi_match") -> DataFrame:
+
+def classify(scored: DataFrame, authoritative_col: str = "npi_match") -> DataFrame:
     """C1: decision + confidence.  ``authoritative_col`` is the tri-state
     trump column (``npi_match`` in the physician domain, ``sha_match`` in
     the code domain -- both emitted by operators/scoring.py)."""
-    mt, nt = cfg.match_threshold, cfg.non_match_threshold
+    mt, nt = MATCH_THRESHOLD, NON_MATCH_THRESHOLD
     mid = (mt + nt) / 2.0
     s = F.col("overall_score")
     auth = F.col(authoritative_col)
@@ -57,10 +58,9 @@ def determine_match_type(classified: DataFrame) -> DataFrame:
     return classified.withColumn("match_type", mt)
 
 
-def confirmed_matches(classified: DataFrame,
-                      cfg: ResolutionConfig = DEFAULT_CONFIG) -> DataFrame:
-    """C4: (id_1, id_2, overall_score) for MATCH (+ UNCERTAIN if configured)."""
-    keep = [MATCH] + ([UNCERTAIN] if cfg.include_uncertain_matches else [])
-    return classified.where(F.col("decision").isin(keep)).select(
+def confirmed_matches(classified: DataFrame) -> DataFrame:
+    """C4: (id_1, id_2, overall_score) for MATCH; UNCERTAIN pairs are not
+    edges."""
+    return classified.where(F.col("decision") == MATCH).select(
         "id_1", "id_2", "overall_score"
     )

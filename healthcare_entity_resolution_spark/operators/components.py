@@ -63,8 +63,11 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ._ckpt import checkpoint as _checkpoint
-from ..config import DEFAULT_CONFIG, ResolutionConfig
 from ..plans.lineage import NULL_LINEAGE, LineageLog
+
+# large-star/small-star round cap; a run that hits it logs
+# ``cc.max_iterations_hit``
+CC_MAX_ITERATIONS = 50
 
 
 def _neighbors(edges: DataFrame) -> DataFrame:
@@ -128,7 +131,6 @@ def _local_stars(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    cfg: ResolutionConfig = DEFAULT_CONFIG,
     lineage: LineageLog = NULL_LINEAGE,
 ) -> DataFrame:
     """Edges ``(id_1, id_2)`` in; returns assignments ``(id, component_id)``,
@@ -154,7 +156,7 @@ def connected_components(
             test, F.count(F.when(leaf & (F.col("c") > 1), 1)).alias("bad"),
             F.count(F.when(leaf, 1)).alias("leaves")))
         final = test.get["bad"] == 0
-        if final or it == cfg.cc_max_iterations:
+        if final or it == CC_MAX_ITERATIONS:
             break
         cur = _checkpoint(_small_star(_large_star(cur, nodes)))
         it += 1

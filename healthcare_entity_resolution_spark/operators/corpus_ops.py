@@ -148,7 +148,14 @@ def _inclusion_hash(id_col: str) -> F.Column:
     """Deterministic uniform [0, 16^15) draw per document id: the first 15
     sha256 hex chars as an integer.  sha256 (not xxhash64) so the draw is
     reproducible OUTSIDE Spark too — the DuckDB parity test replays it with
-    ``CAST(concat('0x', substr(sha256(id), 1, 15)) AS BIGINT)``."""
+    ``CAST(concat('0x', substr(sha256(id), 1, 15)) AS BIGINT)``.
+
+    Comparison contract: the 60-bit draw is cast to double (53-bit
+    mantissa) before it is compared with ``sample_rate * 16^15``, so a
+    draw within one double step of a threshold (up to 2^8 near 16^15) may
+    round onto it.  DuckDB promotes a BIGINT-vs-DOUBLE comparison the same
+    way, which is why the two engines keep the same documents; a replay
+    that compared exact integers could differ at the boundary."""
     return F.conv(
         F.substring(F.sha2(F.col(id_col).cast("string"), 256), 1, 15), 16, 10
     ).cast("bigint")

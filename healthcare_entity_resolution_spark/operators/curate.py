@@ -136,7 +136,7 @@ def curate_corpus(
         cur, id_col, text_col, cfg, jaccard_threshold=near_dup_threshold,
         lineage=lineage,
     )
-    groups = D.near_duplicate_groups(pairs, cfg)
+    groups = D.near_duplicate_groups(pairs)
     drop = groups.where(F.col("id") != F.col("group_id")).select(
         F.col("id").alias("__drop_id")
     )

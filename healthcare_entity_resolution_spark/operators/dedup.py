@@ -89,7 +89,6 @@ def minhash_doc_state(
     < 2^61 (Mersenne-prime modulus) and shingle hashes < 2^(8k), so both fit
     LongType without folding."""
     num_perm, bands = cfg.minhash_permutations, cfg.lsh_bands
-    shingle_k = cfg.minhash_shingle_k
 
     def gen(batches):
         for pdf in batches:
@@ -101,7 +100,7 @@ def minhash_doc_state(
                     sg.append([])
                     shn.append([])
                     continue
-                hashes = textfn.shingle_hashes(t, k=shingle_k)
+                hashes = textfn.shingle_hashes(t, k=B.MINHASH_SHINGLE_K)
                 sig = textfn.minhash_signature(hashes, num_perm=num_perm)
                 bnd.append(textfn.lsh_band_keys(sig, bands=bands))
                 sg.append(sig.astype("int64").tolist())
@@ -201,11 +200,9 @@ def minhash_near_duplicates(
     return out
 
 
-def near_duplicate_groups(
-    pairs: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG
-) -> DataFrame:
+def near_duplicate_groups(pairs: DataFrame) -> DataFrame:
     """Transitive duplicate groups from verified near-dup pairs (min-id CC)."""
-    return connected_components(pairs.select("id_1", "id_2"), cfg=cfg).select(
+    return connected_components(pairs.select("id_1", "id_2")).select(
         F.col("component_id").alias("group_id"), "id"
     )
 
@@ -220,12 +217,8 @@ SIMHASH_SCHEMA = T.StructType([
 ])
 
 
-def simhash_signatures(
-    df: DataFrame, id_col: str, text_col: str,
-    cfg: ResolutionConfig = DEFAULT_CONFIG,
-) -> DataFrame:
+def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash per document (token-frequency weighted)."""
-    shingle_k = cfg.minhash_shingle_k
 
     @F.pandas_udf(T.LongType())
     def sh(texts: pd.Series) -> pd.Series:
@@ -234,7 +227,7 @@ def simhash_signatures(
             if t is None:
                 out.append(None)
                 continue
-            v = textfn.simhash64(textfn.shingle_hashes(t, k=shingle_k))
+            v = textfn.simhash64(textfn.shingle_hashes(t, k=B.MINHASH_SHINGLE_K))
             out.append(v - (1 << 64) if v >= (1 << 63) else v)  # to signed
         return pd.Series(out, dtype="Int64")
 

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..config import DEFAULT_CONFIG, ResolutionConfig
 from ..plans.lineage import NULL_LINEAGE, LineageLog
 from ._ckpt import checkpoint as _checkpoint
+from .blocking import MINHASH_SHINGLE_K
 from .components import connected_components
 from .dedup import _tier_verify, minhash_doc_state, near_duplicate_pairs
 
@@ -79,7 +80,7 @@ def build_dedup_index(
     )
     spark = df.sparkSession
     spark.createDataFrame(
-        [(cfg.minhash_permutations, cfg.lsh_bands, cfg.minhash_shingle_k, N_SHARDS)],
+        [(cfg.minhash_permutations, cfg.lsh_bands, MINHASH_SHINGLE_K, N_SHARDS)],
         "num_perm int, bands int, shingle_k int, n_shards int",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
     state.unpersist(blocking=False)
@@ -115,7 +116,7 @@ def append_dedup_index(
 
 
 def _check_meta(meta: dict, cfg: ResolutionConfig) -> None:
-    got = (cfg.minhash_permutations, cfg.lsh_bands, cfg.minhash_shingle_k)
+    got = (cfg.minhash_permutations, cfg.lsh_bands, MINHASH_SHINGLE_K)
     want = (meta["num_perm"], meta["bands"], meta["shingle_k"])
     if got != want:
         raise ValueError(
@@ -257,7 +258,7 @@ def incremental_dedup_step(
     surv_state = state.join(dropped_vs_index, "id", "left_anti").persist()
     intra = near_duplicate_pairs(surv_state, cfg, jaccard_threshold, lineage).persist()
     # transitive min-id keep: only each duplicate group's minimum id survives
-    groups = connected_components(intra.select("id_1", "id_2"), cfg=cfg)
+    groups = connected_components(intra.select("id_1", "id_2"))
     losers = (
         groups.where(F.col("id") != F.col("component_id")).select("id")
     )

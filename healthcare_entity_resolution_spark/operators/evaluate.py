@@ -9,8 +9,10 @@ contingency table ``groupBy(pred, true).count()`` in closed form
 ``labeled_pair_f1`` is the BASELINE gate: F1 of MATCH decisions on labeled
 same-block candidate pairs.
 
-Ground truth is ``(file_id, true_entity_id)``; ``pairwise_cluster_f1``
-joins it on ``id`` to a ``(id, component_id)`` clustering.
+``pairwise_f1`` is the one cluster-level implementation: the
+``a16_pairwise_f1`` driver key runs it over two label columns, and
+``pairwise_cluster_f1`` over a clustering joined to ground truth
+``(id, true_entity_id)``.
 """
 
 from __future__ import annotations
@@ -23,31 +25,36 @@ def _c2(col):
     return F.sum(F.expr(f"{col} * ({col} - 1) / 2"))
 
 
+def pairwise_f1(labelled: DataFrame, pred_col: str, true_col: str) -> DataFrame:
+    """Exact pairwise P/R/F1 of the clustering ``pred_col`` against the
+    ground truth ``true_col`` over a frame of one row per item, as ONE query
+    over the ``groupBy(pred, true).count()`` contingency table.  Returns one
+    row: true_positives, predicted_pairs, true_pairs, precision, recall, f1.
+
+    No predicted pairs gives precision 1.0 and no true pairs recall 1.0; F1
+    is then ``2·TP / (predicted + true)``, and 1.0 when neither side has a
+    pair.  Every division is guarded: under ANSI mode (Spark's default) an
+    unguarded one raises ``DIVIDE_BY_ZERO`` on an all-singleton side."""
+    cont = labelled.groupBy(pred_col, true_col).agg(F.count("*").alias("n"))
+    pp = cont.groupBy(pred_col).agg(F.sum("n").alias("n")).agg(_c2("n").alias("pp"))
+    tr = cont.groupBy(true_col).agg(F.sum("n").alias("n")).agg(_c2("n").alias("tr"))
+    # a sum over no rows is NULL: no pairs
+    tp, pp_n, tr_n = (F.coalesce(F.col(c), F.lit(0.0)) for c in ("tp", "pp", "tr"))
+    return cont.agg(_c2("n").alias("tp")).crossJoin(pp).crossJoin(tr).select(
+        tp.alias("true_positives"),
+        pp_n.alias("predicted_pairs"),
+        tr_n.alias("true_pairs"),
+        F.when(pp_n > 0, tp / pp_n).otherwise(1.0).alias("precision"),
+        F.when(tr_n > 0, tp / tr_n).otherwise(1.0).alias("recall"),
+        F.when(pp_n + tr_n > 0, 2 * tp / (pp_n + tr_n)).otherwise(1.0).alias("f1"),
+    )
+
+
 def pairwise_cluster_f1(pred: DataFrame, truth: DataFrame) -> dict:
-    """Exact pairwise P/R/F1 between predicted clustering and ground truth."""
+    """:func:`pairwise_f1` of a ``(id, component_id)`` clustering against
+    ``(id, true_entity_id)`` ground truth, joined on ``id``, as a dict."""
     j = pred.select("id", "component_id").join(truth.select("id", "true_entity_id"), "id")
-    cont = j.groupBy("component_id", "true_entity_id").agg(F.count("*").alias("n")).persist()
-    tp = cont.agg(_c2("n").alias("x")).collect()[0]["x"] or 0.0
-    pred_pairs = (
-        cont.groupBy("component_id").agg(F.sum("n").alias("n"))
-        .agg(_c2("n").alias("x")).collect()[0]["x"] or 0.0
-    )
-    true_pairs = (
-        cont.groupBy("true_entity_id").agg(F.sum("n").alias("n"))
-        .agg(_c2("n").alias("x")).collect()[0]["x"] or 0.0
-    )
-    cont.unpersist()
-    precision = tp / pred_pairs if pred_pairs else 1.0
-    recall = tp / true_pairs if true_pairs else 1.0
-    f1 = 2 * precision * recall / (precision + recall) if (precision + recall) else 0.0
-    return {
-        "true_positives": float(tp),
-        "predicted_pairs": float(pred_pairs),
-        "true_pairs": float(true_pairs),
-        "precision": precision,
-        "recall": recall,
-        "f1": f1,
-    }
+    return pairwise_f1(j, "component_id", "true_entity_id").first().asDict()
 
 
 def _labeled(classified: DataFrame, truth: DataFrame) -> DataFrame:

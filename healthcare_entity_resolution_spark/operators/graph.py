@@ -17,19 +17,18 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, ResolutionConfig
 
+# edge-weight reliability per source (reference graph/builder.py:95-137)
+SOURCE_RELIABILITY = {"cms": 1.0, "license": 0.9, "hospital": 0.8, "publication": 0.6}
 
-def _reliability_expr(col, cfg: ResolutionConfig):
+
+def _reliability_expr(col):
     expr = F.lit(0.5)
-    for src, rel in cfg.source_reliability.items():
+    for src, rel in SOURCE_RELIABILITY.items():
         expr = F.when(col == src, F.lit(rel)).otherwise(expr)
     return expr
 
 
-def build_edges(
-    records: DataFrame,
-    matches: DataFrame,
-    cfg: ResolutionConfig = DEFAULT_CONFIG,
-) -> DataFrame:
+def build_edges(records: DataFrame, matches: DataFrame) -> DataFrame:
     """G1–G3: decorate confirmed matches (id_1, id_2, overall_score) with
     edge type (builder.py:71-92), source pair, and reliability-adjusted
     weight (builder.py:95-137): w = score * avg(rel) * 1.1^cross, cap 0.99."""
@@ -55,8 +54,8 @@ def build_edges(
         .when(F.col("overall_score") >= 0.6, "name_moderate")
         .otherwise("weak")
     )
-    rel1 = _reliability_expr(F.col("source_1"), cfg)
-    rel2 = _reliability_expr(F.col("source_2"), cfg)
+    rel1 = _reliability_expr(F.col("source_1"))
+    rel2 = _reliability_expr(F.col("source_2"))
     cross = F.when(F.col("source_1") != F.col("source_2"), 1.1).otherwise(1.0)
     weight = F.least(F.lit(0.99), F.col("overall_score") * ((rel1 + rel2) / 2) * cross)
     return e.select(

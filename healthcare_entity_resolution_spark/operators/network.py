@@ -23,6 +23,10 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from ..config import DEFAULT_CONFIG, ResolutionConfig
 from ..plans.lineage import NULL_LINEAGE, LineageLog
 
+# PageRank damping factor and per-node L1 convergence tolerance (networkx's
+# defaults, influence.py:14-50)
+PAGERANK_ALPHA = 0.85
+PAGERANK_TOL = 1.0e-6
 # largest facility whose members are paired as colleagues
 MAX_FACILITY_SIZE = 100
 
@@ -84,7 +88,7 @@ def pagerank(
     iterations in ~2.2 s.  The result is a local relation
     ``(id <type of src>, pagerank double)`` with no upstream lineage.
     """
-    alpha, tol = cfg.pagerank_alpha, cfg.pagerank_tol
+    alpha, tol = PAGERANK_ALPHA, PAGERANK_TOL
     spark = edges.sparkSession
     schema = StructType([
         StructField("id", edges.schema["src"].dataType),
@@ -204,11 +208,3 @@ def ego_network(
         )
     return out
 
-
-def top_influencers(ranks: DataFrame, metrics: DataFrame, n: int = 10) -> DataFrame:
-    """A17 flavor (influence.py:53-59): top-N by pagerank, deterministic."""
-    return (
-        ranks.join(metrics, "id", "left")
-        .orderBy(F.col("pagerank").desc(), F.col("id"))
-        .limit(n)
-    )

@@ -94,7 +94,6 @@ def _localized_recluster(
     cur: DataFrame,
     assign: DataFrame,
     touched: DataFrame,
-    cfg: ResolutionConfig,
     lineage: LineageLog,
 ) -> DataFrame:
     """Re-run connected components ONLY over the components in ``touched``
@@ -111,9 +110,7 @@ def _localized_recluster(
     sub_edges = cur.join(
         sub_nodes.withColumnRenamed("id", "id_1"), "id_1", "left_semi"
     ).select("id_1", "id_2")
-    sub_assign = connected_components(
-        sub_edges, vertices=sub_nodes, cfg=cfg, lineage=lineage
-    )
+    sub_assign = connected_components(sub_edges, vertices=sub_nodes, lineage=lineage)
     # the USING join moves component_id to the front — select explicitly so
     # the union cannot silently swap (id, component_id)
     untouched = assign.join(touched, "component_id", "left_anti").select(
@@ -127,7 +124,6 @@ def _localized_recluster(
 def prune_id_conflicts(
     edges: DataFrame,
     node_ids: DataFrame,
-    cfg: ResolutionConfig = DEFAULT_CONFIG,
     lineage: LineageLog = NULL_LINEAGE,
     max_iterations: int = _ID_CONFLICT_ITERATIONS,
 ) -> DataFrame:
@@ -141,7 +137,7 @@ def prune_id_conflicts(
     # one full CC up front; every later iteration re-clusters ONLY the
     # components an edge was removed from (untouched components keep their
     # assignment — O(affected) not O(corpus) per iteration)
-    assign = connected_components(cur.select("id_1", "id_2"), cfg=cfg, lineage=lineage)
+    assign = connected_components(cur.select("id_1", "id_2"), lineage=lineage)
     removed_total = 0
     for it in range(max_iterations):
         node = assign.join(node_ids, "id", "left")
@@ -185,7 +181,7 @@ def prune_id_conflicts(
         touched = to_remove.select("component_id").distinct()
         lineage.log("prune.recluster", scope="id_conflicts",
                     components_touched=n_removed)
-        assign = _localized_recluster(cur, assign, touched, cfg, lineage)
+        assign = _localized_recluster(cur, assign, touched, lineage)
     lineage.log("prune.id_conflicts", iterations=max_iterations,
                 edges_removed=removed_total, max_iterations_hit=True)
     return cur
@@ -207,7 +203,7 @@ def prune_oversized_clusters(
     cur = edges.select(*_EDGE_COLS)
     # full CC once; afterwards only the components that lost an edge are
     # re-clustered (see _localized_recluster)
-    assign = connected_components(cur.select("id_1", "id_2"), cfg=cfg, lineage=lineage)
+    assign = connected_components(cur.select("id_1", "id_2"), lineage=lineage)
     removed_total = 0
     for it in range(_OVERSIZED_ITERATIONS):
         oversized = (
@@ -234,7 +230,7 @@ def prune_oversized_clusters(
         touched = to_remove.select("component_id").distinct()
         lineage.log("prune.recluster", scope="oversized",
                     components_touched=n_removed)
-        assign = _localized_recluster(cur, assign, touched, cfg, lineage)
+        assign = _localized_recluster(cur, assign, touched, lineage)
     lineage.log("prune.oversized", iterations=_OVERSIZED_ITERATIONS,
                 edges_removed=removed_total, max_iterations_hit=True)
     return (cur, assign) if return_assignments else cur
@@ -256,7 +252,7 @@ def prune_weak_bridges(
     ``(id_1, id_2, weight)`` rows.
     """
     e = edges.select(*_EDGE_COLS)
-    assign = connected_components(e.select("id_1", "id_2"), cfg=cfg, lineage=lineage)
+    assign = connected_components(e.select("id_1", "id_2"), lineage=lineage)
     lineage.log("prune.weak_bridges", reused_assignments=False)
     return _prune_components(_by_component(e, assign),
                              _component_kernel(cfg.min_edge_weight)).select(*_EDGE_COLS)
@@ -379,7 +375,7 @@ def full_pruning(
     e = _checkpoint(prune_low_confidence_edges(
         edges.observe(n_in, F.count(F.lit(1)).alias("n")), cfg.min_edge_weight * 0.75,
     ).select(*_EDGE_COLS))
-    assign = connected_components(e.select("id_1", "id_2"), cfg=cfg, lineage=lineage)
+    assign = connected_components(e.select("id_1", "id_2"), lineage=lineage)
     sizes = assign.groupBy("component_id").agg(F.count("*").alias("_n"))
     aid = node_ids.select("id", "auth_id")
     bounded = F.coalesce("_n", F.lit(0)) <= cfg.max_cluster_size
@@ -391,14 +387,13 @@ def full_pruning(
         .observe(n_large, F.count(F.when(~bounded, 1)).alias("n"))
     )
     out = _prune_components(tagged.where(bounded), _component_kernel(
-        cfg.min_edge_weight, _ID_CONFLICT_ITERATIONS if cfg.prune_id_conflicts else 0))
+        cfg.min_edge_weight, _ID_CONFLICT_ITERATIONS))
     lineage.log("prune.weak_bridges", reused_assignments=True)
 
     has_large = n_large.get["n"] > 0
     if has_large:
-        big = tagged.where(~bounded).select(*_EDGE_COLS)
-        if cfg.prune_id_conflicts:
-            big = prune_id_conflicts(big, node_ids, cfg, lineage, _ID_CONFLICT_ITERATIONS)
+        big = prune_id_conflicts(tagged.where(~bounded).select(*_EDGE_COLS),
+                                 node_ids, lineage, _ID_CONFLICT_ITERATIONS)
         big, big_assign = prune_oversized_clusters(big, cfg, lineage, return_assignments=True)
         out = out.unionByName(_prune_components(
             _by_component(big, big_assign), _component_kernel(cfg.min_edge_weight)))

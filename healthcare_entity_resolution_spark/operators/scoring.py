@@ -20,7 +20,6 @@ npi_match / specialty_match may be NULL = "cannot compare", distinct from
 
 from __future__ import annotations
 
-import functools
 import time
 from collections.abc import Iterable, Iterator
 
@@ -29,10 +28,18 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, ResolutionConfig
 from ..functions import strsim
 from ..functions import text as textfn
 from ..functions.geo import haversine_miles, location_tier_score
+
+# overall-score weights (reference similarity.py:275-291) and the score an
+# authoritative id match (NPI, content sha) trumps every other signal with
+WEIGHT_NAME = 0.50
+WEIGHT_LOCATION = 0.30
+WEIGHT_SPECIALTY = 0.20
+AUTHORITATIVE_MATCH_SCORE = 0.95
+# char-shingle width of the code-pair TF cosine
+SHINGLE_SIZE = 3
 
 # ---------------------------------------------------------------------------
 # Code-file domain (north_star): JW(path), JW(repo), token Jaccard, TF cosine
@@ -51,9 +58,7 @@ def _decorate_pairs(files: DataFrame, pairs: DataFrame, cols: list[str]) -> Data
     return pairs.join(a, "id_1").join(b, "id_2")
 
 
-def code_pair_scores(
-    batches: Iterable[pd.DataFrame], cfg: ResolutionConfig = DEFAULT_CONFIG
-) -> Iterator[pd.DataFrame]:
+def code_pair_scores(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """The code-pair string kernels, one output frame (``CODE_SCORE_SCHEMA``)
     per input batch of decorated pairs (id_1, id_2 and both sides'
     path_norm, repo, content, content_sha).  The body of
@@ -62,7 +67,6 @@ def code_pair_scores(
 
     NULL content cannot be compared: a pair with a NULL side gets NULL
     ``jaccard`` and ``cosine`` and never ``sha_equal``."""
-    shingle_k = cfg.shingle_size
     # Per-file features memoized by content_sha (16-hex-char prefix key:
     # far cheaper to hash per lookup than a multi-hundred-char content
     # string, and two near-identical contents never share a sha).
@@ -74,7 +78,7 @@ def code_pair_scores(
         v = feat_cache.get(key)
         if v is None:
             tok = np.sort(textfn.token_hashes(content))
-            ids, counts = textfn.shingle_tf(content, k=shingle_k)
+            ids, counts = textfn.shingle_tf(content, k=SHINGLE_SIZE)
             norm = float(np.sqrt((counts.astype(np.float64) ** 2).sum())) or 1.0
             v = (tok, ids, counts, norm)
             feat_cache[key] = v
@@ -122,7 +126,7 @@ def code_pair_scores(
         )
 
 
-def code_score_columns(scored: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG) -> DataFrame:
+def code_score_columns(scored: DataFrame) -> DataFrame:
     """Kernel scores (``CODE_SCORE_SCHEMA``) -> + content_tier, sha_match,
     overall_score: the classification-ready columns, as JVM expressions.
 
@@ -147,11 +151,11 @@ def code_score_columns(scored: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG
     # specialty analog = path-JW / content-tier / token-Jaccard.  ``least``
     # skips NULLs, so a NULL combination is kept NULL explicitly.
     path_sim = F.col("jw_path") * 0.8 + F.col("jw_repo") * 0.2
-    combined = (path_sim * cfg.weight_name
-                + F.col("content_tier") * cfg.weight_location
-                + F.col("jaccard") * cfg.weight_specialty)
+    combined = (path_sim * WEIGHT_NAME
+                + F.col("content_tier") * WEIGHT_LOCATION
+                + F.col("jaccard") * WEIGHT_SPECIALTY)
     overall = (
-        F.when(F.col("sha_equal"), F.lit(cfg.authoritative_match_score))
+        F.when(F.col("sha_equal"), F.lit(AUTHORITATIVE_MATCH_SCORE))
         .when(combined.isNotNull(), F.least(F.lit(1.0), combined))
     )
     return (
@@ -161,9 +165,7 @@ def code_score_columns(scored: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG
     )
 
 
-def score_code_pairs(
-    files: DataFrame, pairs: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG
-) -> DataFrame:
+def score_code_pairs(files: DataFrame, pairs: DataFrame) -> DataFrame:
     """Kernel scores for code-file pairs + classification-ready columns.
 
     Output: id_1, id_2, sha_equal, jw_path, jw_repo, jaccard, cosine,
@@ -173,10 +175,8 @@ def score_code_pairs(
     decorated = _decorate_pairs(
         files, pairs, ["path_norm", "repo", "content", "content_sha"]
     )
-    scored = decorated.mapInPandas(
-        functools.partial(code_pair_scores, cfg=cfg), schema=CODE_SCORE_SCHEMA
-    )
-    return code_score_columns(scored, cfg)
+    return code_score_columns(
+        decorated.mapInPandas(code_pair_scores, schema=CODE_SCORE_SCHEMA))
 
 
 # ---------------------------------------------------------------------------
@@ -232,9 +232,7 @@ def _specialty_fuzzy(s1: str | None, s2: str | None) -> float | None:
     return r if r > 0.8 else 0.0
 
 
-def score_physician_pairs(
-    records: DataFrame, pairs: DataFrame, cfg: ResolutionConfig = DEFAULT_CONFIG
-) -> DataFrame:
+def score_physician_pairs(records: DataFrame, pairs: DataFrame) -> DataFrame:
     """F1–F9 over candidate pairs of normalized physician records.
 
     Output columns: id_1, id_2, npi_match, name_similarity, specialty_match,
@@ -336,14 +334,14 @@ def score_physician_pairs(
     )
     # F8 — overall combine with NULL-specialty weight redistribution
     base = (
-        F.col("name_similarity") * cfg.weight_name
-        + F.col("location_score") * cfg.weight_location
+        F.col("name_similarity") * WEIGHT_NAME
+        + F.col("location_score") * WEIGHT_LOCATION
         + F.when(F.col("specialty_match").isNotNull(),
-                 F.col("specialty_match") * cfg.weight_specialty)
-         .otherwise(F.col("name_similarity") * cfg.weight_specialty)
+                 F.col("specialty_match") * WEIGHT_SPECIALTY)
+         .otherwise(F.col("name_similarity") * WEIGHT_SPECIALTY)
     )
     overall = (
-        F.when(F.col("npi_match") == 1.0, F.lit(cfg.authoritative_match_score))
+        F.when(F.col("npi_match") == 1.0, F.lit(AUTHORITATIVE_MATCH_SCORE))
         .when(F.col("npi_match") == 0.0, F.lit(0.0))
         .otherwise(F.least(F.lit(1.0), base))
     )

@@ -39,18 +39,16 @@ from .plans.snapshots import SnapshotStore
 CODE_FILE_STAGES = ("files", "pairs", "classified", "assignments")
 
 
-def classify_code_scores(scored: DataFrame,
-                         cfg: ResolutionConfig = DEFAULT_CONFIG) -> DataFrame:
+def classify_code_scores(scored: DataFrame) -> DataFrame:
     """Classify scored code-file pairs (``scoring.code_score_columns``):
     identical content (the ``sha_match`` trump, the NPI analog) is a match
     at 0.95."""
-    return C.classify(scored, cfg, authoritative_col="sha_match")
+    return C.classify(scored, authoritative_col="sha_match")
 
 
-def classify_code_pairs(files: DataFrame, pairs: DataFrame,
-                        cfg: ResolutionConfig = DEFAULT_CONFIG) -> DataFrame:
+def classify_code_pairs(files: DataFrame, pairs: DataFrame) -> DataFrame:
     """Score and classify code-file pairs."""
-    return classify_code_scores(S.score_code_pairs(files, pairs, cfg), cfg)
+    return classify_code_scores(S.score_code_pairs(files, pairs))
 
 
 def _in_memory(name: str, build) -> tuple[DataFrame, int]:
@@ -96,7 +94,7 @@ def _resolve_code_files(raw_files: DataFrame, cfg: ResolutionConfig,
 
     t3 = time.perf_counter()
     classified, n_scored = materialize(
-        "classified", lambda: classify_code_pairs(rep_files, pairs, cfg))
+        "classified", lambda: classify_code_pairs(rep_files, pairs))
     score_sec = time.perf_counter() - t3
     lineage.log("scoring", pairs=n_scored, sec=score_sec,
                 pairs_per_sec=(n_scored / score_sec if score_sec > 0 else None))
@@ -108,13 +106,12 @@ def _resolve_code_files(raw_files: DataFrame, cfg: ResolutionConfig,
         "score_batches",
     )
 
-    matches = C.confirmed_matches(classified, cfg)
+    matches = C.confirmed_matches(classified)
 
     def build_assignments():
         rep_assign = G.connected_components(
             matches,
             vertices=rep_files.select(F.col("file_id").alias("id")),
-            cfg=cfg,
             lineage=lineage,
         )
         # fan the representative decision back out: every file joins its
@@ -220,22 +217,22 @@ def resolve_physicians(
     records = records.persist()
     n_rec = records.count()
 
-    keys = B.physician_block_keys(records, cfg)
+    keys = B.physician_block_keys(records)
     pairs = B.candidate_pairs(keys, cfg, lineage)
-    scored = S.score_physician_pairs(records, pairs, cfg)
-    classified = C.classify(scored, cfg).persist()
+    scored = S.score_physician_pairs(records, pairs)
+    classified = C.classify(scored).persist()
     classified = C.determine_match_type(classified)
-    matches = C.confirmed_matches(classified, cfg)
+    matches = C.confirmed_matches(classified)
     lineage.log("phys.matching", records=n_rec, pairs=classified.count(),
                 sec=time.perf_counter() - t0)
 
-    edges = GR.build_edges(records, matches, cfg)
+    edges = GR.build_edges(records, matches)
     node_ids = records.select(F.col("source_id").alias("id"),
                               F.col("npi").alias("auth_id"))
     pruned, assignments = P.full_pruning(edges, node_ids, cfg, lineage)
     assignments = assignments.persist()
 
-    entities = K.canonical_entities(records, assignments, cfg)
+    entities = K.canonical_entities(records, assignments)
     mapping = K.source_canonical_mapping(entities)
     e_conf = K.entity_confidence(records, pruned, assignments)
     r_conf = K.record_confidence(pruned, assignments)

@@ -272,8 +272,7 @@ def _committed(spark: SparkSession, files: DataFrame, assign: DataFrame,
             .rename_columns(["id", "component_id"]))
 
 
-def _classify(spark: SparkSession, cand: pa.Table, files: pa.Table,
-              cfg: ResolutionConfig) -> DataFrame:
+def _classify(spark: SparkSession, cand: pa.Table, files: pa.Table) -> DataFrame:
     """Score and classify ``cand`` in the driver.  The kernels are scoring's
     own (``code_pair_scores``); the score tail and ``classify`` are the
     batch path's Spark expressions, here over a local relation of the
@@ -291,21 +290,20 @@ def _classify(spark: SparkSession, cand: pa.Table, files: pa.Table,
         take = p.filter(found).to_numpy()
         for c in SCORE_COLS:
             decorated[f"{c}_{side}"] = table[c].to_numpy()[take]
-    kernels = pd.concat(S.code_pair_scores([decorated], cfg))
+    kernels = pd.concat(S.code_pair_scores([decorated]))
     scored = _local(spark, pa.Table.from_pandas(kernels, preserve_index=False),
                     S.CODE_SCORE_SCHEMA)
-    return classify_code_scores(S.code_score_columns(scored, cfg), cfg)
+    return classify_code_scores(S.code_score_columns(scored))
 
 
-def _matches(spark: SparkSession, cand: pa.Table, files: pa.Table,
-             cfg: ResolutionConfig) -> pa.Table:
+def _matches(spark: SparkSession, cand: pa.Table, files: pa.Table) -> pa.Table:
     """The match edges among ``cand``, as Arrow ``(id_1, id_2)``, scored
     ``SCORE_CHUNK`` pairs at a time so the driver holds one chunk's
     decorated pairs and kernel scores, however many candidates there are."""
     ids = []
     for start in range(0, cand.num_rows, SCORE_CHUNK):
-        chunk = _classify(spark, cand.slice(start, SCORE_CHUNK), files, cfg)
-        ids += C.confirmed_matches(chunk, cfg).select("id_1", "id_2").collect()
+        chunk = _classify(spark, cand.slice(start, SCORE_CHUNK), files)
+        ids += C.confirmed_matches(chunk).select("id_1", "id_2").collect()
     return pa.table({"id_1": pa.array([r[0] for r in ids], pa.string()),
                      "id_2": pa.array([r[1] for r in ids], pa.string())})
 
@@ -428,7 +426,7 @@ def micro_batch_resolve(
 
     files = pa.concat_tables([rows.select(["file_id", *SCORE_COLS]), found],
                              promote_options="default")
-    edges = _matches(spark, cand, files, cfg)
+    edges = _matches(spark, cand, files)
     n_pairs = edges.num_rows
 
     # new-vs-all pairing with a genuinely-new side means a new match edge

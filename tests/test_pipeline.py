@@ -45,6 +45,20 @@ def test_cluster_f1_gate(resolved):
     assert res["f1"] >= 0.99, res
 
 
+def test_cluster_f1_all_singletons(spark):
+    """No predicted pairs: precision 1.0, recall 0.0, F1 0.0, with no
+    division by zero; no pairs on either side: all 1.0."""
+    pred = spark.createDataFrame([(f"f{i}", f"f{i}") for i in range(4)],
+                                 "id string, component_id string")
+    truth = spark.createDataFrame([("f0", "a"), ("f1", "a"), ("f2", "b"), ("f3", "c")],
+                                  "id string, true_entity_id string")
+    res = pairwise_cluster_f1(pred, truth)
+    assert (res["predicted_pairs"], res["true_pairs"], res["true_positives"]) == (0, 1, 0)
+    assert (res["precision"], res["recall"], res["f1"]) == (1.0, 0.0, 0.0)
+    res = pairwise_cluster_f1(pred, pred.withColumnRenamed("component_id", "true_entity_id"))
+    assert (res["precision"], res["recall"], res["f1"]) == (1.0, 1.0, 1.0)
+
+
 def test_content_sha_invariant(spark, corpus):
     files, _, reference = corpus
     assert verify_content_sha(files, reference) == 0

@@ -272,7 +272,7 @@ def test_full_pruning_equals_distributed_composition(spark, monkeypatch, seed, r
     cfg = ResolutionConfig(max_cluster_size=5)
 
     ref = P.prune_low_confidence_edges(e, cfg.min_edge_weight * 0.75)
-    ref = P.prune_id_conflicts(ref, ids, cfg, max_iterations=rounds)
+    ref = P.prune_id_conflicts(ref, ids, max_iterations=rounds)
     ref = P.prune_oversized_clusters(ref, cfg)
     ref = P.prune_weak_bridges(ref, cfg)
     expected = sorted(tuple(r) for r in ref.collect())

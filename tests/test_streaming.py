@@ -496,10 +496,9 @@ def test_driver_scores_equal_distributed_scores(spark):
     cols = ["id_1", "id_2", "sha_equal", "jw_path", "jw_repo", "jaccard",
             "cosine", "content_tier", "sha_match", "overall_score",
             "decision", "confidence"]
-    dist = classify_code_pairs(files, pairs, DEFAULT_CONFIG)
+    dist = classify_code_pairs(files, pairs)
     local = INC._classify(spark, pairs.toArrow(),
-                          files.select("file_id", *INC.SCORE_COLS).toArrow(),
-                          DEFAULT_CONFIG)
+                          files.select("file_id", *INC.SCORE_COLS).toArrow())
     want = sorted(map(tuple, dist.select(cols).collect()))
     got = sorted(map(tuple, local.select(cols).collect()))
     assert len(got) == pairs.count() > 0
@@ -507,7 +506,7 @@ def test_driver_scores_equal_distributed_scores(spark):
     assert len({d for *_, d, _ in got}) > 1  # more than one decision
 
     def matches(df):
-        return sorted(map(tuple, C.confirmed_matches(df, DEFAULT_CONFIG)
+        return sorted(map(tuple, C.confirmed_matches(df)
                           .select("id_1", "id_2").collect()))
 
     assert matches(local) == matches(dist)
@@ -550,7 +549,7 @@ def test_null_content_files_cannot_be_compared(spark, tmp_path):
 
     files = batch["files"]
     pairs = B.candidate_pairs(B.code_file_block_keys(files, DEFAULT_CONFIG))
-    scored = classify_code_pairs(files, pairs, DEFAULT_CONFIG).where(
+    scored = classify_code_pairs(files, pairs).where(
         F.col("id_1").isin(null_ids) | F.col("id_2").isin(null_ids)).collect()
     assert any(r["id_1"] in null_ids and r["id_2"] in null_ids for r in scored)
     for r in scored:

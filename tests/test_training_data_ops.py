@@ -3,6 +3,7 @@ multimodal plumbing (SURVEY.md training-data extension)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -175,14 +176,21 @@ def embeddings(spark, sf_small):
 
 
 def test_ann_exact_vs_arrow(spark, embeddings):
+    """brute_force_topk (JVM) against one numpy matmul over the vectors
+    collected as Arrow."""
     q = embeddings.where(F.col("vec_id") == 0).first()["embedding"]
     q = [float(x) for x in q]
-    a = ann.brute_force_topk(embeddings.where(F.col("vec_id") != 0), q, k=10)
-    b = ann.cosine_topk_arrow(embeddings.where(F.col("vec_id") != 0), q, k=10)
-    ra, rb = a.collect(), b.collect()
-    assert [r.vec_id for r in ra] == [r.vec_id for r in rb]
-    for x, y in zip(ra, rb):
-        assert x.cosine == pytest.approx(y.cosine, abs=1e-6)
+    rest = embeddings.where(F.col("vec_id") != 0)
+    ra = ann.brute_force_topk(rest, q, k=10).collect()
+    tbl = rest.select("vec_id", "embedding").toArrow()
+    m = np.stack(tbl.column("embedding").to_pylist()).astype(np.float64)
+    qv = np.asarray(q)
+    cos = np.round((m @ qv) / (np.linalg.norm(m, axis=1) * np.linalg.norm(qv)), 6)
+    ids = tbl.column("vec_id").to_numpy()
+    order = np.lexsort((ids, -cos))[:10]
+    assert [r.vec_id for r in ra] == ids[order].tolist()
+    for x, y in zip(ra, cos[order]):
+        assert x.cosine == pytest.approx(y, abs=1e-6)
 
 
 def test_ann_lsh_and_ivf_recall(spark, embeddings):
@@ -191,7 +199,7 @@ def test_ann_lsh_and_ivf_recall(spark, embeddings):
     rest = embeddings.where(F.col("vec_id") != 0)
     exact = [r.vec_id for r in ann.brute_force_topk(rest, q, k=10).collect()]
     lsh = [r.vec_id for r in
-           ann.sign_lsh_topk(rest, q, k=10, n_planes=4, axis_planes=True).collect()]
+           ann.sign_lsh_topk(rest, q, k=10, n_planes=4).collect()]
     ivf = [r.vec_id for r in ann.ivf_topk(rest, q, k=10, n_lists=8, nprobe=4).collect()]
     assert len(set(exact) & set(lsh)) >= 5     # recall@10 >= 0.5 for approx
     assert len(set(exact) & set(ivf)) >= 5
